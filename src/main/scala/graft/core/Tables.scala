@@ -1,6 +1,8 @@
 package graft.core
 
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.FooterSchema
 
 /** Table access over the driver-generated parquet fixtures
   * (see /root/repo/TESTDATA.md, FIXTURES.md).
@@ -20,9 +22,9 @@ object Tables {
     *
     * The resolved DataFrame (schema + file listing, no data) is memoized
     * per (session, dir, name): fixture dirs are immutable, and re-listing
-    * + schema-reading parquet footers on every call is pure per-query
-    * driver overhead — the same catalog-cache role the reference's
-    * IStorage registry plays. */
+    * + reading the parquet footer on every call is pure per-query driver
+    * overhead — the same catalog-cache role the reference's IStorage
+    * registry plays. Resolving a table runs no Spark job (see `parquet`). */
   private val resolved =
     new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, String), DataFrame]
 
@@ -30,8 +32,52 @@ object Tables {
     resolved.computeIfAbsent((spark, dir, name), { _ =>
       guardSchema(name,
         if (name == "events") readEvents(spark, s"$dir/$name.parquet")
-        else spark.read.parquet(s"$dir/$name.parquet"))
+        else parquet(spark, s"$dir/$name.parquet"))
     })
+
+  /** Open a parquet file or directory with its schema already supplied,
+    * as the reference attaches a table from its stored column list
+    * (`IStorage`) without running a query. The schema comes from the
+    * footer of the first data file, read on the driver and converted by
+    * Spark's own code (`FooterSchema`), so it equals what
+    * `spark.read.parquet` infers — whose inference starts a one-task
+    * Spark job per path, ~70–100 ms on 4 cores. Partition columns are
+    * still inferred from the directory names. A path with no data file
+    * is handed to `spark.read.parquet` so Spark reports its own error. */
+  def parquet(spark: SparkSession, path: String): DataFrame =
+    firstDataFile(spark, path).flatMap(FooterSchema.read(spark, _)) match {
+      case Some(schema) => spark.read.schema(schema).parquet(path)
+      case None => spark.read.parquet(path)
+    }
+
+  /** The file schema inference reads (`ParquetUtils.splitFiles`): the
+    * first leaf in full-path order, skipping the names the file index
+    * skips — `_`/`.` prefixes, except `_k=v` partition directories. */
+  private def firstDataFile(spark: SparkSession, path: String): Option[FileStatus] = {
+    val root = new Path(path)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def hidden(s: FileStatus): Boolean = {
+      val n = s.getPath.getName
+      (n.startsWith("_") && !n.contains("=")) || n.startsWith(".")
+    }
+    def leaves(s: FileStatus): Iterator[FileStatus] =
+      if (s.isDirectory) fs.listStatus(s.getPath).iterator.filterNot(hidden).flatMap(leaves)
+      else Iterator(s)
+    if (!fs.exists(root)) None
+    else leaves(fs.getFileStatus(root)).minByOption(_.getPath.toString)
+  }
+
+  /** A directory owned by `spark` for files its queries write (indexes,
+    * summaries, format round-trips): created on first use under the
+    * SparkContext's driver temp directory (`spark.local.dir`, else
+    * `java.io.tmpdir`), which Spark deletes when the context stops.
+    * Concurrent sessions and runs never share one. */
+  private val scratch = java.util.Collections.synchronizedMap(
+    new java.util.WeakHashMap[SparkSession, String])
+
+  def scratchDir(spark: SparkSession): String =
+    scratch.computeIfAbsent(spark, _ => java.nio.file.Files.createTempDirectory(
+      java.nio.file.Paths.get(org.apache.spark.SparkFiles.getRootDirectory()), "scratch-").toString)
 
   /** Expected fixture dtypes (TESTDATA.md / FIXTURES.md), checked once at
     * first load of each table. A regenerated fixture whose schema drifted
@@ -101,27 +147,33 @@ object Tables {
     * timestamp[us] (loaded as TIMESTAMP or TIMESTAMP_NTZ). Branch on the
     * loaded schema so every generation resolves to the same UTC
     * TimestampType column, and DuckDB oracle comparisons agree. */
-  private def readEvents(spark: SparkSession, path: String): DataFrame = {
-    import org.apache.spark.sql.functions.{col, expr}
-    import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
-    val plain =
-      try Some(spark.read.parquet(path))
-      catch { case _: Exception => None } // TIMESTAMP(NANOS) rejected at schema conversion
-    plain.map(_.schema("ts").dataType) match {
-      case Some(TimestampType)    => plain.get
-      case Some(TimestampNTZType) =>
-        // session timeZone is UTC, so NTZ wall-clock == UTC instant
-        plain.get.withColumn("ts", col("ts").cast(TimestampType))
-      case Some(LongType) =>
-        plain.get.withColumn("ts", expr("timestamp_micros(ts div 1000)"))
-      case _ =>
-        // ns fixture: decode as raw long, truncate ns→µs with exact integer
-        // arithmetic (matches DuckDB's ns→µs truncation). The conf must stay
-        // set for the session — parquet footers are re-read lazily at
-        // execution time, which is also why it can't be a per-read option.
+  private def readEvents(spark: SparkSession, path: String): DataFrame =
+    normalizeEventsTs(openEvents(spark, path))
+
+  /** The events file as stored (`ts` not yet normalized). */
+  private[graft] def openEvents(spark: SparkSession, path: String): DataFrame =
+    try parquet(spark, path)
+    catch {
+      case _: Exception =>
+        // ns fixture: TIMESTAMP(NANOS) is rejected at schema conversion;
+        // decode it as a raw long. The conf must stay set for the session —
+        // parquet footers are re-read lazily at execution time, which is
+        // also why it can't be a per-read option.
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        spark.read.parquet(path)
-          .withColumn("ts", expr("timestamp_micros(ts div 1000)"))
+        parquet(spark, path)
+    }
+
+  /** `ts` as a UTC TimestampType column, whatever `openEvents` loaded. */
+  private[graft] def normalizeEventsTs(events: DataFrame): DataFrame = {
+    import org.apache.spark.sql.functions.{col, expr}
+    import org.apache.spark.sql.types.{TimestampNTZType, TimestampType}
+    events.schema("ts").dataType match {
+      case TimestampType    => events
+      // session timeZone is UTC, so NTZ wall-clock == UTC instant
+      case TimestampNTZType => events.withColumn("ts", col("ts").cast(TimestampType))
+      // raw ns long: truncate ns→µs with exact integer arithmetic
+      // (matches DuckDB's ns→µs truncation)
+      case _ => events.withColumn("ts", expr("timestamp_micros(ts div 1000)"))
     }
   }
 

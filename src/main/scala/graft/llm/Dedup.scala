@@ -1,5 +1,6 @@
 package graft.llm
 
+import graft.core.Tables
 import graft.functions.TextHashes
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
@@ -263,7 +264,7 @@ object Dedup {
     // append-mode layouts don't mix (ownFiltered and the idempotent
     // overwrite both key on the batch partition column)
     if (histExists) {
-      val partitioned = spark.read.parquet(bandsPath).columns.contains("batch")
+      val partitioned = Tables.parquet(spark, bandsPath).columns.contains("batch")
       require(partitioned == (batchId >= 0),
         s"incrementalLshDedup: state at $statePath is " +
           (if (partitioned) "batchId-partitioned" else "append-mode") +
@@ -279,7 +280,7 @@ object Dedup {
     val crossCand =
       if (!histExists) spark.emptyDataFrame.select(lit(0L).as("a"), lit(0L).as("b")).limit(0)
       else newBands.join(
-          ownFiltered(spark.read.parquet(bandsPath)).select(
+          ownFiltered(Tables.parquet(spark, bandsPath)).select(
             col("id").as("hist_id"), col("band"), col("bh")),
           Seq("band", "bh"))
         .select(col("hist_id").as("a"), col("id").as("b")).distinct()
@@ -293,7 +294,7 @@ object Dedup {
 
     val histText =
       if (!histExists) newDocs
-      else ownFiltered(spark.read.parquet(docsPath))
+      else ownFiltered(Tables.parquet(spark, docsPath))
         .select(col("id"), col("t")).unionByName(newDocs)
     val verified = cand
       .join(histText.select(col("id").as("a"), col("t").as("ta")), "a")

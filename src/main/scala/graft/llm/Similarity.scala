@@ -149,7 +149,7 @@ object Similarity {
                      probeRadius: Int = 0): DataFrame = {
     import org.apache.spark.sql.functions.{array => arr}
     val qv = arr(queryVec.map(lit): _*)
-    val corpus = spark.read.parquet(path)
+    val corpus = graft.core.Tables.parquet(spark, path)
     // the query's bucket: one deterministic scalar, evaluated on a 1-row
     // frame (never touches the corpus); probes ship as a literal IN-list
     // so PartitionFilters prune to 1 + sum C(nPlanes,i) directories

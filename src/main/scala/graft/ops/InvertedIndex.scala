@@ -37,7 +37,7 @@ object InvertedIndex {
 
   /** Doc ids whose text contains `token` — pure index scan. */
   def lookup(spark: SparkSession, path: String, token: String): DataFrame =
-    spark.read.parquet(path)
+    graft.core.Tables.parquet(spark, path)
       .filter(col("token") === lower(lit(token)))
       .select(col("doc_id"))
 

@@ -54,7 +54,7 @@ object Layout {
     * swaps the directory — same copy-on-write discipline as Mutations. */
   def compact(spark: SparkSession, dir: String, sortKeys: Seq[String],
               targetRows: Long): Unit = {
-    val df = spark.read.parquet(dir)
+    val df = graft.core.Tables.parquet(spark, dir)
     val n = df.count()
     val files = math.max(1, math.ceil(n.toDouble / targetRows).toInt)
     val tmp = dir + "__compact_tmp"

@@ -75,36 +75,44 @@ object ProjectionRouting {
       if (groupAttrs.length != agg.groupingExpressions.length) return None
       if (!groupAttrs.map(_.name).toSet.subsetOf(proj.dims)) return None
 
-      val summary = SparkSession.active.read.parquet(proj.summaryPath)
-        .queryExecution.analyzed
-      val byName = summary.output.map(a => a.name -> a).toMap
-
-      def remapAgg(ae: AggregateExpression): Option[AggregateExpression] =
-        ae.aggregateFunction match {
-          case _ if ae.isDistinct || ae.filter.isDefined => None
-          case Sum(a: AttributeReference, mode) if proj.measures(a.name) =>
-            byName.get(s"sum_${a.name}").map(s => ae.copy(aggregateFunction = Sum(s, mode)))
-          case Min(a: AttributeReference) if proj.measures(a.name) =>
-            byName.get(s"min_${a.name}").map(m => ae.copy(aggregateFunction = Min(m)))
-          case Max(a: AttributeReference) if proj.measures(a.name) =>
-            byName.get(s"max_${a.name}").map(m => ae.copy(aggregateFunction = Max(m)))
-          case Count(children) if children.forall(_.foldable) =>
-            byName.get("cnt").map(c => ae.copy(aggregateFunction = Sum(c)))
-          case _ => None
-        }
-
-      val newAggs = agg.aggregateExpressions.map {
-        case a: AttributeReference if byName.contains(a.name) =>
-          Some(Alias(byName(a.name), a.name)(exprId = a.exprId))
-        case al @ Alias(ae: AggregateExpression, name) =>
-          remapAgg(ae).map(n => Alias(n, name)(exprId = al.exprId))
-        case al @ Alias(a: AttributeReference, name) if byName.contains(a.name) =>
-          Some(Alias(byName(a.name), name)(exprId = al.exprId))
+      // The summary column each output reads, decided from names alone, so
+      // an aggregate that cannot be remapped never opens the summary.
+      def source(e: NamedExpression): Option[String] = e match {
+        case a: AttributeReference => Some(a.name).filter(proj.dims)
+        case Alias(a: AttributeReference, _) => Some(a.name).filter(proj.dims)
+        case Alias(ae: AggregateExpression, _) if !ae.isDistinct && ae.filter.isEmpty =>
+          ae.aggregateFunction match {
+            case Sum(a: AttributeReference, _) if proj.measures(a.name) => Some(s"sum_${a.name}")
+            case Min(a: AttributeReference) if proj.measures(a.name) => Some(s"min_${a.name}")
+            case Max(a: AttributeReference) if proj.measures(a.name) => Some(s"max_${a.name}")
+            case Count(children) if children.forall(_.foldable) => Some("cnt")
+            case _ => None
+          }
         case _ => None
       }
-      if (newAggs.exists(_.isEmpty)) return None
+      val sources = agg.aggregateExpressions.map(source)
+      if (sources.exists(_.isEmpty)) return None
+      // a summary in a stopped session's scratch directory is gone
+      if (!new java.io.File(proj.summaryPath).exists()) return None
+
+      val summary = graft.core.Tables.parquet(SparkSession.active, proj.summaryPath)
+        .queryExecution.analyzed
+      val byName = summary.output.map(a => a.name -> a).toMap
+      if (!(sources.flatten ++ groupAttrs.map(_.name)).forall(byName.contains)) return None
+
+      val newAggs = agg.aggregateExpressions.zip(sources.flatten.map(byName)).map {
+        case (al @ Alias(ae: AggregateExpression, name), s) =>
+          val f = ae.aggregateFunction match {
+            case Sum(_, mode) => Sum(s, mode)
+            case _: Min => Min(s)
+            case _: Max => Max(s)
+            case _ => Sum(s) // count → sum of the partial counts
+          }
+          Alias(ae.copy(aggregateFunction = f), name)(exprId = al.exprId)
+        case (e, s) => Alias(s, e.name)(exprId = e.exprId)
+      }
       val newGroupings = groupAttrs.map(a => byName(a.name))
-      Some(Aggregate(newGroupings, newAggs.map(_.get), summary, None))
+      Some(Aggregate(newGroupings, newAggs, summary, None))
     }
   }
 }

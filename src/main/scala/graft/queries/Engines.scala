@@ -56,7 +56,7 @@ object Engines {
     "q_format_roundtrip" -> { (s, dir) =>
       val o = T(s, dir)("orders").filter(col("o_orderkey") < 2000)
         .select(col("o_orderkey"), col("o_custkey"), col("o_orderstatus"), col("o_totalprice"))
-      val base = s"/tmp/graft_formats/${new java.io.File(dir).getName}"
+      val base = s"${graft.core.Tables.scratchDir(s)}/formats/${new java.io.File(dir).getName}"
       o.write.mode("overwrite").option("header", "true").csv(s"$base/csv")
       o.write.mode("overwrite").json(s"$base/json")
       val fromCsv = s.read.option("header", "true").schema(o.schema).csv(s"$base/csv")

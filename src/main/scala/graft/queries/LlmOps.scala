@@ -109,7 +109,7 @@ object LlmOps {
     // which is exactly what the DuckDB oracle computes.
     "q_has_token_index" -> { (s, dir) =>
       val d = T(s, dir)("documents")
-      val path = s"/tmp/graft_invidx/${new java.io.File(dir).getName}_documents"
+      val path = s"${graft.core.Tables.scratchDir(s)}/invidx/${new java.io.File(dir).getName}_documents"
       graft.ops.InvertedIndex.build(d, "doc_id", "text", path)
       ordered(graft.ops.InvertedIndex.hasTokenViaIndex(d, "doc_id", s, path, "data")
         .select(col("doc_id"), col("source")))

@@ -90,7 +90,7 @@ object Misc4 {
     // in PlanSpec.
     "q_projection_route" -> { (s, dir) =>
       val fact = T(s, dir)("lineitem")
-      val summaryPath = s"/tmp/graft_projections/${new java.io.File(dir).getName}_li_rf_ls"
+      val summaryPath = s"${graft.core.Tables.scratchDir(s)}/projections/${new java.io.File(dir).getName}_li_rf_ls"
       graft.plans.ProjectionRouting.ensureSummary(
         s, s"$dir/lineitem.parquet", fact,
         Seq("l_returnflag", "l_linestatus"), Seq("l_quantity"), summaryPath)

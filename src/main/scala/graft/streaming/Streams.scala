@@ -16,28 +16,15 @@ import org.apache.spark.sql.Row
   */
 object Streams {
 
-  /** Streaming read of the events fixture: same schema-adaptive ts
-    * normalization as the batch path (Tables.readEvents), driven through
-    * readStream (file source = the S3Queue/FileLog analog). */
-  def eventsStream(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.types.{TimestampNTZType, TimestampType}
-    val schema =
-      try spark.read.parquet(s"$dir/events.parquet").schema
-      catch {
-        case _: Exception => // TIMESTAMP(NANOS) fixture: readable only as raw long
-          spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-          spark.read.parquet(s"$dir/events.parquet").schema
-      }
-    val raw = spark.readStream.schema(schema)
+  /** Streaming read of the events fixture: the batch path's schema and
+    * ts normalization (Tables.openEvents / normalizeEventsTs), driven
+    * through readStream (file source = the S3Queue/FileLog analog). */
+  def eventsStream(spark: SparkSession, dir: String): DataFrame =
+    Tables.normalizeEventsTs(spark.readStream
+      .schema(Tables.openEvents(spark, s"$dir/events.parquet").schema)
       // file source needs a directory; select just the events file
       .option("pathGlobFilter", "events.parquet")
-      .parquet(dir)
-    schema("ts").dataType match {
-      case TimestampType    => raw
-      case TimestampNTZType => raw.withColumn("ts", col("ts").cast(TimestampType))
-      case _                => raw.withColumn("ts", expr("timestamp_micros(ts div 1000)"))
-    }
-  }
+      .parquet(dir))
 
   /** Tumbling-window aggregate with watermark (WindowView tumble +
     * bounded watermark; append mode emits only finalized windows). */
@@ -156,7 +143,7 @@ object Streams {
   /** Merge the MV's per-batch partial aggregates: keys = all columns but
     * the last measure column, which is summed. */
   def readMv(spark: SparkSession, path: String): DataFrame = {
-    val df = spark.read.parquet(path).drop("__batch_id")
+    val df = Tables.parquet(spark, path).drop("__batch_id")
     val keys = df.columns.dropRight(1)
     df.groupBy(keys.map(col): _*)
       .agg(sum(col(df.columns.last)).as(df.columns.last))

@@ -338,4 +338,74 @@ class DataSourcesSpec extends AnyFunSuite {
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(path))
     }
   }
+
+  /** Spark jobs this thread starts while `body` runs. Listener events are
+    * delivered in order, so a marker job started afterwards flushes them. */
+  private def jobsDuring(body: => Any): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val key = "graft.spec.phase"
+    val tag = s"open-${System.nanoTime()}"
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty(key))).foreach(seen.add)
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setLocalProperty(key, tag)
+      body
+      sc.setLocalProperty(key, s"$tag-end")
+      sc.parallelize(Seq(1), 1).count()
+      val deadline = System.nanoTime() + 30e9.toLong
+      while (!seen.contains(s"$tag-end") && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(seen.contains(s"$tag-end"), "marker job never reached the listener")
+      seen.toArray.count(_ == tag)
+    } finally {
+      sc.setLocalProperty(key, null)
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  test("opening fixtures, MV reads and a routed aggregate run no Spark job") {
+    import graft.core.Tables
+    // a fresh session has nothing memoized: all 10 tables really resolve
+    val fresh = spark.newSession()
+    assert(jobsDuring(Tables.all.foreach(Tables.t(fresh, sf, _))) == 0)
+
+    val mv = tmp() + "/mv"
+    Seq(0L, 1L).foreach { id =>
+      graft.streaming.Streams.mvWriteBatch(Tables.t(spark, sf, "events"),
+        _.groupBy(col("event_type")).agg(count(lit(1)).as("n")), mv, id)
+    }
+    assert(jobsDuring(graft.streaming.Streams.readMv(spark, mv)) == 0)
+
+    import graft.plans.ProjectionRouting
+    val fact = Tables.t(spark, sf, "lineitem")
+    ProjectionRouting.ensureSummary(spark, s"$sf/lineitem.parquet", fact,
+      Seq("l_returnflag"), Seq("l_quantity"), tmp() + "/summary")
+    try {
+      val routed = fact.groupBy(col("l_returnflag")).agg(sum(col("l_quantity")))
+      assert(jobsDuring(routed.queryExecution.optimizedPlan) == 0)
+      assert(routed.queryExecution.optimizedPlan.toString.contains("sum_l_quantity"))
+    } finally ProjectionRouting.clear()
+  }
+
+  test("footer schema equals the schema spark.read.parquet infers") {
+    val dirs = Seq("sf0.001", "sf0.01", "sf0.1").map(d => s"${new java.io.File(sf).getParent}/$d")
+      .filter(d => new java.io.File(d).isDirectory)
+    val paths = for (d <- dirs; n <- graft.core.Tables.all) yield s"$d/$n.parquet"
+    // a Spark-written directory: _SUCCESS and .crc files, partition columns
+    val part = tmp() + "/part"
+    spark.range(20).selectExpr("id", "CAST(id % 3 AS INT) AS k", "CAST(id AS STRING) AS s")
+      .write.partitionBy("k").parquet(part)
+    (paths :+ part).foreach { p =>
+      assert(graft.core.Tables.parquet(spark, p).schema == spark.read.parquet(p).schema, p)
+    }
+  }
+
+  test("eventsStream has the batch events schema") {
+    assert(graft.streaming.Streams.eventsStream(spark, sf).schema ==
+      graft.core.Tables.t(spark, sf, "events").schema)
+  }
 }
