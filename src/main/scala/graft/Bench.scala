@@ -3,8 +3,13 @@ package graft
 /** Benchmark main (driver contract): times every SparkEntry query at the
   * given scale factor and prints ONE JSON line.
   *
-  * Per BASELINE.md the JVM is warmed first (full pass, discarded) so the
-  * timed pass measures steady-state plan execution, not codegen/JIT. */
+  * Per BASELINE.md the JVM is warmed first (full pass, discarded). The
+  * timed pass reuses the warm-up's generated classes (and their JIT-compiled
+  * code) only because `Tables.session` sizes Spark's codegen class cache
+  * above the inventory's ~3,200 classes; at Spark's default of 100 entries
+  * a full warm-up leaves only the last queries' classes, and the timed pass
+  * recompiles nearly every query. Every pass still rewrites, plans and
+  * executes each query. */
 object Bench {
 
   /** Environment self-certification (VERDICT r9 §wrong-1): driver-side runs

@@ -3,6 +3,7 @@ package graft.core
 import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.datasources.parquet.FooterSchema
+import scala.jdk.CollectionConverters._
 
 /** Table access over the driver-generated parquet fixtures
   * (see /root/repo/TESTDATA.md, FIXTURES.md).
@@ -24,16 +25,31 @@ object Tables {
     * per (session, dir, name): fixture dirs are immutable, and re-listing
     * + reading the parquet footer on every call is pure per-query driver
     * overhead — the same catalog-cache role the reference's IStorage
-    * registry plays. Resolving a table runs no Spark job (see `parquet`). */
+    * registry plays. Resolving a table runs no Spark job (see `parquet`).
+    *
+    * A weak-keyed map cannot drop a session here, because every DataFrame
+    * value holds its own session; instead each miss drops the entries of
+    * sessions whose context has stopped. */
   private val resolved =
     new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, String), DataFrame]
 
-  def t(spark: SparkSession, dir: String, name: String): DataFrame =
-    resolved.computeIfAbsent((spark, dir, name), { _ =>
-      guardSchema(name,
-        if (name == "events") readEvents(spark, s"$dir/$name.parquet")
-        else parquet(spark, s"$dir/$name.parquet"))
-    })
+  def t(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val key = (spark, dir, name)
+    val hit = resolved.get(key)
+    if (hit != null) hit
+    else {
+      resolved.keySet.removeIf(_._1.sparkContext.isStopped)
+      resolved.computeIfAbsent(key, { _ =>
+        guardSchema(name,
+          if (name == "events") readEvents(spark, s"$dir/$name.parquet")
+          else parquet(spark, s"$dir/$name.parquet"))
+      })
+    }
+  }
+
+  /** Sessions whose resolved tables are memoized (for tests). */
+  private[graft] def resolvedSessions: Set[SparkSession] =
+    resolved.keySet.asScala.map(_._1).toSet
 
   /** Open a parquet file or directory with its schema already supplied,
     * as the reference attaches a table from its stored column list
@@ -251,6 +267,20 @@ object Tables {
       udaf(new graft.aggregates.MlRegressionAggregator(logistic = true), seqDoubleEnc))
   }
 
+  /** Capacity of Spark's generated-class cache (`CodeGenerator.cache`),
+    * the counterpart of the reference's `CompiledExpressionCache`. Spark's
+    * default of 100 entries is smaller than one query's working set:
+    * measured at sf0.01, one pass over the 326 runnable inventory queries
+    * compiles 2,933 distinct classes (3,177 with stage ids in class names,
+    * see `session`) and `q_groups_frame_sweep` alone ~100, so under LRU a
+    * repeated query missed and recompiled (Janino) almost every class.
+    * 4096 is ~1.4x that working set. The cache holds compiled classes
+    * keyed by their source, never results. Spark reads this static conf
+    * once per JVM, when `CodeGenerator` first initializes: it takes effect
+    * only if the first code generation of the JVM runs under a session
+    * built here. */
+  private val CodegenCacheEntries = 4096
+
   /** Session defaults for local[32] iteration; the same settings scale to a
     * real cluster (AQE re-plans partitions at runtime). */
   def session(master: String = "local[*]", shufflePartitions: Int = 32): SparkSession = {
@@ -281,6 +311,13 @@ object Tables {
       .config("spark.ui.retainedJobs", "50")
       .config("spark.ui.retainedStages", "50")
       .config("spark.ui.retainedTasks", "500")
+      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
+      // the class cache is keyed by generated source, and a whole-stage
+      // class is named after its codegen stage id, which AQE assigns in
+      // stage-completion order: with the id in the name, a second pass
+      // over the inventory at sf0.01 compiled 147 new classes in 21
+      // queries; without it, 32 in 7
+      .config("spark.sql.codegen.useIdInClassName", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark

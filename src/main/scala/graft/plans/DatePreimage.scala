@@ -80,7 +80,7 @@ object DatePreimageRule extends Rule[LogicalPlan] {
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     ext.injectOptimizerRule(_ => DatePreimageRule)
-    ext.injectOptimizerRule(_ => ProjectionRouting.Route)
+    ext.injectOptimizerRule(ProjectionRouting.Route(_))
     ext.injectResolutionRule(_ => ChTimestampArith)
     ext.injectResolutionRule(_ => ChBooleanCoercion)
     ext.injectResolutionRule(_ => ChBoolAsNumeric)

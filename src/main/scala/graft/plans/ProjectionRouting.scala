@@ -26,17 +26,21 @@ object ProjectionRouting {
   case class Projection(factPath: String, dims: Set[String],
                         measures: Set[String], summaryPath: String)
 
-  private val registry = scala.collection.concurrent.TrieMap.empty[String, Projection]
+  /** Registered projections per session, by fact path: a summary built in
+    * one session reroutes aggregates of that session only. Weak-keyed, so
+    * a dropped session takes its entries with it. */
+  private val registries = java.util.Collections.synchronizedMap(
+    new java.util.WeakHashMap[SparkSession, scala.collection.concurrent.TrieMap[String, Projection]])
 
-  def register(p: Projection): Unit = registry.put(p.factPath, p)
-  def clear(): Unit = registry.clear()
+  private def registry(spark: SparkSession) =
+    registries.computeIfAbsent(spark, _ => scala.collection.concurrent.TrieMap.empty)
 
   /** Build (overwrite) the summary parquet and register the routing.
     * `factPath` must be the path the fact DataFrame actually scans. */
   def ensureSummary(spark: SparkSession, factPath: String, fact: DataFrame,
                     dims: Seq[String], measures: Seq[String],
                     summaryPath: String): Unit = {
-    if (!registry.get(factPath).exists(p =>
+    if (!registry(spark).get(factPath).exists(p =>
         p.dims == dims.toSet && p.measures == measures.toSet &&
         p.summaryPath == summaryPath &&
         new java.io.File(summaryPath).exists())) {
@@ -44,7 +48,7 @@ object ProjectionRouting {
         sum(col(m)).as(s"sum_$m"), min(col(m)).as(s"min_$m"), max(col(m)).as(s"max_$m")))
       fact.groupBy(dims.map(col): _*).agg(aggs.head, aggs.tail: _*)
         .write.mode("overwrite").parquet(summaryPath)
-      register(Projection(factPath, dims.toSet, measures.toSet, summaryPath))
+      registry(spark).put(factPath, Projection(factPath, dims.toSet, measures.toSet, summaryPath))
     }
   }
 
@@ -56,14 +60,16 @@ object ProjectionRouting {
     case _ => None
   }
 
-  object Route extends Rule[LogicalPlan] {
+  /** The optimizer rule of one session, reading that session's registry. */
+  case class Route(spark: SparkSession) extends Rule[LogicalPlan] {
     override def apply(plan: LogicalPlan): LogicalPlan = {
-      if (registry.isEmpty) return plan
+      val projections = registry(spark)
+      if (projections.isEmpty) return plan
       plan transform {
         case agg @ Aggregate(_, _, child, _) =>
           val routed = for {
             path <- scanPath(child)
-            proj <- registry.get(path)
+            proj <- projections.get(path)
             rewritten <- tryRewrite(agg, proj)
           } yield rewritten
           routed.getOrElse(agg)
@@ -92,10 +98,10 @@ object ProjectionRouting {
       }
       val sources = agg.aggregateExpressions.map(source)
       if (sources.exists(_.isEmpty)) return None
-      // a summary in a stopped session's scratch directory is gone
+      // a summary deleted since it was registered cannot be read
       if (!new java.io.File(proj.summaryPath).exists()) return None
 
-      val summary = graft.core.Tables.parquet(SparkSession.active, proj.summaryPath)
+      val summary = graft.core.Tables.parquet(spark, proj.summaryPath)
         .queryExecution.analyzed
       val byName = summary.output.map(a => a.name -> a).toMap
       if (!(sources.flatten ++ groupAttrs.map(_.name)).forall(byName.contains)) return None

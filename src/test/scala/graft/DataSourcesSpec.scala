@@ -380,15 +380,14 @@ class DataSourcesSpec extends AnyFunSuite {
     }
     assert(jobsDuring(graft.streaming.Streams.readMv(spark, mv)) == 0)
 
+    // the summary registers in the fresh session only
     import graft.plans.ProjectionRouting
-    val fact = Tables.t(spark, sf, "lineitem")
-    ProjectionRouting.ensureSummary(spark, s"$sf/lineitem.parquet", fact,
+    val fact = Tables.t(fresh, sf, "lineitem")
+    ProjectionRouting.ensureSummary(fresh, s"$sf/lineitem.parquet", fact,
       Seq("l_returnflag"), Seq("l_quantity"), tmp() + "/summary")
-    try {
-      val routed = fact.groupBy(col("l_returnflag")).agg(sum(col("l_quantity")))
-      assert(jobsDuring(routed.queryExecution.optimizedPlan) == 0)
-      assert(routed.queryExecution.optimizedPlan.toString.contains("sum_l_quantity"))
-    } finally ProjectionRouting.clear()
+    val routed = fact.groupBy(col("l_returnflag")).agg(sum(col("l_quantity")))
+    assert(jobsDuring(routed.queryExecution.optimizedPlan) == 0)
+    assert(routed.queryExecution.optimizedPlan.toString.contains("sum_l_quantity"))
   }
 
   test("footer schema equals the schema spark.read.parquet infers") {

@@ -83,7 +83,7 @@ class LayoutSpec extends AnyFunSuite {
     // equality filter on the partition key into directory pruning — the
     // scan's PartitionFilters, not a post-scan filter.
     val e = graft.core.Tables.t(spark, sf, "events")
-    val path = "/tmp/graft_layout/events_by_type"
+    val path = s"${graft.core.Tables.scratchDir(spark)}/layout/events_by_type"
     e.write.mode("overwrite").partitionBy("event_type").parquet(path)
     val df = spark.read.parquet(path).filter(col("event_type") === "click")
     val plan = df.queryExecution.executedPlan.toString

@@ -259,7 +259,7 @@ class LlmSpec extends AnyFunSuite {
 
   test("bucketed ANN corpus prunes to one partition and matches in-memory ANN") {
     val emb = graft.core.Tables.t(spark, sf, "embeddings")
-    val path = "/tmp/graft_ann/bucketed_corpus"
+    val path = s"${graft.core.Tables.scratchDir(spark)}/ann/bucketed_corpus"
     Similarity.writeBucketedCorpus(emb, "vec_id", "embedding", path, nPlanes = 6)
     // query = vector 0's embedding
     val qv = emb.filter(col("vec_id") === 0L).select(col("embedding"))

@@ -192,32 +192,47 @@ class PlanSpec extends AnyFunSuite {
 
   test("projection routing reroutes a matching aggregate to the summary scan") {
     import graft.plans.ProjectionRouting
-    val fact = graft.core.Tables.t(spark, sf, "lineitem")
-    val summaryPath = "/tmp/graft_projections/planspec_li_rf_ls"
-    ProjectionRouting.ensureSummary(spark, s"$sf/lineitem.parquet", fact,
+    // summaries register per session: route in a session of its own, so
+    // the shared one (and the baseline below) keeps scanning the fact table
+    val routedSpark = spark.newSession()
+    val fact = graft.core.Tables.t(routedSpark, sf, "lineitem")
+    val summaryPath = s"${graft.core.Tables.scratchDir(routedSpark)}/projections/planspec_li_rf_ls"
+    ProjectionRouting.ensureSummary(routedSpark, s"$sf/lineitem.parquet", fact,
       Seq("l_returnflag", "l_linestatus"), Seq("l_quantity"), summaryPath)
     val routed = fact.groupBy(col("l_returnflag"), col("l_linestatus"))
       .agg(sum(col("l_quantity")).as("sq"), count(lit(1)).as("n"))
     val opt = routed.queryExecution.optimizedPlan.toString
     assert(opt.contains("sum(sum_l_quantity") && opt.contains("sum(cnt"),
       s"aggregate not rewritten to re-aggregation:\n$opt")
-    val physical = routed.queryExecution.executedPlan.toString
-    assert(physical.contains("planspec_li_rf_ls"), s"scan not rerouted:\n${physical.take(3000)}")
-    assert(!physical.contains("lineitem.parquet"), "fact scan survived")
+    // the plan text truncates long scan locations: compare the scans' paths
+    val scanned = routed.queryExecution.sparkPlan.collect {
+      case scan: org.apache.spark.sql.execution.FileSourceScanExec =>
+        scan.relation.location.rootPaths.map(_.toUri.getPath)
+    }.flatten
+    assert(scanned == Seq(summaryPath), s"scan not rerouted: $scanned")
     // a query with an UNREGISTERED measure must NOT reroute
     val unrouted = fact.groupBy(col("l_returnflag"))
       .agg(sum(col("l_extendedprice")).as("s"))
     assert(!unrouted.queryExecution.optimizedPlan.toString.contains("sum_l_quantity"))
-    // results must equal the unrouted computation (clear the registry so
-    // the baseline really scans the fact table)
+    // results must equal the computation in a session with no summary
     val got = routed.collect().map(r => (r.getString(0), r.getString(1), r.getDouble(2), r.getLong(3))).toSet
-    ProjectionRouting.clear()
-    try {
-      val direct = fact.groupBy(col("l_returnflag"), col("l_linestatus"))
-        .agg(sum(col("l_quantity")), count(lit(1)))
-        .collect().map(r => (r.getString(0), r.getString(1), r.getDouble(2), r.getLong(3))).toSet
-      assert(got == direct)
-    } finally ProjectionRouting.clear()
+    val direct = graft.core.Tables.t(spark.newSession(), sf, "lineitem")
+      .groupBy(col("l_returnflag"), col("l_linestatus"))
+      .agg(sum(col("l_quantity")), count(lit(1)))
+    assert(!direct.queryExecution.optimizedPlan.toString.contains("sum_l_quantity"))
+    assert(got == direct.collect().map(r => (r.getString(0), r.getString(1), r.getDouble(2), r.getLong(3))).toSet)
+  }
+
+  test("a summary registered in one session does not reroute another session") {
+    import graft.plans.ProjectionRouting
+    val (a, b) = (spark.newSession(), spark.newSession())
+    ProjectionRouting.ensureSummary(a, s"$sf/lineitem.parquet", graft.core.Tables.t(a, sf, "lineitem"),
+      Seq("l_returnflag"), Seq("l_quantity"), s"${graft.core.Tables.scratchDir(a)}/projections/li_rf")
+    def optimized(s: org.apache.spark.sql.SparkSession): String =
+      graft.core.Tables.t(s, sf, "lineitem").groupBy(col("l_returnflag"))
+        .agg(sum(col("l_quantity"))).queryExecution.optimizedPlan.toString
+    assert(optimized(a).contains("sum_l_quantity"), "the registering session must reroute")
+    assert(!optimized(b).contains("sum_l_quantity"), "another session was rerouted")
   }
 
   test("projection pruning reaches the scan (2-column read)") {

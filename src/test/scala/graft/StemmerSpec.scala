@@ -26,7 +26,7 @@ class StemmerSpec extends AnyFunSuite {
 
   test("inverted index lookup pushes the token equality into the scan") {
     val docs = graft.core.Tables.t(spark, "/root/testdata/sf0.001", "documents")
-    val path = "/tmp/graft_invidx/spec_documents"
+    val path = s"${graft.core.Tables.scratchDir(spark)}/invidx/spec_documents"
     InvertedIndex.build(docs, "doc_id", "text", path)
     val lookup = InvertedIndex.lookup(spark, path, "data")
     val plan = lookup.queryExecution.executedPlan.toString

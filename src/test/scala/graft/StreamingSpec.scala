@@ -201,7 +201,7 @@ class StreamingSpec extends AnyFunSuite {
 
   test("incremental LSH dedup finds cross-batch near-dups exactly once") {
     import spark.implicits._
-    val statePath = "/tmp/graft_inc_lsh_" + System.nanoTime()
+    val statePath = s"${graft.core.Tables.scratchDir(spark)}/inc_lsh_${System.nanoTime()}"
     // 80 distinct tokens => ~78 distinct 3-gram shingles; a one-word edit
     // keeps jaccard ≈ 0.93
     val base = (0 until 80).map(i => s"tok$i").mkString(" ")
