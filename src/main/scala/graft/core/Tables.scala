@@ -198,14 +198,14 @@ object Tables {
     *
     * Memoized per (session, dir): ChSql.sql calls this on EVERY dialect
     * query, and re-registering 10 views + the udaf set measured ~64 ms
-    * of pure driver time per query (DriverOverheadTimer, r18) — fixed
-    * overhead that serializes at high QPS (guide §5: the driver should
-    * do almost no per-query work). The anchor runner's per-test reset
+    * of pure driver time per query (r18) — fixed overhead that
+    * serializes at high QPS (guide §5: the driver should do almost no
+    * per-query work). The anchor runner's per-test reset
     * drops the session's temp views, so ChSql.resetSessionState calls
     * invalidateRegistered to force the next sql() to re-register. */
   // weak-keyed (ADVICE r18): a ConcurrentHashMap would strongly hold
-  // stopped sessions forever — multi-session JVMs (ConfAb builds 6
-  // back-to-back) leaked them. WeakHashMap entries vanish with the session.
+  // stopped sessions forever — a JVM that builds sessions back-to-back
+  // leaked them. WeakHashMap entries vanish with the session.
   private val registeredDir = java.util.Collections.synchronizedMap(
     new java.util.WeakHashMap[SparkSession, String])
 
@@ -224,8 +224,8 @@ object Tables {
   /** SQL names for the custom Aggregators (Expression-based kernels go
     * through GraftExtensions.injectFunction; Aggregators need the udf
     * registry). Registered once per session — each registration builds
-    * fresh ExpressionEncoders (~4 ms/call, DriverOverheadTimer r18), and
-    * function registrations survive the anchor runner's view reset. */
+    * fresh ExpressionEncoders (~4 ms/call, r18), and function
+    * registrations survive the anchor runner's view reset. */
   private val udafsDone = java.util.Collections.newSetFromMap(
     java.util.Collections.synchronizedMap(
       new java.util.WeakHashMap[SparkSession, java.lang.Boolean]))

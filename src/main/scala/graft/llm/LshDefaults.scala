@@ -1,8 +1,8 @@
 package graft.llm
 
 /** Corpus-size-derived LSH banding defaults — the bits≈log(n) rule the
-  * round-12 `tools.LshDensitySweep` measured (BASELINE.md §Round-12 LSH
-  * density knob): FIXED banding is quadratic in corpus density (minhash
+  * round-12 density sweep measured (BASELINE.md §Round-12 LSH density
+  * knob): FIXED banding is quadratic in corpus density (minhash
   * candidates grew 77× for 10× data; the fixed cosine variant did not
   * finish at sf10), while banding whose bits grow with log(n) keeps
   * per-bucket occupancy — and therefore candidate generation — near

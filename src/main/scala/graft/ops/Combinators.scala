@@ -41,10 +41,10 @@ object Combinators {
     *
     * r19 measured a single-exchange alternative (collect_list of
     * (pos, value) structs + sort_array + first-per-position HOF filter)
-    * head-to-head in one JVM (tools/AbR19): 0.65x — the interpreted
-    * higher-order filter plus the object aggregate cost more than the
-    * extra codegen'd exchange saves, at equal shuffle bytes. Kept the
-    * two-phase shape deliberately. */
+    * head-to-head in one JVM: 0.65x — the interpreted higher-order
+    * filter plus the object aggregate cost more than the extra codegen'd
+    * exchange saves, at equal shuffle bytes. Kept the two-phase shape
+    * deliberately. */
   def groupArrayInsertAt(df: DataFrame, groupCols: Seq[Column], value: Column, pos: Column,
                          default: Column, size: Option[Int], out: String): DataFrame = {
     val base = df.select(groupCols :+ value.as("__v") :+ pos.cast("int").as("__p"): _*)

@@ -95,8 +95,8 @@ object ClickBench {
     * projects).
     *
     * Memoized per (session, dir): re-analyzing the 27-column derivation
-    * measured ~67 ms of driver time per query (DriverOverheadTimer,
-    * r18) — repeated identically by every q_cb_* invocation. The
+    * measured ~67 ms of driver time per query (r18) — repeated
+    * identically by every q_cb_* invocation. The
     * tableExists check covers the anchor runner's view-dropping reset. */
   // weak-keyed (ADVICE r18): don't strongly hold stopped sessions
   private val hitsFor = java.util.Collections.synchronizedMap(

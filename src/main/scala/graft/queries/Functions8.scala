@@ -6,23 +6,43 @@ import org.apache.spark.sql.SparkSession
   * src/Functions/FunctionsHashing.h, via functions/HashCompat.scala).
   * DuckDB cannot compute the reference's hash algorithms, so the oracle
   * embeds the expected values as a literal table (generated by
-  * `sbt "runMain graft.tools.HashPins"`) — the correctness run is a
+  * `sbt "Test/runMain graft.tools.HashPins"`) — the correctness run is a
   * bit-exact regression pin over every kernel, on top of
   * HashCompatSpec's independent-oracle tests (official SipHash-2-4
   * vectors, String.hashCode, Spark's spec-verified XXH64, zlib CRC).
   */
 object Functions8 {
 
+  /** Probe strings of the hash pin tables (q_fn_hash_compat, q_fn_digest):
+    * the DuckDB oracle embeds one row of expected values per string, so
+    * this list and the oracle's literals change together. */
+  val hashProbes: Seq[String] = Seq(
+    "", "a", "abc", "message digest",
+    "The quick brown fox jumps over the lazy dog",
+    "clickhouse", "spark", "BUILDING", "Customer#000000001", "1995-01-01",
+    "dedup-minhash",
+    "0123456789abcdef0123456789abcdef0123456789abcdef0123456789abcdef!!")
+
+  /** Probe strings of the shingle-fingerprint pin table
+    * (q_fn_shingle_hash). */
+  val shingleProbes: Seq[String] = Seq(
+    "", "ab", "abc", "abcd", "hello world",
+    "The quick brown foxes jumped over the lazy dogs",
+    "Data deduplication finds near duplicate documents quickly",
+    "ClickHouse is a column oriented database management system",
+    "über straße naïve café", // multi-byte UTF8
+    "short a bb ccc words")
+
   val queries: Map[String, Q] = Map(
     // ngram/wordShingle SimHash+MinHash fingerprints (reference
     // FunctionsStringHash.cpp via functions/StringShingles.scala). DuckDB
     // cannot compute these; the oracle pins the expected values as a
-    // literal table (regenerate: sbt "runMain graft.tools.HashPins
+    // literal table (regenerate: sbt "Test/runMain graft.tools.HashPins
     // shingles"). ASCII probes only — the multibyte UTF8 path is pinned
     // in StringShinglesSpec instead, keeping the driver JSON pure ASCII.
     "q_fn_shingle_hash" -> { (s: SparkSession, dir: String) =>
       import s.implicits._
-      graft.tools.HashPins.shingleProbes
+      shingleProbes
         .filter(_.forall(_ < 128)).toDF("s")
         .createOrReplaceTempView("shingle_probes")
       ordered(graft.sqlfront.ChSql.sql(s, dir,
@@ -120,7 +140,7 @@ object Functions8 {
     // one row per probe string, one column per hash kernel
     "q_fn_hash_compat" -> { (s: SparkSession, dir: String) =>
       import s.implicits._
-      val df = graft.tools.HashPins.probes.toDF("s")
+      val df = hashProbes.toDF("s")
       ordered(df.selectExpr(
         "s",
         "ch_cityhash64(s) AS h_city",

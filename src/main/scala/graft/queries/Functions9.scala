@@ -136,12 +136,12 @@ object Functions9 {
     // (reference FunctionsHashing.h keccak256/MD4/RIPEMD160/SHA512_256/
     // BLAKE3, contrib/consistent-hashing via Batch23.scala). DuckDB
     // cannot compute these; the oracle embeds the pin table (regenerate:
-    // sbt "runMain graft.tools.HashPins digests"). MD4/RIPEMD160/Keccak/
+    // sbt "Test/runMain graft.tools.HashPins digests"). MD4/RIPEMD160/Keccak/
     // SHA-512/256/BLAKE3 are additionally anchored against published
     // vectors in ChSqlSpec.
     "q_fn_digest" -> { (s: SparkSession, dir: String) =>
       import s.implicits._
-      val df = graft.tools.HashPins.probes.toDF("s")
+      val df = Functions8.hashProbes.toDF("s")
       ordered(df.selectExpr(
         "s",
         "lower(hex(ch_md4(s))) AS h_md4",

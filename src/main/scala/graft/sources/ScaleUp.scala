@@ -1,4 +1,4 @@
-package graft.tools
+package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -15,9 +15,10 @@ import org.apache.spark.sql.functions._
   * don't have (rotation preserves token and norm distributions while
   * decorrelating shingles and cosines across copies).
   *
-  * Output feeds `graft.Bench` via SPARK_GRAFT_SF_DIR for the sf1 scaling
-  * spot-check recorded in BASELINE.md; it is NOT an oracle fixture (the
-  * correctness gate stays on the driver-generated /root/testdata). */
+  * Output is a fixture directory with the input's table layout, for timing
+  * data-bound queries at `copies` times the input's size; it is NOT an
+  * oracle fixture (the correctness gate stays on the generated oracle
+  * fixtures). Run: sbt "runMain graft.sources.ScaleUp <src> <out> <copies>" */
 object ScaleUp {
   def main(args: Array[String]): Unit = {
     val src = args.headOption.getOrElse("/root/testdata/sf0.1")

@@ -1410,9 +1410,9 @@ object ChSql {
   }
 
   /** Sessions whose system_numbers/system_one generator views exist —
-    * creating them measured ~14 ms/query (DriverOverheadTimer r18), so
-    * sqlImpl builds them once per session; resetSessionState drops the
-    * views and clears the flag. */
+    * creating them measured ~14 ms/query (r18), so sqlImpl builds them
+    * once per session; resetSessionState drops the views and clears the
+    * flag. */
   // weak-keyed (ADVICE r18): don't strongly hold stopped sessions
   private val sessionViewsReady = java.util.Collections.newSetFromMap(
     java.util.Collections.synchronizedMap(
@@ -1887,8 +1887,9 @@ object ChSql {
           else merged)
       }
     } catch { case scala.util.control.NonFatal(e) =>
-      if (sys.env.contains("GRAFT_PARTS_DEBUG"))
-        System.err.println(s"[parts] tagBlock($name) failed: $e")
+      System.err.println(s"[graft] part tagging for '$name' failed, " +
+        "dropping its part shadow: " +
+        Option(e.getMessage).getOrElse(e.getClass.getName).take(120))
       virtualShadow.remove(name) // never let bookkeeping break the INSERT
     }
 

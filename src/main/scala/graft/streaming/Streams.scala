@@ -133,15 +133,17 @@ object Streams {
     * DeduplicationTokenTransforms insert-dedup guarantee). */
   def mvWriteBatch(batch: DataFrame, transform: DataFrame => DataFrame,
                    path: String, batchId: Long): Unit = {
-    batch.sparkSession.conf
-      .set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     // the id goes in as a string: codegen inlines a long literal into the
     // generated source, so every batch compiled a new class, while a string
     // literal is passed by reference and the class is reused across batches;
     // the partition directory (`__batch_id=<id>`) is the same either way
     transform(batch)
       .withColumn("__batch_id", lit(batchId.toString))
-      .write.mode("overwrite").partitionBy("__batch_id").parquet(path)
+      .write.mode("overwrite")
+      // a writer option, not the session conf: the conf would turn every
+      // later overwrite in the session into a dynamic one
+      .option("partitionOverwriteMode", "dynamic")
+      .partitionBy("__batch_id").parquet(path)
   }
 
   /** Merge the MV's per-batch partial aggregates: keys = all columns but

@@ -820,27 +820,6 @@ class ChSqlSpec extends AnyFunSuite {
     assert(plan.contains("Physical Plan"), plan.take(200))
   }
 
-  test("query result cache: identical queries hit the persisted result") {
-    graft.ops.QueryCache.clear()
-    def build() = graft.core.Tables.t(spark, sf, "orders")
-      .groupBy(year(col("o_orderdate")).as("y")).count()
-    val first = graft.ops.QueryCache.cached(build())
-    val n1 = first.count()
-    assert(graft.ops.QueryCache.contains(build()), "second build must be a cache hit")
-    val second = graft.ops.QueryCache.cached(build())
-    assert(second eq first, "hit returns the SAME persisted frame")
-    assert(second.count() == n1)
-    assert(second.queryExecution.executedPlan.toString.contains("InMemory") ||
-      second.queryExecution.executedPlan.toString.contains("TableCacheQueryStage"),
-      "re-execution must scan the cache, not recompute")
-    // a semantically different query is NOT a hit
-    assert(!graft.ops.QueryCache.contains(
-      graft.core.Tables.t(spark, sf, "orders").groupBy(col("o_orderstatus")).count()))
-    assert(graft.ops.QueryCache.size == 1)
-    graft.ops.QueryCache.clear()
-    assert(graft.ops.QueryCache.size == 0)
-  }
-
   test("vector distance dialect names map onto the codegen kernels") {
     val r = ch("""SELECT L2Distance([1.0, 2.0], [4.0, 6.0]) AS l2,
                  |L1Distance([1.0, 2.0], [4.0, 6.0]) AS l1,

@@ -6,7 +6,7 @@ import java.nio.file.{Files, Paths}
 /** Golden-file regression for the no-oracle queries (simhash pairs, LSH
   * ANN, fingerprints): canonical output at sf0.001 must match the
   * committed .reference files. Regenerate deliberately with
-  * `runMain graft.tools.DumpGoldens` after an intentional change. */
+  * `Test/runMain graft.tools.DumpGoldens` after an intentional change. */
 class GoldenSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
   val sf = "/root/testdata/sf0.001"

@@ -4,7 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.llm.LshDefaults
 
 /** Pins the corpus-size → LSH-banding derivation against the round-12
-  * `tools.LshDensitySweep` measurements (BASELINE.md §Round-12 LSH
+  * density-sweep measurements (BASELINE.md §Round-12 LSH
   * density knob): the MEASURED winning settings at each measured scale
   * must be exactly what the no-parameter path derives. */
 class LshDefaultsSpec extends AnyFunSuite {

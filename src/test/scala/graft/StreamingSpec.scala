@@ -199,6 +199,24 @@ class StreamingSpec extends AnyFunSuite {
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(root))
   }
 
+  test("mvWriteBatch's dynamic overwrite stays on its own write, off the session conf") {
+    val s = spark.newSession()
+    import s.implicits._
+    val key = "spark.sql.sources.partitionOverwriteMode"
+    val default = s.conf.get(key)
+    val root = graft.core.Tables.scratchDir(s)
+    val (table, mv) = (s"$root/overwrite_p", s"$root/overwrite_mv")
+    Seq((1, "a"), (2, "b")).toDF("p", "v").write.partitionBy("p").parquet(table)
+    Streams.mvWriteBatch(Seq("a", "b").toDF("k"),
+      (d: org.apache.spark.sql.DataFrame) => d.groupBy(col("k")).agg(count(lit(1)).as("n")),
+      mv, 0L)
+    assert(s.conf.get(key) == default)
+    // a later plain overwrite in the same session replaces the whole table
+    Seq((1, "c")).toDF("p", "v").write.mode("overwrite").partitionBy("p").parquet(table)
+    val got = s.read.parquet(table).select("p", "v").as[(Int, String)].collect().toSet
+    assert(got == Set(1 -> "c"), "partition p=2 survived the overwrite")
+  }
+
   test("incremental LSH dedup finds cross-batch near-dups exactly once") {
     import spark.implicits._
     val statePath = s"${graft.core.Tables.scratchDir(spark)}/inc_lsh_${System.nanoTime()}"
@@ -368,10 +386,9 @@ class StreamingSpec extends AnyFunSuite {
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
         .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
           // idempotent sink: the batch owns its partition
-          b.sparkSession.conf
-            .set("spark.sql.sources.partitionOverwriteMode", "dynamic")
           b.withColumn("__batch_id", lit(id))
-            .write.mode("overwrite").partitionBy("__batch_id").parquet(out)
+            .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+            .partitionBy("__batch_id").parquet(out)
           if (id >= 1 && !marker.exists()) {
             marker.createNewFile()
             throw new RuntimeException("injected crash after sink write")
@@ -423,10 +440,9 @@ class StreamingSpec extends AnyFunSuite {
         val pairs = graft.llm.Dedup.incrementalLshDedup(
           b, "doc_id", "text", state, threshold = 0.7, batchId = id)
         // idempotent pair sink, same batch-partition scheme as the state
-        b.sparkSession.conf
-          .set("spark.sql.sources.partitionOverwriteMode", "dynamic")
         pairs.select(col("a"), col("b")).withColumn("__batch_id", lit(id))
-          .write.mode("overwrite").partitionBy("__batch_id").parquet(pairsOut)
+          .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+          .partitionBy("__batch_id").parquet(pairsOut)
         if (id >= 1 && !marker.exists()) {
           marker.createNewFile()
           throw new RuntimeException("injected crash after state write")

@@ -8,9 +8,9 @@ import org.apache.spark.sql.SparkSession
   * entry points).
   *
   * Usage:
-  *   runMain graft.tools.AnchorScout <names...>      explicit tests
-  *   runMain graft.tools.AnchorScout 03000-03099     bounded prefix range
-  *   runMain graft.tools.AnchorScout                  default 003xx-009xx
+  *   Test/runMain graft.tools.AnchorScout <names...>      explicit tests
+  *   Test/runMain graft.tools.AnchorScout 03000-03099     bounded prefix range
+  *   Test/runMain graft.tools.AnchorScout                  default 003xx-009xx
   *
   * Environment-class tests (memory-limit must-fails, sleeps, filesystem
   * probes, multi-threaded zeros scans) are REJECTED before execution:

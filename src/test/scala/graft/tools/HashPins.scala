@@ -1,39 +1,26 @@
 package graft.tools
 
 import graft.functions.HashCompat
+import graft.queries.Functions8.{hashProbes, shingleProbes}
 
 /** Prints the hash-compat oracle pin table for q_fn_hash_compat: one TSV
   * row per probe string with every kernel's value. The DuckDB oracle for
   * that query embeds these as literals (DuckDB cannot compute the
   * reference hash family), so correctness runs become regression pins of
   * the kernel outputs. Re-run after any intentional kernel change:
-  *   sbt "runMain graft.tools.HashPins"
+  *   sbt "Test/runMain graft.tools.HashPins"        (q_fn_hash_compat)
+  *   sbt "Test/runMain graft.tools.HashPins digests" (q_fn_digest)
+  *   sbt "Test/runMain graft.tools.HashPins shingles" (q_fn_shingle_hash)
+  * The probe strings live next to those queries, in `Functions8`.
   */
 object HashPins {
-  val probes: Seq[String] = Seq(
-    "", "a", "abc", "message digest",
-    "The quick brown fox jumps over the lazy dog",
-    "clickhouse", "spark", "BUILDING", "Customer#000000001", "1995-01-01",
-    "dedup-minhash",
-    "0123456789abcdef0123456789abcdef0123456789abcdef0123456789abcdef!!")
-
-  /** Probe strings for the shingle-fingerprint pin table
-    * (q_fn_shingle_hash). */
-  val shingleProbes: Seq[String] = Seq(
-    "", "ab", "abc", "abcd", "hello world",
-    "The quick brown foxes jumped over the lazy dogs",
-    "Data deduplication finds near duplicate documents quickly",
-    "ClickHouse is a column oriented database management system",
-    "über straße naïve café", // multi-byte UTF8
-    "short a bb ccc words")
-
   def main(args: Array[String]): Unit = {
     def b(s: String) = s.getBytes("UTF-8")
     def hex(a: Array[Byte]) = a.map("%02x".format(_)).mkString
     if (args.headOption.contains("digests")) {
       // round-10 batch 23 pin table (q_fn_digest)
-      import graft.functions.{Batch23, HashCompat}
-      for (s <- probes) {
+      import graft.functions.Batch23
+      for (s <- hashProbes) {
         println(Seq(
           "'" + s + "'",
           "'" + hex(Batch23.md4(b(s))) + "'",
@@ -61,7 +48,7 @@ object HashPins {
       }
       return
     }
-    for (s <- probes) {
+    for (s <- hashProbes) {
       println(Seq(
         "'" + s + "'",
         HashCompat.cityHash64(b(s)),

@@ -2,7 +2,7 @@
 """Replay the DuckDB side of the dialect fuzzer and diff against Spark.
 
 Usage: python3 tools/fuzz_check.py <sfDir> <fuzzOutDir>
-(run `sbt "runMain graft.tools.FuzzDialect <seed> <n> <sfDir> <fuzzOutDir>"`
+(run `sbt "Test/runMain graft.tools.FuzzDialect <seed> <n> <sfDir> <fuzzOutDir>"`
 first). Exit 0 iff every expression column matches on every row.
 """
 import glob

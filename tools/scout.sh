@@ -1,7 +1,9 @@
 #!/bin/bash
 # Run graft.tools.AnchorScout directly on the compiled classes — NO sbt,
 # so detached sweeps never recompile and never race a src/main edit
-# (the round-12 incident). Usage: tools/scout.sh <args...>
+# (the round-12 incident). The tool lives in the test classes, so run
+# `sbt Test/compile` first. Usage: tools/scout.sh <args...>
+ROOT=$(cd "$(dirname "$0")/.." && pwd)
 OPENS=""
 for p in java.lang java.lang.invoke java.lang.reflect java.io java.net \
          java.nio java.util java.util.concurrent java.util.concurrent.atomic \
@@ -10,5 +12,5 @@ for p in java.lang java.lang.invoke java.lang.reflect java.io java.net \
 done
 exec java $OPENS -Xmx12g \
   -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
-  -cp "/root/repo/target/scala-2.13/classes:/opt/spark/jars/*" \
+  -cp "$ROOT/target/scala-2.13/classes:$ROOT/target/scala-2.13/test-classes:/opt/spark/jars/*" \
   graft.tools.AnchorScout "$@"

@@ -8,10 +8,12 @@
 set -u
 OUT=${1:-/tmp/sweep_r13}
 mkdir -p "$OUT"
+# AnchorScout lives in the test classes: run `sbt Test/compile` first.
+ROOT=$(cd "$(dirname "$0")/.." && pwd)
 CP_SNAP="$OUT/classes"
-if [ ! -d "$CP_SNAP" ]; then
-  cp -r /root/repo/target/scala-2.13/classes "$CP_SNAP"
-fi
+TEST_SNAP="$OUT/test-classes"
+[ -d "$CP_SNAP" ] || cp -r "$ROOT/target/scala-2.13/classes" "$CP_SNAP"
+[ -d "$TEST_SNAP" ] || cp -r "$ROOT/target/scala-2.13/test-classes" "$TEST_SNAP"
 OPENS=""
 for p in java.lang java.lang.invoke java.lang.reflect java.io java.net \
          java.nio java.util java.util.concurrent java.util.concurrent.atomic \
@@ -25,7 +27,7 @@ for lo in $(seq 0 200 3400); do
   [ -s "$log" ] && grep -q "pass ==" "$log" && continue  # resumable
   timeout 3600 java $OPENS -Xmx12g \
     -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
-    -cp "$CP_SNAP:/opt/spark/jars/*" \
+    -cp "$CP_SNAP:$TEST_SNAP:/opt/spark/jars/*" \
     graft.tools.AnchorScout "$tag" > "$log" 2>&1
   echo "range $tag exit=$? $(grep -c '^PASS' "$log" 2>/dev/null)/$(grep -cE '^(PASS|FAIL)' "$log" 2>/dev/null)" >> "$OUT/summary.txt"
 done
