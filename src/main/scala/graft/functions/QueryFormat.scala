@@ -4,6 +4,7 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.types.{DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
+import graft.sqlfront.SqlText
 
 /** formatQuery / formatQuerySingleLine [OrNull] (reference
   * src/Functions/formatQuery.cpp:184-205; canonical shapes pinned against
@@ -42,21 +43,21 @@ object QueryFormat {
     while (i < n) {
       val c = s.charAt(i)
       if (c.isWhitespace) i += 1
-      else if (c == '\'') {
-        val sb = new StringBuilder; i += 1; var closed = false
-        while (i < n && !closed) {
-          val d = s.charAt(i)
-          if (d == '\\' && i + 1 < n) { sb.append(s.charAt(i + 1)); i += 2 }
-          else if (d == '\'' && i + 1 < n && s.charAt(i + 1) == '\'') { sb.append('\''); i += 2 }
-          else if (d == '\'') { closed = true; i += 1 }
-          else { sb.append(d); i += 1 }
+      else if (c == '\'' || c == '`') {
+        val end = SqlText.literalEnd(s, i)
+        if (end < 0) return None
+        if (c == '`') out += TBq(s.substring(i + 1, end - 1))
+        else {
+          val sb = new StringBuilder; var j = i + 1
+          while (j < end - 1) {
+            val d = s.charAt(j)
+            // an escaped char, or the second quote of a doubled one
+            if (d == '\\' || d == '\'') { sb.append(s.charAt(j + 1)); j += 2 }
+            else { sb.append(d); j += 1 }
+          }
+          out += TStr(sb.toString)
         }
-        if (!closed) return None
-        out += TStr(sb.toString)
-      } else if (c == '`') {
-        val j = s.indexOf('`', i + 1)
-        if (j < 0) return None
-        out += TBq(s.substring(i + 1, j)); i = j + 1
+        i = end
       } else if (c.isDigit || (c == '.' && i + 1 < n && s.charAt(i + 1).isDigit)) {
         val st = i
         while (i < n && (s.charAt(i).isLetterOrDigit || s.charAt(i) == '.' ||

@@ -960,21 +960,15 @@ object ChSql {
   }
 
   /** Split a function-argument string on top-level commas. */
-  private[sqlfront] def splitArgs(s: String): Seq[String] = {
+  private[graft] def splitArgs(s: String): Seq[String] = {
+    val m = SqlText.mask(s)
     val out = scala.collection.mutable.ArrayBuffer.empty[String]
-    var depth = 0; var inStr = false; var last = 0
-    var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (inStr) { if (c == '\'') inStr = false }
-      else c match {
-        case '\'' => inStr = true
-        case '(' | '[' => depth += 1
-        case ')' | ']' => depth -= 1
-        case ',' if depth == 0 => out += s.substring(last, i); last = i + 1
-        case _ =>
-      }
-      i += 1
+    var depth = 0; var last = 0
+    for (i <- 0 until m.length) m.charAt(i) match {
+      case '(' | '[' => depth += 1
+      case ')' | ']' => depth -= 1
+      case ',' if depth == 0 => out += s.substring(last, i); last = i + 1
+      case _ =>
     }
     out += s.substring(last)
     out.map(_.trim).toSeq
@@ -982,26 +976,19 @@ object ChSql {
 
   /** Find `name(` occurrences (word boundary), rewrite via `f(args)`. */
   private def rewriteCalls(sql: String, name: String)(f: Seq[String] => String): String = {
+    if (!sql.contains(name + "(")) return sql
+    val m = SqlText.mask(sql)
     val sb = new StringBuilder
     var i = 0
     while (i < sql.length) {
-      val idx = sql.indexOf(name + "(", i)
+      val idx = m.indexOf(name + "(", i)
       val boundaryOk = idx >= 0 &&
         (idx == 0 || !Character.isLetterOrDigit(sql.charAt(idx - 1)) && sql.charAt(idx - 1) != '_')
       if (idx < 0) { sb.append(sql.substring(i)); i = sql.length }
       else if (!boundaryOk) { sb.append(sql.substring(i, idx + name.length)); i = idx + name.length }
       else {
         sb.append(sql.substring(i, idx))
-        // find matching close paren
-        var depth = 0; var j = idx + name.length; var end = -1; var inStr = false
-        while (j < sql.length && end < 0) {
-          val c = sql.charAt(j)
-          if (inStr) { if (c == '\'') inStr = false }
-          else if (c == '\'') inStr = true
-          else if (c == '(') depth += 1
-          else if (c == ')') { depth -= 1; if (depth == 0) end = j }
-          j += 1
-        }
+        val end = SqlText.matching(m, idx + name.length)
         if (end < 0) { sb.append(sql.substring(idx)); i = sql.length }
         else {
           // recurse into the args first: the same name may be NESTED
@@ -1027,36 +1014,26 @@ object ChSql {
     * single-group form of the same name can be handled afterwards. */
   private def rewriteParamCalls(sql: String, name: String)(
       f: (Seq[String], Seq[String]) => String): String = {
-    def closeParen(start: Int): Int = {
-      var depth = 0; var j = start; var end = -1; var inStr = false
-      while (j < sql.length && end < 0) {
-        val c = sql.charAt(j)
-        if (inStr) { if (c == '\'') inStr = false }
-        else if (c == '\'') inStr = true
-        else if (c == '(') depth += 1
-        else if (c == ')') { depth -= 1; if (depth == 0) end = j }
-        j += 1
-      }
-      end
-    }
+    if (!sql.contains(name + "(")) return sql
+    val m = SqlText.mask(sql)
     val sb = new StringBuilder
     var i = 0
     var changed = false
     while (i < sql.length) {
-      val idx = sql.indexOf(name + "(", i)
+      val idx = m.indexOf(name + "(", i)
       val boundaryOk = idx >= 0 &&
         (idx == 0 || !Character.isLetterOrDigit(sql.charAt(idx - 1)) && sql.charAt(idx - 1) != '_')
       if (idx < 0) { sb.append(sql.substring(i)); i = sql.length }
       else if (!boundaryOk) { sb.append(sql.substring(i, idx + name.length)); i = idx + name.length }
       else {
-        val pEnd = closeParen(idx + name.length)
+        val pEnd = SqlText.matching(m, idx + name.length)
         var k = if (pEnd < 0) -1 else pEnd + 1
         while (k > 0 && k < sql.length && Character.isWhitespace(sql.charAt(k))) k += 1
         if (pEnd < 0 || k < 0 || k >= sql.length || sql.charAt(k) != '(') {
           val stop = if (pEnd < 0) sql.length else pEnd + 1
           sb.append(sql.substring(i, stop)); i = stop
         } else {
-          val aEnd = closeParen(k)
+          val aEnd = SqlText.matching(m, k)
           if (aEnd < 0) { sb.append(sql.substring(i)); i = sql.length }
           else {
             sb.append(sql.substring(i, idx))
@@ -1083,28 +1060,8 @@ object ChSql {
     * double-literal marker) outside string literals, so they type as
     * DOUBLE like ClickHouse's Float64 literals instead of Spark's
     * DECIMAL default. */
-  private[graft] def rewriteFloatLiterals(sql: String): String = {
-    val sb = new StringBuilder
-    var i = 0
-    var segStart = 0
-    var inStr = false
-    while (i < sql.length) {
-      if (sql.charAt(i) == '\'') {
-        if (!inStr) {
-          sb.append(floatLitRe.replaceAllIn(sql.substring(segStart, i), m => m.group(1) + "D"))
-          segStart = i
-        } else {
-          sb.append(sql.substring(segStart, i + 1))
-          segStart = i + 1
-        }
-        inStr = !inStr
-      }
-      i += 1
-    }
-    if (inStr) sb.append(sql.substring(segStart))
-    else sb.append(floatLitRe.replaceAllIn(sql.substring(segStart), m => m.group(1) + "D"))
-    sb.toString
-  }
+  private[graft] def rewriteFloatLiterals(sql: String): String =
+    replaceOutsideStrings(sql, floatLitRe)(m => m.group(1) + "D")
 
   /** CH array literals `[a, b]` -> `array(a, b)`, leaving subscripts
     * (`expr[1]`) untouched: a bracket is a literal iff the previous
@@ -1116,68 +1073,53 @@ object ChSql {
     * quotes) are left alone. */
   private[sqlfront] def rewriteMapLiterals(sql: String): String = {
     if (!sql.contains('{')) return sql
+    val m = SqlText.mask(sql)
     val sb = new StringBuilder
-    var i = 0; var inStr = false
+    var i = 0
     while (i < sql.length) {
       val c = sql.charAt(i)
-      if (inStr) { sb.append(c); if (c == '\'') inStr = false; i += 1 }
-      else if (c == '\'') { sb.append(c); inStr = true; i += 1 }
-      else if (c == '{') {
-        var j = i + 1; var depth = 1; var s2 = false
-        while (j < sql.length && depth > 0) {
-          val ch = sql.charAt(j)
-          if (s2) { if (ch == '\'') s2 = false }
-          else if (ch == '\'') s2 = true
-          else if (ch == '{') depth += 1
-          else if (ch == '}') depth -= 1
-          j += 1
-        }
-        if (depth != 0) { sb.append(c); i += 1 }
-        else {
-          val body = sql.substring(i + 1, j - 1).trim
-          if (body.isEmpty) { sb.append("map()"); i = j }
-          else if (body.matches("[A-Za-z_]\\w*\\s*:\\s*[A-Za-z_][\\w()]*")) {
-            // query-parameter placeholder {name:Type} — not a map literal
-            sb.append(sql.substring(i, j)); i = j
-          } else {
-            // split top-level commas, then each entry at its first
-            // top-level colon
-            val entries = splitArgs(body)
-            val kvs = entries.map { e =>
-              var k = 0; var d = 0; var s3 = false; var colon = -1
-              while (k < e.length && colon < 0) {
-                val ch = e.charAt(k)
-                if (s3) { if (ch == '\'') s3 = false }
-                else ch match {
-                  case '\'' => s3 = true
-                  case '(' | '[' | '{' => d += 1
-                  case ')' | ']' | '}' => d -= 1
-                  case ':' if d == 0 => colon = k
-                  case _ =>
-                }
-                k += 1
-              }
-              if (colon < 0) null
-              else (e.substring(0, colon).trim, e.substring(colon + 1).trim)
+      val close = if (m.charAt(i) == '{') SqlText.matching(m, i) else -1
+      val j = close + 1
+      val body = if (close < 0) "" else sql.substring(i + 1, close).trim
+      if (close < 0) { sb.append(c); i += 1 }
+      else if (body.isEmpty) { sb.append("map()"); i = j }
+      else if (body.matches("[A-Za-z_]\\w*\\s*:\\s*[A-Za-z_][\\w()]*")) {
+        // query-parameter placeholder {name:Type} — not a map literal
+        sb.append(sql.substring(i, j)); i = j
+      } else {
+        // split top-level commas, then each entry at its first
+        // top-level colon
+        val entries = splitArgs(body)
+        val kvs = entries.map { e =>
+          val em = SqlText.mask(e); var k = 0; var d = 0; var colon = -1
+          while (k < em.length && colon < 0) {
+            em.charAt(k) match {
+              case '(' | '[' | '{' => d += 1
+              case ')' | ']' | '}' => d -= 1
+              case ':' if d == 0 => colon = k
+              case _ =>
             }
-            if (kvs.contains(null)) { sb.append(c); i += 1 }
-            else {
-              // CH keeps duplicate map keys and LOOKUP returns the FIRST
-              // match (reference arrayElement.cpp executeMatchKeyToIndex);
-              // Spark has no FIRST_WIN dedup policy, so drop later
-              // duplicate literal keys here — first-match lookup and
-              // insertion-order rendering both come out right
-              val firstWin = kvs.foldLeft(Vector.empty[(String, String)]) {
-                (acc, kv) => if (acc.exists(_._1 == kv._1)) acc else acc :+ kv
-              }
-              sb.append("map(").append(firstWin.map { case (k, v) =>
-                s"${rewriteMapLiterals(k)}, ${rewriteMapLiterals(v)}"
-              }.mkString(", ")).append(")")
-              i = j
-            }
+            k += 1
           }
+          if (colon < 0) null
+          else (e.substring(0, colon).trim, e.substring(colon + 1).trim)
         }
-      } else { sb.append(c); i += 1 }
+        if (kvs.contains(null)) { sb.append(c); i += 1 }
+        else {
+          // CH keeps duplicate map keys and LOOKUP returns the FIRST
+          // match (reference arrayElement.cpp executeMatchKeyToIndex);
+          // Spark has no FIRST_WIN dedup policy, so drop later
+          // duplicate literal keys here — first-match lookup and
+          // insertion-order rendering both come out right
+          val firstWin = kvs.foldLeft(Vector.empty[(String, String)]) {
+            (acc, kv) => if (acc.exists(_._1 == kv._1)) acc else acc :+ kv
+          }
+          sb.append("map(").append(firstWin.map { case (k, v) =>
+            s"${rewriteMapLiterals(k)}, ${rewriteMapLiterals(v)}"
+          }.mkString(", ")).append(")")
+          i = j
+        }
+      }
     }
     sb.toString
   }
@@ -1189,23 +1131,14 @@ object ChSql {
     * and quoted strings are skipped. */
   private[sqlfront] def rewriteTernary(sql: String): String = {
     if (!sql.contains('?')) return sql
-    // locate the first '?' outside strings
-    var qi = -1; var i = 0; var inStr = false
-    while (i < sql.length && qi < 0) {
-      val c = sql.charAt(i)
-      if (inStr) { if (c == '\'') inStr = false }
-      else if (c == '\'') inStr = true
-      else if (c == '?') qi = i
-      i += 1
-    }
+    val m = SqlText.mask(sql)
+    // the first '?' outside strings
+    val qi = m.indexOf('?')
     if (qi < 0) return sql
     // matching ':' forward at same depth (nested ternaries stack)
-    var j = qi + 1; var depth = 0; var s2 = false; var pend = 0; var ci = -1
+    var j = qi + 1; var depth = 0; var pend = 0; var ci = -1
     while (j < sql.length && ci < 0) {
-      val c = sql.charAt(j)
-      if (s2) { if (c == '\'') s2 = false }
-      else c match {
-        case '\'' => s2 = true
+      m.charAt(j) match {
         case '(' | '[' => depth += 1
         case ')' | ']' => depth -= 1
         case '?' if depth == 0 => pend += 1
@@ -1223,12 +1156,10 @@ object ChSql {
     val kw = Set("select", "where", "having", "when", "then", "else", "on",
       "by", "as", "and", "or", "union", "all", "settings")
     // cond: walk back from '?'
-    var k = qi - 1; var d = 0; var s3 = false; var condStart = 0
+    var k = qi - 1; var d = 0; var condStart = 0
     while (k >= 0 && condStart == 0) {
-      val c = sql.charAt(k)
-      if (s3) { if (c == '\'') s3 = false }
-      else c match {
-        case '\'' => s3 = true
+      val c = m.charAt(k)
+      c match {
         case ')' | ']' => d += 1
         case '(' | '[' => if (d == 0) condStart = k + 1 else d -= 1
         case ',' if d == 0 => condStart = k + 1
@@ -1251,14 +1182,12 @@ object ChSql {
       k -= 1
     }
     // else-branch: walk forward from ':'
-    var e = ci + 1; var d2 = 0; var s4 = false; var elseEnd = sql.length
+    var e = ci + 1; var d2 = 0; var elseEnd = sql.length
     val tailKw = Set("from", "as", "where", "group", "order", "limit",
       "settings", "union", "having", "format", "then", "else", "end", "when")
     while (e < sql.length && elseEnd == sql.length) {
-      val c = sql.charAt(e)
-      if (s4) { if (c == '\'') s4 = false }
-      else c match {
-        case '\'' => s4 = true
+      val c = m.charAt(e)
+      c match {
         case '(' | '[' => d2 += 1
         case ')' | ']' => if (d2 == 0) elseEnd = e else d2 -= 1
         case ',' if d2 == 0 => elseEnd = e
@@ -1283,14 +1212,14 @@ object ChSql {
   }
 
   private[sqlfront] def rewriteArrayLiterals(sql: String): String = {
+    val m = SqlText.mask(sql)
     val sb = new StringBuilder
     var i = 0
-    var inStr = false
     while (i < sql.length) {
       val c = sql.charAt(i)
-      if (inStr) { sb.append(c); if (c == '\'') inStr = false; i += 1 }
-      else if (c == '\'') { sb.append(c); inStr = true; i += 1 }
-      else if (c == '[') {
+      val end = if (m.charAt(i) == '[') SqlText.matching(m, i) else -1
+      if (end < 0) { sb.append(c); i += 1 }
+      else {
         // subscript only when the bracket DIRECTLY follows an expression
         // (identifier char, ')' or ']'); whitespace before '[' => literal
         val prev = if (sb.nonEmpty) sb.charAt(sb.length - 1) else ' '
@@ -1300,61 +1229,27 @@ object ChSql {
           // CH subscripts are 1-based; Spark's [] is 0-based. Rewrite
           // `prim[idx]` -> `element_at(prim, idx)` by backtracking to the
           // start of the preceding primary expression.
-          var depth = 0; var j = i; var end = -1; var s2 = false
-          while (j < sql.length && end < 0) {
-            val ch = sql.charAt(j)
-            if (s2) { if (ch == '\'') s2 = false }
-            else if (ch == '\'') s2 = true
-            else if (ch == '[') depth += 1
-            else if (ch == ']') { depth -= 1; if (depth == 0) end = j }
-            j += 1
-          }
-          if (end < 0) { sb.append(c); i += 1 }
-          else {
-            val idx = rewriteArrayLiterals(sql.substring(i + 1, end))
-            // backtrack over the primary expression in sb
-            var k = sb.length - 1
-            def matchBack(open: Char, close: Char): Unit = {
-              var d = 0
-              while (k >= 0) {
-                val ch = sb.charAt(k)
-                if (ch == close) d += 1
-                else if (ch == open) { d -= 1; if (d == 0) { k -= 1; return } }
-                k -= 1
-              }
-            }
-            if (sb.charAt(k) == ')') matchBack('(', ')')
-            else if (sb.charAt(k) == ']') matchBack('[', ']')
-            else if (sb.charAt(k) == '}') matchBack('{', '}') // map literal
-            while (k >= 0 && (Character.isLetterOrDigit(sb.charAt(k)) || sb.charAt(k) == '_' || sb.charAt(k) == '.'))
-              k -= 1
-            val prim = sb.substring(k + 1)
-            sb.setLength(k + 1)
-            // ch_element_at: CH out-of-bounds / missing-key access
-            // returns the element-type DEFAULT, not NULL
-            sb.append("ch_element_at(").append(prim).append(", ").append(idx).append(")")
-            i = end + 1
-          }
+          val idx = rewriteArrayLiterals(sql.substring(i + 1, end))
+          // backtrack over the primary expression in sb: a bracketed
+          // group (a map literal for '}'), then any name attached to it
+          var k = sb.length - 1
+          if (")]}".indexOf(sb.charAt(k)) >= 0)
+            k = math.max(SqlText.matching(SqlText.mask(sb.toString), k), 0) - 1
+          while (k >= 0 && (Character.isLetterOrDigit(sb.charAt(k)) || sb.charAt(k) == '_' || sb.charAt(k) == '.'))
+            k -= 1
+          val prim = sb.substring(k + 1)
+          sb.setLength(k + 1)
+          // ch_element_at: CH out-of-bounds / missing-key access
+          // returns the element-type DEFAULT, not NULL
+          sb.append("ch_element_at(").append(prim).append(", ").append(idx).append(")")
+          i = end + 1
         }
         else {
-          // find matching ] at depth 0
-          var depth = 0; var j = i; var end = -1; var s2 = false
-          while (j < sql.length && end < 0) {
-            val ch = sql.charAt(j)
-            if (s2) { if (ch == '\'') s2 = false }
-            else if (ch == '\'') s2 = true
-            else if (ch == '[') depth += 1
-            else if (ch == ']') { depth -= 1; if (depth == 0) end = j }
-            j += 1
-          }
-          if (end < 0) { sb.append(c); i += 1 }
-          else {
-            val innerRewritten = rewriteArrayLiterals(sql.substring(i + 1, end))
-            sb.append("array(").append(innerRewritten).append(")")
-            i = end + 1
-          }
+          val innerRewritten = rewriteArrayLiterals(sql.substring(i + 1, end))
+          sb.append("array(").append(innerRewritten).append(")")
+          i = end + 1
         }
-      } else { sb.append(c); i += 1 }
+      }
     }
     sb.toString
   }
@@ -1682,10 +1577,10 @@ object ChSql {
       .replaceAll("(?i)\\bcount\\(", "count(")
     val kwRe = "(?i)\\b(WITH|SELECT|GROUP BY|ORDER BY)\\b".r
     // split at top-level clause keywords only (depth 0)
-    val marks = kwRe.findAllMatchIn(compact).filter { m =>
-      val pre = compact.take(m.start)
-      pre.count(_ == '(') == pre.count(_ == ')') &&
-        pre.count(_ == '\'') % 2 == 0
+    val masked = SqlText.mask(compact)
+    val marks = kwRe.findAllMatchIn(masked).filter { m =>
+      val pre = masked.take(m.start)
+      pre.count(_ == '(') == pre.count(_ == ')')
     }.toVector
     val clauses =
       if (marks.isEmpty) Vector(("", compact))
@@ -1923,19 +1818,17 @@ object ChSql {
     val sb = new StringBuilder
     var i = 0
     while (i < s.length) {
-      val c = s.charAt(i)
-      if (c != '\'') { sb.append(c); i += 1 }
+      val end = if (s.charAt(i) == '\'') SqlText.literalEnd(s, i) else -1
+      if (end < 0) { sb.append(s.charAt(i)); i += 1 }
       else {
         // parse the literal value (CH lexer: recognized escapes decode,
-        // unknown escapes KEEP the backslash)
+        // unknown escapes KEEP the backslash, '' is one quote)
         val v = new StringBuilder
-        i += 1
-        var closed = false
-        while (i < s.length && !closed) {
-          val ch = s.charAt(i)
-          if (ch == '\\' && i + 1 < s.length) {
-            val n = s.charAt(i + 1)
-            n match {
+        var j = i + 1
+        while (j < end - 1) {
+          val ch = s.charAt(j)
+          if (ch == '\\') {
+            s.charAt(j + 1) match {
               case '\\' => v.append('\\')
               case '\'' => v.append('\'')
               case 'n' => v.append('\n')
@@ -1944,10 +1837,10 @@ object ChSql {
               case '0' => v.append('\u0000')
               case other => v.append('\\').append(other)
             }
-            i += 2
-          } else if (ch == '\'') { closed = true; i += 1 }
-          else { v.append(ch); i += 1 }
+            j += 2
+          } else { v.append(ch); j += (if (ch == '\'') 2 else 1) }
         }
+        i = end
         sb.append('\'')
         v.foreach {
           case '\\' => sb.append("\\\\")
@@ -2396,15 +2289,14 @@ object ChSql {
     // items run to the next top-level clause keyword (or end/paren close)
     val stops = Seq("where", "prewhere", "group", "having", "order",
       "limit", "settings", "union", "format", "qualify")
-    var i = m.end; var depth = 0; var inStr = false; var end = -1
+    val masked = SqlText.mask(q0)
+    var i = m.end; var depth = 0; var end = -1
     while (i < q0.length && end < 0) {
-      val ch = q0.charAt(i)
-      if (inStr) { if (ch == '\'') inStr = false }
-      else if (ch == '\'') inStr = true
-      else if (ch == '(') depth += 1
+      val ch = masked.charAt(i)
+      if (ch == '(') depth += 1
       else if (ch == ')') { depth -= 1; if (depth < 0) end = i }
-      else if (depth == 0 && (i == 0 || !Character.isLetterOrDigit(q0.charAt(i - 1)))) {
-        val w = q0.substring(i).takeWhile(_.isLetter).toLowerCase
+      else if (depth == 0 && (i == 0 || !Character.isLetterOrDigit(masked.charAt(i - 1)))) {
+        val w = masked.substring(i).takeWhile(_.isLetter).toLowerCase
         if (stops.contains(w)) end = i
       }
       i += 1
@@ -4012,19 +3904,11 @@ object ChSql {
     * is behavior-equivalent for everything the stateless suite asserts. */
   private def rewriteGenerateRandom(q0: String): String = {
     if (!q0.toLowerCase.contains("generaterandom")) return q0
-    val re = "(?i)\\bgenerateRandom\\s*\\(".r
-    val m = re.findFirstMatchIn(q0).getOrElse(return q0)
-    var i = m.end; var depth = 1; var inStr = false
-    while (i < q0.length && depth > 0) {
-      val c = q0.charAt(i)
-      if (inStr) { if (c == '\'') inStr = false }
-      else if (c == '\'') inStr = true
-      else if (c == '(') depth += 1
-      else if (c == ')') depth -= 1
-      i += 1
-    }
-    if (depth != 0) return q0
-    val args = splitArgs(q0.substring(m.end, i - 1)).map(_.trim)
+    val masked = SqlText.mask(q0)
+    val m = "(?i)\\bgenerateRandom\\s*\\(".r.findFirstMatchIn(masked).getOrElse(return q0)
+    val close = SqlText.matching(masked, m.end - 1)
+    if (close < 0) return q0
+    val args = splitArgs(q0.substring(m.end, close)).map(_.trim)
     if (args.isEmpty || !args.head.startsWith("'")) return q0
     // reference bounds: absurd max_string/max_array lengths are rejected
     // with TOO_LARGE_* — leave the call unrewritten so it fails loudly
@@ -4036,7 +3920,7 @@ object ChSql {
     val sel = cols.map(c =>
       s"CAST(NULL AS ${c.dataType.sql}) AS `${c.name}`").mkString(", ")
     val sub = s"(SELECT $sel FROM system_numbers LIMIT 65536)"
-    rewriteGenerateRandom(q0.substring(0, m.start) + sub + q0.substring(i))
+    rewriteGenerateRandom(q0.substring(0, m.start) + sub + q0.substring(close + 1))
   }
 
   /** `ORDER BY key [ASC|DESC] WITH FILL [FROM f] [TO t] [STEP s]
@@ -4155,20 +4039,13 @@ object ChSql {
   private def rewriteRemoteCluster(q0: String): String = {
     val lower = q0.toLowerCase
     if (!lower.contains("remote") && !lower.contains("cluster")) return q0
-    val re = "(?i)\\b(remoteSecure|remote|clusterAllReplicas|cluster)\\s*\\(".r
-    val m = re.findFirstMatchIn(q0).getOrElse(return q0)
-    var i = m.end; var depth = 1; var inStr = false
-    while (i < q0.length && depth > 0) {
-      val c = q0.charAt(i)
-      if (inStr) { if (c == '\'') inStr = false }
-      else if (c == '\'') inStr = true
-      else if (c == '(') depth += 1
-      else if (c == ')') depth -= 1
-      i += 1
-    }
-    if (depth != 0) return q0
+    val masked = SqlText.mask(q0)
+    val m = "(?i)\\b(remoteSecure|remote|clusterAllReplicas|cluster)\\s*\\(".r
+      .findFirstMatchIn(masked).getOrElse(return q0)
+    val close = SqlText.matching(masked, m.end - 1)
+    if (close < 0) return q0
     val fn = m.group(1).toLowerCase
-    val args = splitArgs(q0.substring(m.end, i - 1)).map(_.trim)
+    val args = splitArgs(q0.substring(m.end, close)).map(_.trim)
     if (args.isEmpty) return q0
     def unq(s: String) = s.stripPrefix("'").stripSuffix("'")
     val shards: Int =
@@ -4234,7 +4111,7 @@ object ChSql {
           val shardCol = if (withShardNum) s", CAST($k AS INT) AS _shard_num" else ""
           s"SELECT *$shardCol FROM $target"
         }.mkString("(", " UNION ALL ", ")")
-    rewriteRemoteCluster(q0.substring(0, m.start) + sub + q0.substring(i))
+    rewriteRemoteCluster(q0.substring(0, m.start) + sub + q0.substring(close + 1))
   }
 
   /** Positional make_interval(...) argument list for one (unit, n) pair. */
@@ -4252,15 +4129,14 @@ object ChSql {
     if (!"(?is)^\\s*WITH\\b".r.findFirstIn(q0).isDefined) return q0
     val start = "(?is)^\\s*WITH\\b".r.findFirstMatchIn(q0).get.end
     // find the SELECT that terminates the WITH list (depth 0, word start)
-    var i = start; var depth = 0; var inStr = false; var selAt = -1
+    val masked = SqlText.mask(q0)
+    var i = start; var depth = 0; var selAt = -1
     while (i < q0.length && selAt < 0) {
-      val c = q0.charAt(i)
-      if (inStr) { if (c == '\'') inStr = false }
-      else if (c == '\'') inStr = true
-      else if (c == '(') depth += 1
+      val c = masked.charAt(i)
+      if (c == '(') depth += 1
       else if (c == ')') depth -= 1
       else if (depth == 0 && (c == 'S' || c == 's') &&
-        q0.regionMatches(true, i, "SELECT", 0, 6) &&
+        masked.regionMatches(true, i, "SELECT", 0, 6) &&
         !Character.isLetterOrDigit(q0.charAt(i - 1)) && q0.charAt(i - 1) != '_')
         selAt = i
       i += 1
@@ -4289,9 +4165,10 @@ object ChSql {
     * and occurrences inside single-quoted string literals. */
   private def substIdent(text: String, ident: String, repl: String): String = {
     val re = s"\\b${java.util.regex.Pattern.quote(ident)}\\b".r
+    val masked = SqlText.mask(text)
     val sb = new StringBuilder; var last = 0
     for (m <- re.findAllMatchIn(text)) {
-      val inStr = text.substring(0, m.start).count(_ == '\'') % 2 == 1
+      val inStr = masked.charAt(m.start) != text.charAt(m.start)
       val qualified = m.start > 0 && text.charAt(m.start - 1) == '.'
       // an alias-definition site ("AS x") must keep its name
       val isAliasDef = text.substring(0, m.start)
@@ -4313,22 +4190,15 @@ object ChSql {
     // the right side is a named table OR a parenthesized subquery
     val re = ("(?is)\\bASOF\\s+(LEFT\\s+|INNER\\s+)?JOIN\\s+" +
       "(\\w+|\\()").r
-    val m = re.findFirstMatchIn(q0).getOrElse(return q0)
+    val masked = SqlText.mask(q0)
+    val m = re.findFirstMatchIn(masked).getOrElse(return q0)
     val left = Option(m.group(1)).exists(_.trim.equalsIgnoreCase("LEFT"))
     // resolve the right relation text and the position after it
     val (table, afterRel) =
       if (m.group(2) == "(") {
-        var j = m.end; var d = 1; var inS = false
-        while (j < q0.length && d > 0) {
-          val c = q0.charAt(j)
-          if (inS) { if (c == '\'') inS = false }
-          else if (c == '\'') inS = true
-          else if (c == '(') d += 1
-          else if (c == ')') d -= 1
-          j += 1
-        }
-        if (d != 0) return q0
-        (q0.substring(m.end - 1, j), j)
+        val close = SqlText.matching(masked, m.end - 1)
+        if (close < 0) return q0
+        (q0.substring(m.end - 1, close + 1), close + 1)
       } else (m.group(2), m.end)
     val tailRe = "(?is)^\\s*(?:AS\\s+)?([A-Za-z_]\\w*)?\\s*\\bON\\s+".r
     val tm = tailRe.findFirstMatchIn(q0.substring(afterRel))
@@ -4338,14 +4208,12 @@ object ChSql {
         if (m.group(2) == "(") return q0 else table)
     val condStart = afterRel + tm.end
     // condition runs to the next clause keyword at paren depth 0
-    var i = condStart; var depth = 0; var inStr = false; var end = q0.length
+    var i = condStart; var depth = 0; var end = q0.length
     val stops = Seq("WHERE", "GROUP", "ORDER", "LIMIT", "HAVING", "UNION",
       "SETTINGS", "QUALIFY")
     while (i < q0.length && end == q0.length) {
-      val c = q0.charAt(i)
-      if (inStr) { if (c == '\'') inStr = false }
-      else if (c == '\'') inStr = true
-      else if (c == '(') depth += 1
+      val c = masked.charAt(i)
+      if (c == '(') depth += 1
       else if (c == ')') depth -= 1
       else if (depth == 0 && Character.isLetter(c) &&
         !Character.isLetterOrDigit(q0.charAt(i - 1)) && q0.charAt(i - 1) != '_' &&
@@ -4358,28 +4226,18 @@ object ChSql {
     def stripOuter(s0: String): String = {
       var s = s0.trim; var changed = true
       while (changed && s.length >= 2 && s.head == '(' && s.last == ')') {
-        var d = 0; var ok = true; var inS = false; var j = 0
-        while (j < s.length - 1) {
-          val c = s.charAt(j)
-          if (inS) { if (c == '\'') inS = false }
-          else if (c == '\'') inS = true
-          else if (c == '(') d += 1
-          else if (c == ')') { d -= 1; if (d == 0) ok = false }
-          j += 1
-        }
-        if (ok && d == 1) s = s.substring(1, s.length - 1).trim
+        if (SqlText.matching(SqlText.mask(s), 0) == s.length - 1) s = s.substring(1, s.length - 1).trim
         else changed = false
       }
       s
     }
     def splitTopAnd(s: String): Seq[String] = {
       val out = scala.collection.mutable.ArrayBuffer.empty[String]
-      var d = 0; var inS = false; var last = 0; var j = 0
+      val sm = SqlText.mask(s)
+      var d = 0; var last = 0; var j = 0
       while (j < s.length) {
-        val c = s.charAt(j)
-        if (inS) { if (c == '\'') inS = false }
-        else if (c == '\'') inS = true
-        else if (c == '(') d += 1
+        val c = sm.charAt(j)
+        if (c == '(') d += 1
         else if (c == ')') d -= 1
         else if (d == 0 && (c == 'A' || c == 'a') &&
             s.regionMatches(true, j, "AND", 0, 3) &&
@@ -4440,18 +4298,16 @@ object ChSql {
     * parameterized CH types become a direct Spark CAST via ChTypes. */
   private def chAsCast(arg: String): Option[String] = {
     // last top-level ` AS ` outside strings/parens
-    var i = 0; var depth = 0; var inStr = false; var asIdx = -1
+    val m = SqlText.mask(arg)
+    var i = 0; var depth = 0; var asIdx = -1
     while (i + 4 <= arg.length) {
-      val c = arg.charAt(i)
-      if (inStr) { if (c == '\'') inStr = false }
-      else c match {
-        case '\'' => inStr = true
+      m.charAt(i) match {
         case '(' | '[' => depth += 1
         case ')' | ']' => depth -= 1
         case 'A' | 'a' if depth == 0 && i > 0 &&
-            arg.charAt(i - 1).isWhitespace &&
-            (arg.charAt(i + 1) == 'S' || arg.charAt(i + 1) == 's') &&
-            i + 2 < arg.length && arg.charAt(i + 2).isWhitespace =>
+            m.charAt(i - 1).isWhitespace &&
+            (m.charAt(i + 1) == 'S' || m.charAt(i + 1) == 's') &&
+            i + 2 < arg.length && m.charAt(i + 2).isWhitespace =>
           asIdx = i
         case _ =>
       }
@@ -4479,21 +4335,15 @@ object ChSql {
     * DataFrame operator (ops/Ops.anyJoin). */
   private def rewriteAnyJoin(q0: String): String = {
     val re = "(?i)\\bANY\\s+(LEFT|INNER)\\s+(?:OUTER\\s+)?JOIN\\s*".r
-    val m = re.findFirstMatchIn(q0).getOrElse(return q0)
+    val masked = SqlText.mask(q0)
+    val m = re.findFirstMatchIn(masked).getOrElse(return q0)
     var i = m.end
     while (i < q0.length && q0.charAt(i).isWhitespace) i += 1
     if (i >= q0.length) return q0
     val tStart = i
     if (q0.charAt(i) == '(') {
-      var depth = 0; var inStr = false
-      while (i < q0.length && (depth > 0 || i == tStart)) {
-        val c = q0.charAt(i)
-        if (inStr) { if (c == '\'') inStr = false }
-        else if (c == '\'') inStr = true
-        else if (c == '(') depth += 1
-        else if (c == ')') depth -= 1
-        i += 1
-      }
+      val close = SqlText.matching(masked, i)
+      i = if (close < 0) q0.length else close + 1
     } else {
       while (i < q0.length && (q0.charAt(i).isLetterOrDigit ||
         q0.charAt(i) == '_' || q0.charAt(i) == '.')) i += 1
@@ -4511,14 +4361,12 @@ object ChSql {
         .getOrElse(target.takeWhile(_ != '(')) // bare table name as alias
       if (alias.isEmpty) return q0
       val condStart = i + om.end
-      var j = condStart; var d = 0; var inS = false; var end = q0.length
+      var j = condStart; var d = 0; var end = q0.length
       val stops = Seq("WHERE", "GROUP", "ORDER", "LIMIT", "HAVING",
         "UNION", "SETTINGS", "QUALIFY", "JOIN", "FORMAT")
       while (j < q0.length && end == q0.length) {
-        val c = q0.charAt(j)
-        if (inS) { if (c == '\'') inS = false }
-        else if (c == '\'') inS = true
-        else if (c == '(') d += 1
+        val c = masked.charAt(j)
+        if (c == '(') d += 1
         else if (c == ')') d -= 1
         else if (d == 0 && Character.isLetter(c) &&
           !Character.isLetterOrDigit(q0.charAt(j - 1)) && q0.charAt(j - 1) != '_' &&
@@ -4565,21 +4413,18 @@ object ChSql {
     * number, or a balanced paren group (with any attached call name). */
   private def rewriteColonCast(q0: String): String = {
     var q = q0
-    var idx = q.indexOf("::")
+    // never touch :: inside a string literal (IPv6 text like '::ffff:…')
+    var masked = SqlText.mask(q)
+    var idx = masked.indexOf("::")
     var guard = 0
     while (idx > 0 && guard < 100) {
       guard += 1
-      // never touch :: inside a string literal (IPv6 text like '::ffff:…')
-      var quotes = 0; var p = 0
-      while (p < idx) { if (q.charAt(p) == '\'') quotes += 1; p += 1 }
-      // type name after :: (None also when inside a string)
-      val tm =
-        if (quotes % 2 == 1) None
-        else ("^::\\s*([A-Za-z_]\\w*)" +
+      // type name after ::
+      val tm = ("^::\\s*([A-Za-z_]\\w*)" +
           "(\\s*\\([^()]*(?:\\([^()]*\\)[^()]*)*\\))?").r
           .findFirstMatchIn(q.substring(idx))
       tm match {
-        case None => idx = q.indexOf("::", idx + 2)
+        case None => idx = masked.indexOf("::", idx + 2)
         case Some(m) =>
           val tpe = m.group(1)
           val typeArgs = Option(m.group(2)).map(_.trim).getOrElse("")
@@ -4588,17 +4433,9 @@ object ChSql {
           var s = idx - 1
           while (s >= 0 && q.charAt(s).isWhitespace) s -= 1
           var start = -1
-          if (s >= 0 && q.charAt(s) == '\'') {
-            var j = s - 1
-            while (j >= 0 && !(q.charAt(j) == '\'' && (j == 0 || q.charAt(j - 1) != '\\'))) j -= 1
-            start = j
-          } else if (s >= 0 && q.charAt(s) == ')') {
-            var depth = 0; var j = s
-            while (j >= 0 && start < 0) {
-              if (q.charAt(j) == ')') depth += 1
-              else if (q.charAt(j) == '(') { depth -= 1; if (depth == 0) start = j }
-              j -= 1
-            }
+          if (s >= 0 && q.charAt(s) == '\'') start = masked.lastIndexOf('\'', s - 1)
+          else if (s >= 0 && q.charAt(s) == ')') {
+            start = SqlText.matching(masked, s)
             // attached call name
             while (start > 0 && (q.charAt(start - 1).isLetterOrDigit || q.charAt(start - 1) == '_')) start -= 1
           } else if (s >= 0 && (q.charAt(s).isLetterOrDigit || q.charAt(s) == '_' || q.charAt(s) == '.')) {
@@ -4606,7 +4443,7 @@ object ChSql {
             while (j >= 0 && (q.charAt(j).isLetterOrDigit || q.charAt(j) == '_' || q.charAt(j) == '.')) j -= 1
             start = j + 1
           }
-          if (start < 0) idx = q.indexOf("::", afterEnd)
+          if (start < 0) idx = masked.indexOf("::", afterEnd)
           else {
             val prim = q.substring(start, s + 1)
             // parameterized type (Decimal(p,s), DateTime64(3), ...):
@@ -4636,7 +4473,8 @@ object ChSql {
                     s"ILLEGAL_TYPE_OF_ARGUMENT: cannot cast to $tpe$typeArgs")
               }
             q = q.substring(0, start) + repl + q.substring(afterEnd)
-            idx = q.indexOf("::")
+            masked = SqlText.mask(q)
+            idx = masked.indexOf("::")
           }
       }
     }
@@ -4649,14 +4487,12 @@ object ChSql {
     // group the alternation so both \b anchors apply to EVERY alternative
     // (ungrouped, "UNION|INTERSECT|EXCEPT" would match INTERSECT inside
     // identifiers like 'intersections')
-    val re = ("(?i)\\b(?:" + kw + ")\\b").r
-    var depth = 0; var inStr = false; var i = 0
-    val hits = re.findAllMatchIn(s).map(_.start).toSet
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (inStr) { if (c == '\'') inStr = false }
-      else if (c == '\'') inStr = true
-      else if (c == '(') depth += 1
+    val m = SqlText.mask(s)
+    var depth = 0; var i = 0
+    val hits = ("(?i)\\b(?:" + kw + ")\\b").r.findAllMatchIn(m).map(_.start).toSet
+    while (i < m.length) {
+      val c = m.charAt(i)
+      if (c == '(') depth += 1
       else if (c == ')') depth -= 1
       else if (depth == 0 && hits(i)) return i
       i += 1
@@ -4675,52 +4511,27 @@ object ChSql {
     * every parenthesized sub-SELECT. */
   private def hoistNestedArrayJoin(q0: String): String = {
     if (!"(?i)\\barrayJoin\\s*\\(".r.findFirstIn(q0).isDefined) return q0
-    def balancedEnd(s: String, open: Int): Int = {
-      var depth = 0; var inStr = false; var i = open
-      while (i < s.length) {
-        val c = s.charAt(i)
-        if (inStr) { if (c == '\'') inStr = false }
-        else if (c == '\'') inStr = true
-        else if (c == '(') depth += 1
-        else if (c == ')') { depth -= 1; if (depth == 0) return i }
-        i += 1
-      }
-      -1
-    }
     // blank out parenthesized sub-SELECT blocks: their arrayJoins belong
     // to THEIR select list (walk() already transformed them), not ours
     def maskSubSelects(s: String): String = {
-      val sb = new StringBuilder(s); var i = 0; var inStr = false
-      while (i < sb.length) {
-        val c = sb.charAt(i)
-        if (inStr) { if (c == '\'') inStr = false; i += 1 }
-        else if (c == '\'') { inStr = true; i += 1 }
-        else if (c == '(' &&
-            "(?is)^\\(\\s*SELECT\\b".r.findFirstIn(sb.substring(i)).isDefined) {
-          val end = balancedEnd(sb.toString, i)
-          if (end < 0) i = sb.length
-          else { var j = i; while (j <= end) { sb.setCharAt(j, ' '); j += 1 }; i = end + 1 }
-        } else i += 1
+      val m = SqlText.mask(s)
+      val sb = new StringBuilder(s); var i = m.indexOf('(')
+      while (i >= 0) {
+        if ("(?is)^\\(\\s*SELECT\\b".r.findFirstIn(m.substring(i)).isEmpty) i = m.indexOf('(', i + 1)
+        else {
+          val end = SqlText.matching(m, i)
+          if (end < 0) i = -1
+          else { for (j <- i to end) sb.setCharAt(j, ' '); i = m.indexOf('(', end + 1) }
+        }
       }
       sb.toString
     }
-    // blank the CONTENT of single-quoted literals (length-preserving) so
-    // 'arrayJoin(x)' inside a string is never collected or rewritten
-    def maskStrings(s: String): String = {
-      val sb = new StringBuilder(s); var i = 0; var inStr = false
-      while (i < sb.length) {
-        val c = sb.charAt(i)
-        if (inStr) { if (c == '\'') inStr = false else sb.setCharAt(i, ' ') }
-        else if (c == '\'') inStr = true
-        i += 1
-      }
-      sb.toString
-    }
-    // collect arrayJoin(<balanced>) call texts appearing in `s`
+    // collect arrayJoin(<balanced>) call texts appearing in `s`, never
+    // from inside a string ('arrayJoin(x)')
     def ajCalls(s: String): Seq[String] = {
-      val ms = maskStrings(s)
+      val ms = SqlText.mask(s)
       "(?i)\\barrayJoin\\s*\\(".r.findAllMatchIn(ms).toSeq.flatMap { m =>
-        val end = balancedEnd(s, ms.indexOf('(', m.start))
+        val end = SqlText.matching(ms, ms.indexOf('(', m.start))
         if (end < 0) None else Some(s.substring(m.start, end + 1))
       }
     }
@@ -4772,23 +4583,20 @@ object ChSql {
         // literal replacement of every occurrence of the call text,
         // skipping occurrences that START inside a quoted literal (the
         // call text itself may CONTAIN literals — e.g.
-        // arrayJoin(['a','b']) — so the haystack cannot be masked)
-        def inString(s: String, pos: Int): Boolean =
-          s.substring(0, pos).count(_ == '\'') % 2 == 1
-        def nextIdx(s: String, from: Int): Int = {
-          var i = s.indexOf(aj, from)
-          while (i >= 0 && inString(s, i)) i = s.indexOf(aj, i + 1)
-          i
-        }
-        var out = list
-        var idx = nextIdx(out, 0)
+        // arrayJoin(['a','b']) — so it is searched in the unmasked text)
+        val lm = SqlText.mask(list)
+        val sb = new StringBuilder; var last = 0
+        var idx = list.indexOf(aj)
         while (idx >= 0) {
-          out = out.substring(0, idx) + "__ajh" + out.substring(idx + aj.length)
-          idx = nextIdx(out, idx)
+          if (lm.charAt(idx) != list.charAt(idx)) idx = list.indexOf(aj, idx + 1)
+          else {
+            sb.append(list.substring(last, idx)).append("__ajh")
+            last = idx + aj.length; idx = list.indexOf(aj, last)
+          }
         }
-        out
+        sb.append(list.substring(last)).toString
       }
-      if (maskStrings(listH).contains("arrayJoin")) return seg // partial-text miss: bail
+      if (SqlText.mask(listH).contains("arrayJoin")) return seg // partial-text miss: bail
       val tail = seg.substring(listEnd)
       if (fromIdx < 0) {
         // FROM-less: ORDER/LIMIT (if any) stay outside
@@ -4808,13 +4616,11 @@ object ChSql {
     }
     // innermost-first recursion over parenthesized sub-SELECTs
     def walk(s: String): String = {
-      val sb = new StringBuilder; var i = 0; var inStr = false
+      val m = SqlText.mask(s)
+      val sb = new StringBuilder; var i = 0
       while (i < s.length) {
-        val c = s.charAt(i)
-        if (inStr) { sb.append(c); if (c == '\'') inStr = false; i += 1 }
-        else if (c == '\'') { sb.append(c); inStr = true; i += 1 }
-        else if (c == '(') {
-          val end = balancedEnd(s, i)
+        if (m.charAt(i) == '(') {
+          val end = SqlText.matching(m, i)
           if (end < 0) { sb.append(s.substring(i)); i = s.length }
           else {
             val inner = s.substring(i + 1, end)
@@ -4824,31 +4630,21 @@ object ChSql {
             sb.append('(').append(t).append(')')
             i = end + 1
           }
-        } else { sb.append(c); i += 1 }
+        } else { sb.append(s.charAt(i)); i += 1 }
       }
       sb.toString
     }
     transformSelect(walk(q0))
   }
 
-  /** Apply a regex replacement with matching done on a copy whose
-    * single-quoted literal CONTENT is blanked (length-preserving), so
-    * tokens inside strings are never rewritten. The replacement callback
-    * receives the match (positions valid in the original text). */
+  /** Apply a regex replacement with matching done on `SqlText.mask(s)`,
+    * so tokens inside strings and comments are never rewritten. The
+    * replacement callback receives the match (positions valid in the
+    * original text). */
   private def replaceOutsideStrings(s: String, re: scala.util.matching.Regex)(
       repl: scala.util.matching.Regex.Match => String): String = {
-    val masked = {
-      val sb = new StringBuilder(s); var i = 0; var inStr = false
-      while (i < sb.length) {
-        val c = sb.charAt(i)
-        if (inStr) { if (c == '\'') inStr = false else sb.setCharAt(i, ' ') }
-        else if (c == '\'') inStr = true
-        i += 1
-      }
-      sb.toString
-    }
     val out = new StringBuilder; var last = 0
-    for (m <- re.findAllMatchIn(masked)) {
+    for (m <- re.findAllMatchIn(SqlText.mask(s))) {
       out.append(s.substring(last, m.start)).append(repl(m))
       last = m.end
     }
@@ -4865,24 +4661,13 @@ object ChSql {
     val sb = new StringBuilder
     var i = 0
     while (i < q.length) {
-      val c = q.charAt(i)
-      if (c != '\'') { sb.append(c); i += 1 }
+      val end = if (q.charAt(i) == '\'') SqlText.literalEnd(q, i) else -1
+      if (end < 0) { sb.append(q.charAt(i)); i += 1 }
       else {
-        val start = i
-        i += 1
-        val raw = new StringBuilder
-        var closed = false
-        while (i < q.length && !closed) {
-          val ch = q.charAt(i)
-          if (ch == '\\' && i + 1 < q.length) {
-            raw.append(ch).append(q.charAt(i + 1)); i += 2
-          } else if (ch == '\'') { closed = true; i += 1 }
-          else { raw.append(ch); i += 1 }
-        }
-        val rawS = raw.toString
+        val rawS = q.substring(i + 1, end - 1)
         // NOTE: append(q, start, i) would AUTO-TUPLE on scala's
         // StringBuilder (no 3-arg CharSequence overload) — substring it
-        if (!closed || !rawS.contains("\\x")) sb.append(q.substring(start, i))
+        if (!rawS.contains("\\x")) sb.append(q.substring(i, end))
         else {
           val out = new java.io.ByteArrayOutputStream
           var j = 0
@@ -4902,12 +4687,14 @@ object ChSql {
                   out.write(String.valueOf(o).getBytes(utf8)); j += 2
               }
             } else {
-              out.write(String.valueOf(ch).getBytes(utf8)); j += 1
+              out.write(String.valueOf(ch).getBytes(utf8))
+              j += (if (ch == '\'') 2 else 1) // '' is one quote
             }
           }
           val hex = out.toByteArray.map(b => f"${b & 0xff}%02X").mkString
           sb.append(s"CAST(unhex('$hex') AS STRING)")
         }
+        i = end
       }
     }
     sb.toString
@@ -4923,21 +4710,10 @@ object ChSql {
   private def rewriteFormatTableFn(q0: String): String = {
     if (!"(?i)\\bformat\\s*\\(".r.findFirstIn(q0).isDefined) return q0
     val fromRe = "(?i)\\b(FROM|JOIN)\\s+format\\s*\\(".r
-    val m = fromRe.findFirstMatchIn(q0).getOrElse(return q0)
-    val open = q0.indexOf('(', m.start + m.group(1).length)
-    // find the balanced close
-    var i = open; var depth = 0; var inStr = false; var close = -1
-    while (i < q0.length && close < 0) {
-      val c = q0.charAt(i)
-      if (inStr) {
-        if (c == '\\' && i + 1 < q0.length) i += 1
-        else if (c == '\'') inStr = false
-      }
-      else if (c == '\'') inStr = true
-      else if (c == '(') depth += 1
-      else if (c == ')') { depth -= 1; if (depth == 0) close = i }
-      i += 1
-    }
+    val masked = SqlText.mask(q0)
+    val m = fromRe.findFirstMatchIn(masked).getOrElse(return q0)
+    val open = m.end - 1
+    val close = SqlText.matching(masked, open)
     if (close < 0) return q0
     val args = splitArgs(q0.substring(open + 1, close)).map(_.trim)
     if (args.length < 2 || args.length > 3) return q0
@@ -5261,10 +5037,11 @@ object ChSql {
     // a string literal containing "in (1,)" must not be rewritten.
     if ("(?is)\\bin\\s*\\(".r.findFirstIn(q).nonEmpty) {
       val inCommaRe = "(?is)\\b(in\\s*\\([^()]*?),\\s*\\)".r
+      val masked = SqlText.mask(q)
       val sb = new StringBuilder; var last = 0
       for (m <- inCommaRe.findAllMatchIn(q)) {
         sb.append(q.substring(last, m.start))
-        val inStr = q.substring(0, m.start).count(_ == '\'') % 2 == 1
+        val inStr = masked.charAt(m.start) != q.charAt(m.start)
         sb.append(if (inStr) m.matched else m.group(1) + ")")
         last = m.end
       }
@@ -5290,17 +5067,10 @@ object ChSql {
         guard += 1
         val mm = m.get
         val open = from + mm.end - 1
-        var j = open + 1; var d = 1; var inS = false
-        while (j < q.length && d > 0) {
-          val c = q.charAt(j)
-          if (inS) { if (c == '\'') inS = false }
-          else if (c == '\'') inS = true
-          else if (c == '(') d += 1
-          else if (c == ')') d -= 1
-          j += 1
-        }
+        val close = SqlText.matching(SqlText.mask(q), open)
+        val j = close + 1
         val um =
-          if (d == 0)
+          if (close >= 0)
             "(?i)^\\s*(YEAR|QUARTER|MONTH|WEEK|DAY|HOUR|MINUTE|SECOND)S?\\b"
               .r.findFirstMatchIn(q.substring(j))
           else None
@@ -5396,39 +5166,15 @@ object ChSql {
 
     // CH tuple dot-number access: ident.1 -> tupleElement(ident, 1)
     // (float literals never match — the left side must be an identifier;
-    // matches inside string literals are skipped via quote parity)
-    locally {
-      val re = "\\b([A-Za-z_]\\w*)\\.(\\d+)\\b".r
-      val ms = re.findAllMatchIn(q).toList
-      if (ms.nonEmpty) {
-        val sb = new StringBuilder
-        var last = 0
-        for (m <- ms) {
-          val inStr = q.substring(0, m.start).count(_ == '\'') % 2 == 1
-          sb.append(q.substring(last, m.start))
-          if (inStr) sb.append(m.matched)
-          else sb.append(s"tupleElement(${m.group(1)}, ${m.group(2)})")
-          last = m.end
-        }
-        sb.append(q.substring(last))
-        q = sb.toString
-      }
-    }
+    // matches inside string literals are skipped)
+    q = replaceOutsideStrings(q, "\\b([A-Za-z_]\\w*)\\.(\\d+)\\b".r)(m =>
+      s"tupleElement(${m.group(1)}, ${m.group(2)})")
 
     // bare USING k[, k2] -> USING (k, k2) (CH allows the paren-less list)
     // — matched on a literal-masked copy so 'using lightweight' inside a
     // string stays untouched (02352)
     locally {
-      val masked = locally {
-        val sb = new StringBuilder(q); var i = 0; var inStr = false
-        while (i < sb.length) {
-          val c = sb.charAt(i)
-          if (inStr) { if (c == '\'') inStr = false else sb.setCharAt(i, ' ') }
-          else if (c == '\'') inStr = true
-          i += 1
-        }
-        sb.toString
-      }
+      val masked = SqlText.mask(q)
       val re = "(?is)\\bUSING\\s+(?!\\()([A-Za-z_]\\w*(?:\\s*,\\s*[A-Za-z_]\\w*)*)".r
       val sb = new StringBuilder(q)
       for (m <- re.findAllMatchIn(masked).toList.reverse)
@@ -5705,20 +5451,13 @@ object ChSql {
     // bare nan / inf / infinity are Float64 LITERALS in the reference
     // (ParserNumber), not identifiers; quote- and alias-aware
     if ("(?i)\\b(nan|inf|infinity)\\b".r.findFirstIn(q).isDefined) {
-      val litRe = "(?i)(?<![\\w.`'])(nan|inf|infinity)(?![\\w`'(])".r
-      val sb = new StringBuilder; var last = 0
-      for (m <- litRe.findAllMatchIn(q)) {
-        sb.append(q.substring(last, m.start))
-        val before = q.substring(0, m.start)
-        val inStr = before.count(_ == '\'') % 2 == 1
-        val isAlias = "(?is).*\\bAS\\s+$".r.pattern.matcher(before).matches
-        sb.append(
-          if (inStr || isAlias) m.matched
-          else if (m.group(1).equalsIgnoreCase("nan")) "CAST('NaN' AS DOUBLE)"
-          else "CAST('Infinity' AS DOUBLE)")
-        last = m.end
+      val q0 = q
+      q = replaceOutsideStrings(q0, "(?i)(?<![\\w.`'])(nan|inf|infinity)(?![\\w`'(])".r) { m =>
+        val isAlias = "(?is).*\\bAS\\s+$".r.pattern.matcher(q0.substring(0, m.start)).matches
+        if (isAlias) m.matched
+        else if (m.group(1).equalsIgnoreCase("nan")) "CAST('NaN' AS DOUBLE)"
+        else "CAST('Infinity' AS DOUBLE)"
       }
-      sb.append(q.substring(last)); q = sb.toString
     }
     // CH spells the semi/anti qualifier BEFORE the side (ParserJoin:
     // SEMI LEFT JOIN); Spark wants LEFT SEMI JOIN
@@ -8698,6 +8437,7 @@ object ChSql {
       val m = java.util.regex.Pattern
         .compile("(?is)GROUP BY\\s+(.*?)\\s+WITH\\s+TOTALS").matcher(q)
       val sb = new StringBuffer
+      lazy val masked = SqlText.mask(q)
       var nTotals = 0; var atTopLevel = false
       while (m.find()) {
         nTotals += 1
@@ -8712,16 +8452,8 @@ object ChSql {
         // paren depth at the match start in the ORIGINAL text: only a
         // depth-0 GROUP BY belongs to the outer select
         atTopLevel = {
-          var d = 0; var inStr = false; var i = 0
-          while (i < m.start) {
-            val c = q.charAt(i)
-            if (inStr) { if (c == '\'') inStr = false }
-            else if (c == '\'') inStr = true
-            else if (c == '(') d += 1
-            else if (c == ')') d -= 1
-            i += 1
-          }
-          d == 0
+          val pre = masked.substring(0, m.start)
+          pre.count(_ == '(') == pre.count(_ == ')')
         }
         m.appendReplacement(sb, java.util.regex.Matcher.quoteReplacement(
           s"GROUP BY GROUPING SETS (($keys), ())"))
@@ -8863,16 +8595,8 @@ object ChSql {
         // FROM (SELECT <aliased list>): derive the output names textually
         val fi = "(?is)\\bFROM\\s*\\(".r.findFirstMatchIn(q0)
         fi.flatMap { m =>
-          val open = q0.indexOf('(', m.end - 1)
-          var depth = 0; var i = open; var inStr = false; var closeI = -1
-          while (i < q0.length && closeI < 0) {
-            val c = q0.charAt(i)
-            if (inStr) { if (c == '\'') inStr = false }
-            else if (c == '\'') inStr = true
-            else if (c == '(') depth += 1
-            else if (c == ')') { depth -= 1; if (depth == 0) closeI = i }
-            i += 1
-          }
+          val open = m.end - 1
+          val closeI = SqlText.matching(SqlText.mask(q0), open)
           if (closeI < 0) None
           else {
             val inner = q0.substring(open + 1, closeI).trim
@@ -8894,16 +8618,8 @@ object ChSql {
       }
     // balanced-paren body starting at an opening paren index
     def parenBody(s: String, open: Int): Option[(String, Int)] = {
-      var depth = 0; var i = open; var inStr = false
-      while (i < s.length) {
-        val c = s.charAt(i)
-        if (inStr) { if (c == '\'') inStr = false }
-        else if (c == '\'') inStr = true
-        else if (c == '(') depth += 1
-        else if (c == ')') { depth -= 1; if (depth == 0) return Some((s.substring(open + 1, i), i)) }
-        i += 1
-      }
-      None
+      val close = SqlText.matching(SqlText.mask(s), open)
+      if (close < 0) None else Some((s.substring(open + 1, close), close))
     }
     // marker regexes capture a select-list prefix (SELECT or ',') in
     // group 1, so `x * REPLACE(...)` multiplication never false-positives
@@ -9119,44 +8835,17 @@ object ChSql {
   private[sqlfront] def checkFunctionArity(q0: String): Unit = {
     // scan a literal- and comment-masked copy: function-shaped text in a
     // string ('plus(1, 2, 3)') or a commented-out call must not trip the
-    // arity check (same discipline as the USING rewrite's masked copy)
-    val q = locally {
-      val sb = new StringBuilder(q0); var i = 0
-      var inStr = false; var inLine = false; var inBlock = false
-      while (i < sb.length) {
-        val c = sb.charAt(i)
-        if (inStr) { if (c == '\'') inStr = false else sb.setCharAt(i, ' ') }
-        else if (inLine) {
-          if (c == '\n') inLine = false else sb.setCharAt(i, ' ')
-        } else if (inBlock) {
-          if (c == '*' && i + 1 < sb.length && sb.charAt(i + 1) == '/') {
-            sb.setCharAt(i, ' '); sb.setCharAt(i + 1, ' ')
-            inBlock = false; i += 1
-          } else if (c != '\n') sb.setCharAt(i, ' ')
-        } else if (c == '\'') inStr = true
-        else if (c == '-' && i + 1 < sb.length && sb.charAt(i + 1) == '-') {
-          sb.setCharAt(i, ' '); sb.setCharAt(i + 1, ' ')
-          inLine = true; i += 1
-        } else if (c == '/' && i + 1 < sb.length && sb.charAt(i + 1) == '*') {
-          sb.setCharAt(i, ' '); sb.setCharAt(i + 1, ' ')
-          inBlock = true; i += 1
-        }
-        i += 1
-      }
-      sb.toString
-    }
+    // arity check
+    val q = SqlText.mask(q0)
     val fnRe = "(?i)\\b([A-Za-z_][A-Za-z_0-9]*)\\s*\\(".r
     for (m <- fnRe.findAllMatchIn(q)) {
       val fn = m.group(1).toLowerCase
       fnArity.get(fn).foreach { case (lo, hi) =>
         // count top-level commas between the matching parens
-        var i = m.end; var depth = 1; var inStr = false
+        var i = m.end; var depth = 1
         var commas = 0; var nonWs = false
         while (i < q.length && depth > 0) {
-          val c = q.charAt(i)
-          if (inStr) { if (c == '\'') inStr = false }
-          else c match {
-            case '\'' => inStr = true; nonWs = true
+          q.charAt(i) match {
             case '(' | '[' => depth += 1; nonWs = true
             case ')' | ']' => depth -= 1
             case ',' => if (depth == 1) commas += 1; nonWs = true
@@ -9197,36 +8886,25 @@ object ChSql {
       "UNION", "INTERSECT", "EXCEPT", "SETTINGS", "WINDOW", "QUALIFY",
       "FORMAT")
     val out = scala.collection.mutable.ArrayBuffer.empty[(Int, Int)]
-    var i = 0; var inStr = false; var depth = 0
+    val m = SqlText.mask(q)
+    var i = 0; var depth = 0
     var regionStart = -1; var regionDepth = -1
     def closeRegion(end: Int): Unit =
       if (regionStart >= 0) { out += ((regionStart, end)); regionStart = -1 }
-    while (i < q.length) {
-      val c = q.charAt(i)
-      if (inStr) {
-        // CH escape forms inside string literals (ADVICE r18): a
-        // backslash escapes the next char (\' stays inside the string)
-        // and '' is a doubled-quote escape — naive toggling on every
-        // quote desynchronized region detection after such literals
-        if (c == '\\') i += 2
-        else if (c == '\'') {
-          if (i + 1 < q.length && q.charAt(i + 1) == '\'') i += 2
-          else { inStr = false; i += 1 }
-        } else i += 1
-      }
-      else if (c == '\'') { inStr = true; i += 1 }
-      else if (c == '(') { depth += 1; i += 1 }
+    while (i < m.length) {
+      val c = m.charAt(i)
+      if (c == '(') { depth += 1; i += 1 }
       else if (c == ')') {
         depth -= 1
         if (regionStart >= 0 && depth < regionDepth) closeRegion(i)
         i += 1
       } else if ((Character.isLetter(c) || c == '_') &&
-          (i == 0 || (!Character.isLetterOrDigit(q.charAt(i - 1)) &&
-            q.charAt(i - 1) != '_'))) {
+          (i == 0 || (!Character.isLetterOrDigit(m.charAt(i - 1)) &&
+            m.charAt(i - 1) != '_'))) {
         var j = i
-        while (j < q.length && (Character.isLetterOrDigit(q.charAt(j)) ||
-          q.charAt(j) == '_')) j += 1
-        val w = q.substring(i, j).toUpperCase
+        while (j < m.length && (Character.isLetterOrDigit(m.charAt(j)) ||
+          m.charAt(j) == '_')) j += 1
+        val w = m.substring(i, j).toUpperCase
         if (starters.contains(w)) {
           closeRegion(i)
           regionStart = j; regionDepth = depth
@@ -9251,13 +8929,12 @@ object ChSql {
     val allowed = whereContextRanges(q)
     if (allowed.isEmpty) return None
     def inAllowed(p: Int): Boolean = allowed.exists(r => p >= r._1 && p < r._2)
+    val m = SqlText.mask(q)
     val sb = new StringBuilder
-    var i = 0; var inStr = false; var changed = false
+    var i = 0; var changed = false
     while (i < q.length) {
-      val c = q.charAt(i)
-      if (inStr) { sb.append(c); if (c == '\'') inStr = false; i += 1 }
-      else if (c == '\'') { sb.append(c); inStr = true; i += 1 }
-      else if ((Character.isLetter(c) || c == '_') &&
+      val c = m.charAt(i)
+      if ((Character.isLetter(c) || c == '_') &&
           (i == 0 || (!Character.isLetterOrDigit(q.charAt(i - 1)) &&
             q.charAt(i - 1) != '_' && q.charAt(i - 1) != '.' &&
             q.charAt(i - 1) != '`')) &&
@@ -9284,7 +8961,7 @@ object ChSql {
           sb.append(qual).append('.').append(col)
           changed = true; i += col.length
         }
-      } else { sb.append(c); i += 1 }
+      } else { sb.append(q.charAt(i)); i += 1 }
     }
     if (changed) Some(sb.toString) else None
   }
@@ -9297,20 +8974,21 @@ object ChSql {
       q: String, alias: String): Option[String] = {
     val asRe = ("(?is)\\bAS\\s+`?" +
       java.util.regex.Pattern.quote(alias) + "`?(?![\\w])").r
-    val m = asRe.findFirstMatchIn(q).getOrElse(return None)
+    val qm = SqlText.mask(q)
+    val m = asRe.findFirstMatchIn(qm).getOrElse(return None)
     // walk back from the AS to the item start (previous top-level comma,
     // opening paren, or SELECT keyword)
     var i = m.start - 1
     var depth = 0
     var start = -1
     while (i >= 0 && start < 0) {
-      q.charAt(i) match {
+      qm.charAt(i) match {
         case ')' => depth += 1
         case '(' => if (depth == 0) start = i + 1 else depth -= 1
         case ',' if depth == 0 => start = i + 1
         case c if (c == 't' || c == 'T') && depth == 0 &&
-            i >= 5 && q.substring(i - 5, i + 1).equalsIgnoreCase("select") &&
-            (i < 6 || !q.charAt(i - 6).isLetterOrDigit) =>
+            i >= 5 && qm.substring(i - 5, i + 1).equalsIgnoreCase("select") &&
+            (i < 6 || !qm.charAt(i - 6).isLetterOrDigit) =>
           start = i + 1
         case _ => ()
       }
@@ -9327,12 +9005,10 @@ object ChSql {
     val (scopeLo, scopeHi) = locally {
       var lo = 0; var hi = q.length
       val stack = scala.collection.mutable.Stack.empty[Int]
-      var k = 0; var inS = false
+      var k = 0
       while (k < q.length) {
-        val c = q.charAt(k)
-        if (inS) { if (c == '\'') inS = false }
-        else if (c == '\'') inS = true
-        else if (c == '(') stack.push(k)
+        val c = qm.charAt(k)
+        if (c == '(') stack.push(k)
         else if (c == ')') {
           if (stack.nonEmpty) {
             val o = stack.pop()
@@ -9355,19 +9031,10 @@ object ChSql {
     var changed = false
     while (j < q.length) {
       val c = q.charAt(j)
-      if (c == '\'') {
-        // copy a string literal verbatim (escape-aware)
-        sb.append(c); j += 1
-        var closed = false
-        while (j < q.length && !closed) {
-          val ch = q.charAt(j)
-          sb.append(ch)
-          if (ch == '\\' && j + 1 < q.length) { sb.append(q.charAt(j + 1)); j += 2 }
-          else { if (ch == '\'') closed = true; j += 1 }
-        }
-      } else if (c == '`') {
-        val e = q.indexOf('`', j + 1)
-        val stop = if (e < 0) q.length else e + 1
+      if (c == '\'' || c == '`') {
+        // copy a string literal or backquoted name verbatim
+        val e = SqlText.literalEnd(q, j)
+        val stop = if (e < 0) q.length else e
         sb.append(q.substring(j, stop)); j = stop
       } else if (c.isLetter || c == '_') {
         val k0 = j
@@ -9404,18 +9071,16 @@ object ChSql {
       "\\s+AS\\s+`?" + java.util.regex.Pattern.quote(alias) + "`?(?![\\w])").r
     if (asRe.findFirstIn(q).isEmpty) return None
     // locate the top-level WHERE (quote/paren aware)
-    var i = 0; var depth = 0; var inStr = false; var whereAt = -1
+    val m = SqlText.mask(q)
+    var i = 0; var depth = 0; var whereAt = -1
     while (i < q.length && whereAt < 0) {
-      val c = q.charAt(i)
-      if (inStr) { if (c == '\'') inStr = false }
-      else if (c == '\'') inStr = true
-      else if (c == '(') depth += 1
+      val c = m.charAt(i)
+      if (c == '(') depth += 1
       else if (c == ')') depth -= 1
       else if (depth == 0 && (c == 'w' || c == 'W') &&
-          i + 5 <= q.length &&
-          q.substring(i, i + 5).equalsIgnoreCase("where") &&
-          (i == 0 || !q.charAt(i - 1).isLetterOrDigit) &&
-          (i + 5 == q.length || !q.charAt(i + 5).isLetterOrDigit))
+          m.regionMatches(true, i, "where", 0, 5) &&
+          (i == 0 || !m.charAt(i - 1).isLetterOrDigit) &&
+          (i + 5 == q.length || !m.charAt(i + 5).isLetterOrDigit))
         whereAt = i
       i += 1
     }
@@ -9448,8 +9113,11 @@ object ChSql {
     // for DataFrame-path queries intact.
     val prev = spark.conf.getOption(graft.plans.ChDialect.key)
     spark.conf.set(graft.plans.ChDialect.key, "true")
-    // CH count() is parameterless — allow Spark's legacy spelling once
-    spark.conf.set("spark.sql.legacy.allowParameterlessCount", "true")
+    // CH count() is parameterless — allow Spark's legacy spelling while
+    // this query is built
+    val countKey = "spark.sql.legacy.allowParameterlessCount"
+    val prevCount = spark.conf.getOption(countKey)
+    spark.conf.set(countKey, "true")
     // explicit NULLS FIRST/LAST in the text: the default-nulls flip
     // (ChNullsOrdering) must not touch this query's sorts
     val nKey = graft.plans.ChNullsOrdering.skipKey
@@ -9505,16 +9173,11 @@ object ChSql {
           }
       }
     try run(chQuery0, 0)
-    finally {
-      prev match {
-        case Some(v) => spark.conf.set(graft.plans.ChDialect.key, v)
-        case None => spark.conf.unset(graft.plans.ChDialect.key)
+    finally
+      Seq(graft.plans.ChDialect.key -> prev, nKey -> prevN, countKey -> prevCount).foreach {
+        case (k, Some(v)) => spark.conf.set(k, v)
+        case (k, None) => spark.conf.unset(k)
       }
-      prevN match {
-        case Some(v) => spark.conf.set(nKey, v)
-        case None => spark.conf.unset(nKey)
-      }
-    }
   }
 
   /** GROUP-BY key names of the last statement's WITH TOTALS clause
@@ -9621,17 +9284,8 @@ object ChSql {
         .replaceAll("\\{CLICKHOUSE_DATABASE(?:_\\w+)?:String\\}", "'default'")
         .replaceAll("\\{CLICKHOUSE_DATABASE(?:_\\w+)?(?::\\w+)?\\}", "default")
       if (!q1.toLowerCase.contains("default.")) q1
-      else { // quote-aware: never strip inside string literals
-        val re = "(?i)(?<![\\w.`])default\\.(?=[A-Za-z_`])".r
-        val sb = new StringBuilder; var last = 0
-        for (m <- re.findAllMatchIn(q1)) {
-          val inStr = q1.substring(0, m.start).count(_ == '\'') % 2 == 1
-          sb.append(q1.substring(last, m.start))
-          if (inStr) sb.append(m.matched)
-          last = m.end
-        }
-        sb.append(q1.substring(last)); sb.toString
-      }
+      // quote-aware: never strip inside string literals
+      else replaceOutsideStrings(q1, "(?i)(?<![\\w.`])default\\.(?=[A-Za-z_`])".r)(_ => "")
     }
     // session tables with names Spark can't parse unquoted (03130_test)
     // were registered under a safe alias — substitute before anything
@@ -10052,17 +9706,10 @@ object ChSql {
     def parseBareCreate(q: String): Option[DataFrame] = {
       import org.apache.spark.sql.types._
       val m = bareCreateHead.findFirstMatchIn(q).getOrElse(return None)
-      var i = m.end; var depth = 1; var inStr = false
-      while (i < q.length && depth > 0) {
-        val c = q.charAt(i)
-        if (inStr) { if (c == '\'') inStr = false }
-        else if (c == '\'') inStr = true
-        else if (c == '(') depth += 1
-        else if (c == ')') depth -= 1
-        i += 1
-      }
-      if (depth != 0) return None
-      val rest = q.substring(i)
+      val close = SqlText.matching(SqlText.mask(q), m.end - 1)
+      if (close < 0) return None
+      val colText = q.substring(m.end, close)
+      val rest = q.substring(close + 1)
       if ("(?is)^\\s*AS\\b".r.findFirstIn(rest).isDefined) return None
       val name = safeViewName(m.group(1).stripPrefix("default."))
       // ReplicatedMergeTree('path', 'replica'): tables sharing a path are
@@ -10079,7 +9726,7 @@ object ChSql {
             // replicated metadata ALTERs can reach every sibling
             replicaGroup.put(name, path); replicaGroup.put(canon, path)
             try {
-              val cs = ChTypes.parseColumns(q.substring(m.end, i - 1))
+              val cs = ChTypes.parseColumns(colText)
               tableColMeta.put(name, cs.map(cd => (cd.name,
                 if (cd.chType.nonEmpty) cd.chType else "String",
                 cd.defaultKind.toUpperCase, cd.defaultExpr.getOrElse(""))))
@@ -10116,7 +9763,7 @@ object ChSql {
         }
       }
       val cols =
-        try ChTypes.parseColumns(q.substring(m.end, i - 1))
+        try ChTypes.parseColumns(colText)
         catch { case _: IllegalArgumentException => return None }
       if (cols.isEmpty) return None
       val fields = cols.map { c =>
@@ -10139,7 +9786,7 @@ object ChSql {
         // table is nan, not NULL)
         StructField(c.name, dt, nullable = c.chNullable, metadata = md)
       }
-      validateCreate(q.substring(m.end, i - 1), rest)
+      validateCreate(colText, rest)
       val empty = spark.createDataFrame(
         new java.util.ArrayList[org.apache.spark.sql.Row](), StructType(fields))
       // DEFAULT/MATERIALIZED/ALIAS exprs must resolve against the schema
@@ -10155,7 +9802,7 @@ object ChSql {
       }
       // column-level TTL expressions must resolve to Date/DateTime
       // (reference TTLDescription::create rejects e.g. defaultProfiles())
-      for (item <- splitArgs(q.substring(m.end, i - 1)).map(_.trim);
+      for (item <- splitArgs(colText).map(_.trim);
            tm <- "(?is)\\bTTL\\s+(.+)$".r.findFirstMatchIn(item)) {
         import org.apache.spark.sql.types._
         val dt = empty.select(
@@ -10246,7 +9893,7 @@ object ChSql {
           cd.colTtl.getOrElse(""))).toMap)
       // INDEX entries of the column list (parseColumns skips them):
       // `INDEX name expr TYPE t [GRANULARITY g]`
-      tableIndexes.put(name, splitArgs(q.substring(m.end, i - 1))
+      tableIndexes.put(name, splitArgs(colText)
         .map(_.trim).filter(_.toLowerCase.startsWith("index "))
         .flatMap { item =>
           val body = item.drop("index".length).trim
@@ -10255,7 +9902,7 @@ object ChSql {
           if (idxName.nonEmpty && defTxt.nonEmpty) Some((idxName, defTxt))
           else None
         }.toVector)
-      tableProjections.put(name, splitArgs(q.substring(m.end, i - 1))
+      tableProjections.put(name, splitArgs(colText)
         .map(_.trim).filter(_.toLowerCase.startsWith("projection "))
         .flatMap { item =>
           val body = item.drop("projection".length).trim
@@ -10293,12 +9940,12 @@ object ChSql {
       }
       tableDefaults.put(name,
         cols.collect { case c if c.defaultExpr.isDefined => c.name -> c.defaultExpr.get })
-      dynamicCols.put(name, splitArgs(q.substring(m.end, i - 1)).flatMap { it =>
+      dynamicCols.put(name, splitArgs(colText).flatMap { it =>
         "(?is)^\\s*`?(\\w+)`?\\s+(Dynamic|JSON|Variant)\\b".r
           .findFirstMatchIn(it.trim).map(_.group(1))
       }.toSet)
       "(?is)\\bINDEX\\s+\\w+\\s+(\\w+)\\s+TYPE\\s+vector_similarity\\s*\\([^)]*?(\\d+)\\s*\\)".r
-        .findFirstMatchIn(q.substring(m.end, i - 1))
+        .findFirstMatchIn(colText)
         .foreach(vm => vectorIndexDims.put(name, (vm.group(1), vm.group(2).toInt)))
       "(?is)\\bTTL\\s+(.+?)(?:\\s+(?:SETTINGS|ORDER\\s+BY|PARTITION\\s+BY|PRIMARY\\s+KEY)\\b.*)?$"
         .r.findFirstMatchIn(rest).foreach(mm => tableTtls.put(name, mm.group(1).trim))
@@ -10935,24 +10582,21 @@ object ChSql {
       case insertValRe(name0, colsOpt, values0) =>
         // CH accepts rows without separating commas: VALUES (1) (2) (3)
         val values = locally {
-          val sb = new StringBuilder; var d = 0; var inS = false; var i = 0
-          while (i < values0.length) {
-            val c = values0.charAt(i)
-            sb.append(c)
-            if (inS) { if (c == '\'') inS = false }
-            else c match {
-              case '\'' => inS = true
+          val vm = SqlText.mask(values0)
+          val sb = new StringBuilder; var d = 0
+          for (i <- 0 until values0.length) {
+            sb.append(values0.charAt(i))
+            vm.charAt(i) match {
               case '(' => d += 1
               case ')' =>
                 d -= 1
                 if (d == 0) {
                   var j = i + 1
-                  while (j < values0.length && values0.charAt(j).isWhitespace) j += 1
-                  if (j < values0.length && values0.charAt(j) == '(') sb.append(',')
+                  while (j < vm.length && vm.charAt(j).isWhitespace) j += 1
+                  if (j < vm.length && vm.charAt(j) == '(') sb.append(',')
                 }
               case _ =>
             }
-            i += 1
           }
           sb.toString
         }

@@ -191,21 +191,20 @@ object ChTypes {
         // every top-level modifier keyword position (quote/paren-aware);
         // the type runs to the first one, each clause to the next
         val marks = scala.collection.mutable.ArrayBuffer.empty[(Int, String)]
-        var i = 0; var depth = 0; var inStr = false
+        val masked = SqlText.mask(rest)
+        var i = 0; var depth = 0
         while (i < rest.length) {
-          val c = rest.charAt(i)
-          if (inStr) { if (c == '\'') inStr = false }
-          else if (c == '\'') inStr = true
-          else if (c == '(') depth += 1
+          val c = masked.charAt(i)
+          if (c == '(') depth += 1
           else if (c == ')') depth -= 1
           else if (depth == 0 && (i == 0 || {
-            val p = rest.charAt(i - 1)
+            val p = masked.charAt(i - 1)
             !p.isLetterOrDigit && p != '_' && p != '`'
           })) {
-            val word = rest.drop(i).takeWhile(ch => ch.isLetter).toLowerCase
+            val word = masked.drop(i).takeWhile(ch => ch.isLetter).toLowerCase
             val nxt = i + word.length
             val nextOk = nxt >= rest.length || {
-              val c2 = rest.charAt(nxt)
+              val c2 = masked.charAt(nxt)
               !c2.isLetterOrDigit && c2 != '_'
             }
             if (modifierKeywords.contains(word) && word.nonEmpty && nextOk)

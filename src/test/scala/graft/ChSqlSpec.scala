@@ -2526,4 +2526,36 @@ class ChSqlSpec extends AnyFunSuite {
     }
     assert(!e.getMessage.contains("WHERE  AND"))
   }
+
+  test("a backslash-escaped quote stays inside its literal in every text pass") {
+    // the hex pass must not rewrite a literal's body, nor stop short of
+    // literals that follow it
+    assert(ch("""SELECT 'it\'s 0x10' AS s""").collect().head.getString(0) == "it's 0x10")
+    val hex = ch("""SELECT 0x10 AS a, 'it\'s' AS s, 0x10 AS b""").collect().head
+    assert(hex.toSeq.map(_.toString) == Seq("16", "it's", "16"))
+    // the trailing-comma IN-list rewrite reaches lists after such a literal
+    val in = ch("""SELECT x IN (1,) AS p, 'a\'b' AS s, y IN (2,) AS q
+                  |FROM (SELECT 1 AS x, 2 AS y)""".stripMargin).collect().head
+    assert(in.toSeq == Seq(true, "a'b", true))
+    assert(ChSql.splitArgs("'a\\'b', 'c'") == Seq("'a\\'b'", "'c'"))
+    // the doubled-quote spelling reads the same
+    assert(ch("SELECT 'it''s 0x10' AS s").collect().head.getString(0) == "it's 0x10")
+  }
+
+  test("a bracket inside a literal does not move a :: cast or a subscript off its primary") {
+    assert(ch("SELECT concat('(', 'a')::String AS x").collect().head.getString(0) == "(a")
+    assert(ch("SELECT concat(')', 'a')::String AS x").collect().head.getString(0) == ")a")
+    assert(ch("SELECT splitByChar(',', ')a,b')[1] AS x").collect().head.getString(0) == ")a")
+  }
+
+  test("ChSql.sql leaves parameterless count() off the session conf") {
+    val s = spark.newSession()
+    val key = "spark.sql.legacy.allowParameterlessCount"
+    val before = s.conf.getOption(key)
+    assert(ChSql.sql(s, sf, "SELECT count() AS n FROM numbers(3)").collect().head.getLong(0) == 3L)
+    assert(s.conf.getOption(key) == before)
+    val e = intercept[org.apache.spark.sql.AnalysisException](
+      s.sql("SELECT count() FROM range(3)").collect())
+    assert(e.getMessage.contains("WRONG_NUM_ARGS"), e.getMessage)
+  }
 }

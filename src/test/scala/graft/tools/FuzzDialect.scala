@@ -34,6 +34,10 @@ object FuzzDialect {
   final case class Fz(ch: String, duck: String, tpe: Tpe)
 
   private val strTokens = Seq("row", "key", "scan", "hash", "the", "zz")
+  // string literals also draw one token with an apostrophe, spelled with
+  // ClickHouse's backslash escape on the dialect side and with SQL's
+  // doubled quote on the DuckDB side
+  private val strLits = strTokens :+ "it's"
 
   final class Gen(seed: Long) {
     private val rnd = new Random(seed)
@@ -55,8 +59,8 @@ object FuzzDialect {
           Fz("n_chars", "n_chars", TInt)))
       case TStr =>
         if (rnd.nextBoolean()) {
-          val v = pick(strTokens)
-          Fz(s"'$v'", s"'$v'", TStr)
+          val v = pick(strLits)
+          Fz(s"'${v.replace("'", "\\'")}'", s"'${v.replace("'", "''")}'", TStr)
         } else pick(Seq(
           Fz("substring(text, 1, 16)", "substring(text, 1, 16)", TStr),
           Fz("lang", "lang", TStr),
