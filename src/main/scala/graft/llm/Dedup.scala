@@ -24,20 +24,6 @@ object Dedup {
       .otherwise(array(array_join(toks, " ")))
   }
 
-  /** Distinct character n-grams. */
-  def charShingles(text: Column, n: Int = 8): Column =
-    when(length(text) >= n,
-      array_distinct(transform(
-        sequence(lit(1), length(text) - (n - 1)),
-        i => substring(text, lit(i), lit(n)))))
-      .otherwise(array(text))
-
-  /** k-permutation MinHash signature of a shingle array: element i is
-    * min over shingles of hash_i(shingle), hash_i = xxhash64 seeded by i.
-    * Pure built-ins — stays in codegen, no UDF. */
-  def minhashSignature(shingles: Column, k: Int = 32): Column =
-    graft.functions.VectorKernels.minhash_sig(shingles, k)
-
   /** Exact Jaccard between two distinct-element arrays. */
   def jaccard(a: Column, b: Column): Column =
     graft.functions.VectorKernels.jaccard_sim(a, b)

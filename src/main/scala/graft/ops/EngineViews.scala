@@ -52,10 +52,4 @@ object EngineViews {
   def versionedCollapsingFinal(df: DataFrame, keys: Seq[String], sign: Column,
                                version: Column): DataFrame =
     collapsingFinal(df, keys, sign, Seq(version))
-
-  /** AggregatingMergeTree FINAL: caller-supplied aggregate columns merged
-    * per key — identical contract to partial-state merge (reference
-    * AggregatingSortedAlgorithm; Spark's partial/final agg IS this). */
-  def aggregatingFinal(df: DataFrame, keys: Seq[String], aggs: Seq[Column]): DataFrame =
-    df.groupBy(keys.map(col): _*).agg(aggs.head, aggs.tail: _*)
 }

@@ -488,9 +488,6 @@ object ChParts {
     out
   }
 
-  def detachedOf(table: String): Vector[Part] =
-    detachedParts.getOrElse(table, Vector.empty)
-
   def takeDetached(table: String, pred: Part => Boolean): Vector[Part] = {
     val ps = detachedParts.getOrElse(table, Vector.empty)
     val (out, keep) = ps.partition(pred)

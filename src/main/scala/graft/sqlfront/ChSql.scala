@@ -13,536 +13,172 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object ChSql {
 
-  /** 1:1 function-name aliases (CH name -> Spark SQL name). */
+  /** Plain function renames (CH name -> Spark SQL name), applied in one
+    * scan near the end of `rewrite`. A function whose call must be
+    * restructured has its own template earlier in `rewrite` and no entry
+    * here, and a name CH and Spark share needs none. No value is also a
+    * key, so one pass applies the whole table. */
   val aliases: Map[String, String] = Map(
-    // date/time extract
+    // date/time (no toWeek: CH's default mode 0 is Sunday-first 0..53,
+    // which weekofyear (ISO) would misnumber; toISOWeek is the ISO form)
     "toYear" -> "year", "toMonth" -> "month", "toDayOfMonth" -> "day",
     "toHour" -> "hour", "toMinute" -> "minute", "toSecond" -> "second",
     "toDayOfYear" -> "dayofyear", "toQuarter" -> "quarter",
-    "toISOWeek" -> "weekofyear",
-    "toDayOfWeek" -> "iso_weekday", // template below: CH is Mon=1..Sun=7 (ISO)
-    "toUnixTimestamp" -> "unix_timestamp",
-    "fromUnixTimestamp" -> "from_unixtime",
-    "formatDateTime" -> "date_format",
-    "dateDiff" -> "timestampdiff", "date_diff" -> "timestampdiff", // templates below: unit quotes stripped
+    "toISOWeek" -> "weekofyear", "toUnixTimestamp" -> "unix_timestamp",
+    "fromUnixTimestamp" -> "from_unixtime", "formatDateTime" -> "date_format",
     "addDays" -> "date_add", "subtractDays" -> "date_sub",
     "makeDate" -> "make_date", "makeDate32" -> "make_date",
-    // string
+    "toDateTime" -> "to_timestamp", "toDate32" -> "to_date",
+    "toLastDayOfMonth" -> "last_day", "dateTrunc" -> "date_trunc",
+    "fromUnixTimestamp64Milli" -> "timestamp_millis",
+    "fromUnixTimestamp64Micro" -> "timestamp_micros",
+    "toUnixTimestamp64Micro" -> "unix_micros",
+    "nowInBlock" -> "current_timestamp",
+    "fromUTCTimestamp" -> "from_utc_timestamp",
+    "toUTCTimestamp" -> "to_utc_timestamp",
+    // string (base substring/mid/substr count bytes: a template)
     "lengthUTF8" -> "length", "lowerUTF8" -> "lower", "upperUTF8" -> "upper",
-    "substringUTF8" -> "substring", // base substring/mid/substr are BYTE-based (template)
-    "positionCaseInsensitive" -> "instr_ci", // template below: lower() both sides
-    "concatWithSeparator" -> "concat_ws",
-    "splitByChar" -> "split_by_char", // handled by template below
+    "substringUTF8" -> "substring", "concatWithSeparator" -> "concat_ws",
+    "concatWithSeparatorAssumeInjective" -> "concat_ws",
+    "concatAssumeInjective" -> "concat",
+    "char_length" -> "length", "character_length" -> "length",
+    "reverseUTF8" -> "reverse", "format" -> "format_string",
+    "substringIndex" -> "substring_index",
+    "substringIndexUTF8" -> "substring_index",
+    "initcapUTF8" -> "initcap", "isValidUTF8" -> "is_valid_utf8",
+    "toValidUTF8" -> "make_valid_utf8", "translateUTF8" -> "translate",
+    "positionUTF8" -> "instr", "leftUTF8" -> "left", "rightUTF8" -> "right",
     "match" -> "rlike", "extract" -> "regexp_extract",
+    "regexpExtract" -> "regexp_extract",
     "replaceAll" -> "replace", "replaceRegexpAll" -> "regexp_replace",
-    "countSubstrings" -> "regexp_count",
-    "editDistance" -> "levenshtein", "levenshteinDistance" -> "levenshtein",
-    "damerauLevenshteinDistance" -> "damerau_levenshtein",
-    "jaroSimilarity" -> "jaro_similarity",
-    "jaroWinklerSimilarity" -> "jaro_winkler_similarity",
-    "byteHammingDistance" -> "byte_hamming_distance",
-    "stringJaccardIndex" -> "string_jaccard_index",
+    "countSubstrings" -> "regexp_count", "countMatches" -> "regexp_count",
     "startsWith" -> "startswith", "endsWith" -> "endswith",
     "trimBoth" -> "trim", "trimLeft" -> "ltrim", "trimRight" -> "rtrim",
     "leftPad" -> "lpad", "rightPad" -> "rpad",
     "leftPadUTF8" -> "lpad", "rightPadUTF8" -> "rpad",
+    "convertCharset" -> "convert_charset",
+    "extractTextFromHTML" -> "extract_text_from_html",
+    // string distances and byte statistics
+    "editDistance" -> "levenshtein", "levenshteinDistance" -> "levenshtein",
+    "editDistanceUTF8" -> "levenshtein",
+    "levenshteinDistanceUTF8" -> "levenshtein",
+    "damerauLevenshteinDistance" -> "damerau_levenshtein",
+    "jaroSimilarity" -> "jaro_similarity",
+    "jaroWinklerSimilarity" -> "jaro_winkler_similarity",
+    "byteHammingDistance" -> "byte_hamming_distance",
+    "mismatches" -> "byte_hamming_distance",
+    "stringJaccardIndex" -> "string_jaccard_index",
+    "stringBytesUniq" -> "string_bytes_uniq",
+    "stringBytesEntropy" -> "string_bytes_entropy",
     // math / misc
-    "modulo" -> "mod", "plus" -> "t",
-    "ln" -> "ln", "log2" -> "log2", "log10" -> "log10",
-    "roundBankers" -> "t", "cbrt" -> "cbrt",
-    "round" -> "t", "floor" -> "t", "ceil" -> "t", "ceiling" -> "t",
-    "trunc" -> "t", "truncate" -> "t", "roundDown" -> "t",
-    "bitCount" -> "bit_count",
-    // conditionals
-    "multiIf" -> "case_when_chain", // template below
-    "if" -> "if", "ifNull" -> "nvl", "nullIf" -> "nullif",
-    "assumeNotNull" -> "coalesce",
+    "modulo" -> "mod", "moduloLegacy" -> "mod",
+    "positiveModulo" -> "pmod", "positive_modulo" -> "pmod",
+    "min2" -> "least", "max2" -> "greatest", "isNaN" -> "isnan",
+    "bitCount" -> "bit_count", "byteSwap" -> "byte_swap",
+    "bitShiftLeft" -> "shiftleft", "bitShiftRight" -> "shiftright",
+    "widthBucket" -> "width_bucket",
+    "lgamma" -> "ch_lgamma", "tgamma" -> "ch_tgamma",
+    "errorCodeToName" -> "error_code_to_name",
+    // conditionals / null
+    "ifNull" -> "nvl", "nullIf" -> "nullif", "assumeNotNull" -> "coalesce",
+    "isNull" -> "isnull", "isNotNull" -> "isnotnull",
     // aggregates
     "uniq" -> "approx_count_distinct", "uniqHLL12" -> "approx_count_distinct",
-    "uniqCombined" -> "approx_count_distinct", "uniqExact" -> "count_distinct",
-    "groupArray" -> "collect_list", "groupUniqArray" -> "collect_set",
-    "anyHeavy" -> "mode", // any/anyLast: batch-29 templates (NULL-skipping)
+    "uniqCombined" -> "approx_count_distinct",
+    "groupArray" -> "collect_list", "array_agg" -> "collect_list",
+    "groupUniqArray" -> "collect_set", "anyHeavy" -> "mode",
     "argMin" -> "min_by", "argMax" -> "max_by",
-    "avgWeighted" -> "avg_weighted", // template below
     "varPop" -> "var_pop", "varSamp" -> "var_samp",
     "stddevPop" -> "stddev_pop", "stddevSamp" -> "stddev_samp",
     "covarPop" -> "covar_pop", "covarSamp" -> "covar_samp",
-    "skewPop" -> "skewness", // kurtPop: batch-29 template (non-excess)
-    "medianExact" -> "median", "quantileExact" -> "percentile",
-    "quantile" -> "percentile_approx",
-    "topK" -> "top_k", // template below (graft custom)
-    // arrays
-    "arrayJoin" -> "explode", "has" -> "array_contains",
-    "arrayConcat" -> "concat", "arraySlice" -> "slice",
-    "arrayUniq" -> "array_size_distinct", // template below
-    "arrayDistinct" -> "array_distinct", "arraySort" -> "array_sort",
-    "arrayReverse" -> "reverse", "arrayFlatten" -> "flatten",
-    "arrayCompact" -> "array_compact", "arrayZip" -> "arrays_zip",
-    "indexOf" -> "array_position", "arrayElement" -> "ch_element_at",
-    
-    "arrayCumSum" -> "t",
-    "arrayStringConcat" -> "array_join", "emptyArrayString" -> "array",
-    // json
-    "JSONExtractString" -> "t",
-    "JSONLength" -> "json_array_length",
-    "toJSONString" -> "to_json",
-    "visitParamExtractRaw" -> "get_json_object",
-    // hash / encode — value-faithful kernels (functions/HashCompat.scala;
-    // reference src/Functions/FunctionsHashing.h): persisted hash values
-    // (SAMPLE BY cityHash64, sipHash fingerprints, Kafka partitioning)
-    // carry the reference's exact bit patterns
-    "cityHash64" -> "ch_cityhash64", "sipHash64" -> "ch_siphash64",
-    "sipHash128" -> "ch_siphash128",
-    "sipHash128Reference" -> "ch_siphash128_reference",
-    "halfMD5" -> "ch_halfmd5", "MD5" -> "md5",
-    "hex" -> "hex", "unhex" -> "unhex",
-    "base64Encode" -> "t", "base64Decode" -> "t",
-    "bitHammingDistance" -> "bit_hamming", // template below
-
-    // ---- extended surface (round 2; reference src/Functions/*) ----
-    // date/time
-    "toDateTime" -> "to_timestamp", "toDate32" -> "to_date",
-    "toLastDayOfMonth" -> "last_day",
-    "now" -> "t", "today" -> "t",
-    "toDateTimeOrNull" -> "t", "monthName" -> "t", "toMonday" -> "t",
-    "addHours" -> "t", "addMinutes" -> "t", "addSeconds" -> "t", // templates
-    "addMonths" -> "t", "addYears" -> "t", "addWeeks" -> "t",
-    "subtractHours" -> "t", "subtractMinutes" -> "t", "subtractSeconds" -> "t",
-    "subtractMonths" -> "t", "subtractYears" -> "t", "subtractWeeks" -> "t",
-    "toYYYYMM" -> "t", "toYYYYMMDD" -> "t", "yesterday" -> "t",
-    "toStartOfFiveMinutes" -> "t", "toStartOfTenMinutes" -> "t",
-    "toStartOfFifteenMinutes" -> "t", "toStartOfInterval" -> "t",
-    "toStartOfMinute" -> "t", "timeSlot" -> "t", "toRelativeDayNum" -> "t",
-    "fromUnixTimestamp64Milli" -> "timestamp_millis",
-    "toUnixTimestamp64Milli" -> "t",
-    "parseDateTimeBestEffort" -> "t", "parseDateTimeBestEffortOrNull" -> "t",
-    "dateAdd" -> "t", "dateSub" -> "t",
-    // string
-    // lcase/ucase are aliases of lower/upper (ASCII-only; template below)
-    "char_length" -> "length", "character_length" -> "length",
-    "reverseUTF8" -> "reverse", "format" -> "format_string",
-    "concatAssumeInjective" -> "concat", "substringIndex" -> "substring_index",
-    "initcapUTF8" -> "initcap", "isValidUTF8" -> "is_valid_utf8",
-    "countMatches" -> "regexp_count", "regexpExtract" -> "regexp_extract",
-    "translateUTF8" -> "translate",
-    "appendTrailingCharIfAbsent" -> "t", "tokens" -> "t", "alphaTokens" -> "t",
-    "splitByWhitespace" -> "t", "splitByString" -> "t", "extractAll" -> "t",
-    "ngramDistance" -> "t", "ngramSearch" -> "t",
-    "multiSearchAny" -> "t", "multiSearchFirstPosition" -> "t",
-    "multiSearchFirstIndex" -> "t", "multiSearchAnyCaseInsensitive" -> "t",
-    "multiMatchAny" -> "t", "multiMatchAnyIndex" -> "t",
-    "encrypt" -> "t", "decrypt" -> "t", "tryDecrypt" -> "t",
-    "hasToken" -> "t", "hasTokenCaseInsensitive" -> "t",
-    "positionUTF8" -> "instr", "firstLine" -> "t",
-    // hash / encoding
-    "SHA1" -> "sha1", "SHA224" -> "t", "SHA256" -> "t", "SHA384" -> "t",
-    "SHA512" -> "t",
-    // faithful murmur/xx/int/java/crc/farm/metro kernels (HashCompat.scala);
-    // farmHash64 matches a stock (SSE4.2) reference build for inputs
-    // < 512 B, the scalar build above that (upstream Hash64 is
-    // build-dependent there — see HashCompat header); farmFingerprint64
-    // and metroHash64 are exact at every length
-    "murmurHash2_32" -> "ch_murmur2_32", "murmurHash2_64" -> "ch_murmur2_64",
-    "murmurHash3_32" -> "ch_murmur3_32", "murmurHash3_64" -> "ch_murmur3_64",
-    "murmurHash3_128" -> "ch_murmur3_128",
-    "gccMurmurHash" -> "ch_gcc_murmur", "kafkaMurmurHash" -> "ch_kafka_murmur",
-    "xxHash32" -> "ch_xxhash32", "xxHash64" -> "ch_xxhash64",
-    "wyHash64" -> "ch_wyhash64",
-    "javaHash" -> "ch_javahash", "javaHashUTF16LE" -> "ch_javahash_utf16le",
-    "hiveHash" -> "ch_hivehash",
-    "intHash32" -> "ch_inthash32", "intHash64" -> "ch_inthash64",
-    "farmHash64" -> "ch_farmhash64", "metroHash64" -> "ch_metrohash64",
-    "farmFingerprint64" -> "ch_farmfingerprint64",
-    "CRC32" -> "ch_crc32", "CRC32IEEE" -> "ch_crc32ieee", "CRC64" -> "ch_crc64",
-    "encodeURLComponent" -> "url_encode", "decodeURLComponent" -> "url_decode",
-    // query pretty-printer (reference src/Functions/formatQuery.cpp)
-    "formatQuery" -> "format_query",
-    "formatQueryOrNull" -> "format_query_or_null",
-    "formatQuerySingleLine" -> "format_query_single_line",
-    "formatQuerySingleLineOrNull" -> "format_query_single_line_or_null",
-    // URL
-    "protocol" -> "t", "domain" -> "t", "domainWithoutWWW" -> "t",
-    "topLevelDomain" -> "t", "pathOnly" -> "t", "queryString" -> "t",
-    "fragment" -> "t", "extractURLParameter" -> "t", "cutQueryString" -> "t",
-    // JSON
-    "JSONExtractInt" -> "t", "JSONExtractFloat" -> "t", "JSONExtractBool" -> "t",
-    "JSONExtractRaw" -> "get_json_object", "JSONHas" -> "t",
-    "JSONExtractKeys" -> "json_object_keys", "JSONArrayLength" -> "json_array_length",
-    "isValidJSON" -> "t",
-    // arrays
-    "arrayPushBack" -> "array_append", "arrayPushFront" -> "array_prepend",
-    "arrayPopBack" -> "t", "arrayPopFront" -> "t",
-    "arrayIntersect" -> "array_intersect", "arrayUnion" -> "array_union",
-    "hasAll" -> "t", "hasAny" -> "arrays_overlap",
-    "arrayFirst" -> "t", "arrayLast" -> "t", "arrayFirstIndex" -> "t",
-    "arrayMin" -> "t", "arrayMax" -> "t",
-    "arrayAvg" -> "t", "arrayProduct" -> "t", "arrayWithConstant" -> "t",
-    "arrayEnumerate" -> "t", "arrayReverseSort" -> "t", "countEqual" -> "t",
-    "arrayElementOrNull" -> "try_element_at",
-    // map
-    "mapKeys" -> "map_keys", "mapValues" -> "map_values",
-    "mapContains" -> "map_contains_key", "mapFromArrays" -> "map_from_arrays",
-    // math
-    "sqr" -> "t", "sigmoid" -> "t", "exp2" -> "t", "exp10" -> "t",
-    "intExp2" -> "t", "intExp10" -> "t", "roundToExp2" -> "t",
-    "min2" -> "least", "max2" -> "greatest",
-    "isFinite" -> "t", "isInfinite" -> "t", "isNaN" -> "isnan",
-    "log1p" -> "log1p", "expm1" -> "expm1", "hypot" -> "hypot",
-    // bits
-    "bitAnd" -> "t", "bitOr" -> "t", "bitXor" -> "t", "bitNot" -> "t",
-    "bitShiftLeft" -> "shiftleft", "bitShiftRight" -> "shiftright",
-    "bitTest" -> "t",
-    // null / comparison
-    "isNull" -> "isnull", "isNotNull" -> "isnotnull",
-    "isNotDistinctFrom" -> "t", "isDistinctFrom" -> "t",
-    "ifNotFinite" -> "t", "toNullable" -> "t",
-    // type conversion
-    "toInt8" -> "t", "toInt16" -> "t", "toUInt8" -> "t", "toUInt16" -> "t",
-    "toUInt32" -> "t", "toUInt64" -> "t", "toFloat32" -> "t",
-    "toInt8OrNull" -> "t", "toInt16OrNull" -> "t",
-    "toInt32OrNull" -> "t",
-    "toInt8OrZero" -> "t", "toInt16OrZero" -> "t", "toInt32OrZero" -> "t",
-    "toUInt8OrNull" -> "t", "toUInt16OrNull" -> "t", "toUInt32OrNull" -> "t",
-    "toUInt64OrNull" -> "t",
-    "toUInt8OrZero" -> "t", "toUInt16OrZero" -> "t", "toUInt32OrZero" -> "t",
-    "toUInt64OrZero" -> "t",
-    "toFloat32OrNull" -> "t", "toFloat32OrZero" -> "t",
-    "toFloat64OrNull" -> "t", "toFloat64OrZero" -> "t",
-    "toInt32OrDefault" -> "t", "toInt64OrDefault" -> "t",
-    "toUInt64OrDefault" -> "t", "toFloat64OrDefault" -> "t",
-    "toDateOrNull" -> "t",
-    "toTypeName" -> "ch_type_name",
-    // aggregates
+    "varPopStable" -> "var_pop", "varSampStable" -> "var_samp",
+    "stddevPopStable" -> "stddev_pop", "stddevSampStable" -> "stddev_samp",
+    "covarPopStable" -> "covar_pop", "covarSampStable" -> "covar_samp",
+    "corrStable" -> "corr", "skewPop" -> "skewness",
+    "medianExact" -> "median", "quantile" -> "percentile_approx",
     "boolAnd" -> "bool_and", "boolOr" -> "bool_or",
     "groupBitAnd" -> "bit_and", "groupBitOr" -> "bit_or",
-    "groupBitXor" -> "bit_xor", "sumKahan" -> "sum",
-    "stddevPopStable" -> "stddev_pop", "varPopStable" -> "var_pop",
-    "groupArrayArray" -> "t",
-    // ids / random
-    "generateUUIDv4" -> "uuid", "generateUUIDv7" -> "generate_uuid_v7",
-    "generateSnowflakeID" -> "generate_snowflake_id",
-    "rand" -> "t", "rand64" -> "t", "randCanonical" -> "t",
-    "randUniform" -> "t", "randNormal" -> "t",
-    "randExponential" -> "t", "randChiSquared" -> "t", "randStudentT" -> "t",
-    "randFisherF" -> "t", "randBernoulli" -> "t", "randBinomial" -> "t",
-    "randNegativeBinomial" -> "t", "randPoisson" -> "t", "randLogNormal" -> "t",
-    // IP / geo (custom kernels registered via GraftExtensions)
-    "IPv4NumToString" -> "t", "IPv4StringToNum" -> "t",
-    "IPv6StringToNum" -> "ipv6_string_to_num",
-    "IPv6NumToString" -> "ipv6_num_to_string",
-    "toIPv6" -> "ipv6_string_to_num",
-    "isIPv4String" -> "t", "isIPv6String" -> "t",
-    "geohashEncode" -> "geohash_encode", "geohashDecode" -> "geohash_decode",
-    "geohashesInBox" -> "geohashes_in_box", "geohashKRing" -> "geohash_kring",
-    "stem" -> "t", // template: CH stem('en', s) takes the language FIRST
-    // NLP classification (dictionary-backed kernels — llm.Nlp)
-    "lemmatize" -> "t", "synonyms" -> "t",
-    "detectTonality" -> "t", "detectProgrammingLanguage" -> "t",
-    "detectCharset" -> "detect_charset",
-    "normalizeQuery" -> "normalize_query",
-    "normalizeQueryKeepNames" -> "normalize_query",
-    "normalizedQueryHash" -> "normalized_query_hash",
-    "normalizedQueryHashKeepNames" -> "normalized_query_hash",
-    // misc
-    "currentDatabase" -> "current_database", "currentUser" -> "current_user",
-    "version" -> "version", "materialize" -> "t", "identity" -> "t",
-    "now64" -> "t", "runningAccumulate" -> "t",
-    "firstSignificantSubdomain" -> "t", "cutToFirstSignificantSubdomain" -> "t",
-    "dictGet" -> "t", "dictGetOrDefault" -> "t",
-    "wkt" -> "t", "svg" -> "t", "readWKTPolygon" -> "t",
-    // ---- batch 13 ----
-    "detectLanguage" -> "detect_language",
-    "detectLanguageMixed" -> "detect_language_mixed",
-    "detectLanguageUnknown" -> "detect_language",
-    "normalizeUTF8NFC" -> "t", "normalizeUTF8NFD" -> "t",
-    "normalizeUTF8NFKC" -> "t", "normalizeUTF8NFKD" -> "t",
-    "makeDateTime" -> "t", "makeDateTime64" -> "t",
-    "parseDateTime" -> "t", "parseDateTimeInJodaSyntax" -> "t",
-    "formatDateTimeInJodaSyntax" -> "t", "YYYYMMDDhhmmssToDateTime" -> "t",
-    "dateTrunc" -> "date_trunc",
-    "fromUTCTimestamp" -> "from_utc_timestamp",
-    "toUTCTimestamp" -> "to_utc_timestamp",
-    "UTCTimestamp" -> "t",
-    "hasSubstr" -> "t", "ngrams" -> "t",
-    "arrayFirstOrNull" -> "t", "arrayLastOrNull" -> "t",
-    "arrayFill" -> "t", "arrayReverseFill" -> "t",
-    "arrayShuffle" -> "shuffle", "arrayRandomSample" -> "t",
-    "arrayCumSumNonNegative" -> "t",
-    "mapContainsKey" -> "map_contains_key", "mapContainsValue" -> "t",
-    "mapSort" -> "t", "mapReverseSort" -> "t", "mapExtractKeyLike" -> "t",
-    "IPv4ToIPv6" -> "t", "IPv4CIDRToRange" -> "t",
-    "MACStringToNum" -> "t", "MACNumToString" -> "t", "MACStringToOUI" -> "t",
-    "cutURLParameter" -> "t", "extractURLParameterNames" -> "t",
-    "encodeURLFormComponent" -> "url_encode",
-    "decodeURLFormComponent" -> "url_decode",
-    "neighbor" -> "t", "positiveModulo" -> "pmod", "positive_modulo" -> "pmod",
-    "intDivOrNull" -> "t", "modOrNull" -> "t", "divideOrNull" -> "t",
-    "multiplyDecimal" -> "t", "divideDecimal" -> "t",
-    // CRC32IEEE now maps to the faithful init-0 kernel above (HashCompat)
-    "randomPrintableASCII" -> "t", "randomString" -> "t",
-    // ---- batch 14 ----
-    "jumpConsistentHash" -> "jump_consistent_hash",
-    "greatCircleDistance" -> "t", "geoDistance" -> "t", "greatCircleAngle" -> "t",
-    "pointInEllipses" -> "t",
-    "bitmaskToArray" -> "t", "bitPositionsToArray" -> "t", "bitmaskToList" -> "t",
-    "proportionsZTest" -> "t",
-    "formatReadableTimeDelta" -> "t",
-    "URLHierarchy" -> "t", "URLPathHierarchy" -> "t",
-    // ---- batch 15 ----
-    "multiSearchAllPositions" -> "t",
-    "multiSearchAllPositionsCaseInsensitive" -> "t",
-    "arraySplit" -> "t", "arrayReverseSplit" -> "t",
-    "parseReadableSize" -> "t", "parseReadableSizeOrZero" -> "t",
-    // ---- batch 3 ----
-    // NOTE: no toWeek alias — CH default mode 0 is Sunday-first 0..53,
-    // which weekofyear (ISO) would silently misnumber; toISOWeek covers
-    // the ISO form.
-    "toStartOfSecond" -> "t", "age" -> "t", "timeDiff" -> "t",
-    "nowInBlock" -> "current_timestamp",
-    "timezone" -> "t", "serverTimezone" -> "t",
-    "fromUnixTimestamp64Micro" -> "timestamp_micros",
-    "fromUnixTimestamp64Nano" -> "t",
-    "toUnixTimestamp64Micro" -> "unix_micros", "toUnixTimestamp64Nano" -> "t",
-    "dateName" -> "t",
-    "startsWithUTF8" -> "t", "endsWithUTF8" -> "t",
-    "leftUTF8" -> "left", "rightUTF8" -> "right",
-    "substringIndexUTF8" -> "substring_index",
-    "countSubstringsCaseInsensitive" -> "t",
-    "notLike" -> "t", "notILike" -> "t",
-    "zeroIfNull" -> "t", "nullIfZero" -> "t",
-    "intDivOrZero" -> "t", "moduloOrZero" -> "t", "negate" -> "t",
-    "toDecimal32" -> "t", "toDecimal64" -> "t", "toDecimal128" -> "t",
-    "mapConcat" -> "map_concat",
-    "transform" -> "t", // 4-arg value-remap form; 2-arg HOF passes through
-    "arrayResize" -> "t", "arrayFlatten" -> "flatten",
-    "bitTestAll" -> "t", "bitTestAny" -> "t",
-    // ---- batch 4 ----
-    // identity names (CH and Spark agree exactly)
-    "repeat" -> "repeat", "space" -> "space", "soundex" -> "soundex",
-    "ascii" -> "ascii", "left" -> "left", "right" -> "right",
-    "ilike" -> "ilike", "degrees" -> "degrees", "radians" -> "radians",
-    "sign" -> "sign",
-    "toValidUTF8" -> "make_valid_utf8",
-    "sumWithOverflow" -> "sum", "corrStable" -> "corr",
-    "covarPopStable" -> "covar_pop",
-    // templated (call-convention or semantics restructuring)
-    "char" -> "t", // CH char(c1, c2, …) concatenates code points
-    "mapFilter" -> "t", "mapExists" -> "t", // CH map HOFs take lambda FIRST
-    "mapAdd" -> "t", "mapSubtract" -> "t",
-    "clamp" -> "t",
-    "addQuarters" -> "t", "subtractQuarters" -> "t",
-    "addMilliseconds" -> "t", "subtractMilliseconds" -> "t",
-    "toRelativeHourNum" -> "t", "toRelativeMinuteNum" -> "t",
-    "toRelativeSecondNum" -> "t", "toTime" -> "t",
-    "toIntervalSecond" -> "t", "toIntervalMinute" -> "t",
-    "toIntervalHour" -> "t", "toIntervalDay" -> "t", "toIntervalWeek" -> "t",
-    "toIntervalMonth" -> "t", "toIntervalQuarter" -> "t", "toIntervalYear" -> "t",
-    "bitRotateLeft" -> "t", "bitRotateRight" -> "t",
-    "arrayRotateLeft" -> "t", "arrayRotateRight" -> "t", "arrayShingles" -> "t",
-    "simpleJSONExtractString" -> "t", "simpleJSONExtractInt" -> "t",
-    "simpleJSONHas" -> "t",
-    "port" -> "t", "cutFragment" -> "t", "cutWWW" -> "t",
-    "quantileTDigest" -> "t", "quantileBFloat16" -> "t",
-    "quantileTiming" -> "t", "quantilesExact" -> "t", "quantiles" -> "t",
-    // vector distances (reference src/Functions/array/arrayDistance.cpp;
-    // cosine_sim/dot_product are the graft codegen kernels)
-    "arrayDotProduct" -> "t", "dotProduct" -> "t",
-    "cosineDistance" -> "t", "arrayCosineDistance" -> "t",
-    "L1Distance" -> "t", "L2Distance" -> "t", "L2SquaredDistance" -> "t",
-    "LinfDistance" -> "t", "L1Norm" -> "t", "L2Norm" -> "t",
-    "arrayJaccardIndex" -> "t",
-    // ---- batch 5 ----
-    "mapApply" -> "t", "mapUpdate" -> "t", "mapPopulateSeries" -> "t",
-    "arrayDifference" -> "t", "arrayEnumerateDense" -> "t",
-    "arrayReduce" -> "t",
-    "toStartOfDay" -> "t", "toStartOfHour" -> "t", "toStartOfWeek" -> "t",
-    "toStartOfQuarter" -> "t", "toStartOfYear" -> "t",
-    "tupleElement" -> "t", "tuple" -> "struct", "e" -> "t", "untuple" -> "t",
-    "netloc" -> "t", "queryStringAndFragment" -> "t",
-    "cutQueryStringAndFragment" -> "t", "extractURLParameters" -> "t",
-    "regexpQuoteMeta" -> "t", "roundDuration" -> "t", "roundAge" -> "t",
-    // ---- batch 6 ----
-    "visitParamExtractString" -> "t", "visitParamExtractInt" -> "t",
-    "visitParamHas" -> "t",
-    "toDate" -> "t", "toYYYYMMDDhhmmss" -> "t", "timeSlots" -> "t",
-    "arrayAUC" -> "t", "range" -> "t",
-    "minus" -> "t", "multiply" -> "t", "negate" -> "t",
-    "isZeroOrNull" -> "t", "ignore" -> "t",
-    "formatReadableSize" -> "t", "formatReadableQuantity" -> "t",
-    "formatReadableDecimalSize" -> "t",
-    "emptyArrayUInt8" -> "t", "emptyArrayInt64" -> "t",
-    "emptyArrayFloat64" -> "t", "emptyArrayString" -> "t",
-    "emptyArrayDate" -> "t",
-    // identity names (CH and Spark agree exactly)
-    "abs" -> "abs", "greatest" -> "greatest", "least" -> "least",
-    // ---- batch 7: aggregate-combinator tail ----
-    // -OrNull variants return NULL on empty input — which IS Spark's
-    // default aggregate behavior, so they map 1:1
+    "groupBitXor" -> "bit_xor", "sumKahan" -> "sum", "sumWithOverflow" -> "sum",
+    // -OrNull variants return NULL on empty input, as Spark's aggregates do
     "sumOrNull" -> "sum", "minOrNull" -> "min", "maxOrNull" -> "max",
     "avgOrNull" -> "avg",
-    "sumCount" -> "t", "uniqCombined64" -> "t", "quantileGK" -> "t",
-    // ---- batch 8: integer math, space-filling curves, JSON tail ----
-    // gcd/lcm and the curve codecs are custom kernels registered as SQL
-    // functions in GraftFunctions (snake_case names)
-    "gcd" -> "gcd", "lcm" -> "lcm",
-    "mortonEncode" -> "morton_encode", "mortonDecode" -> "morton_decode",
-    "hilbertEncode" -> "hilbert_encode", "hilbertDecode" -> "hilbert_decode",
-    "JSONExtractKeys" -> "t", "JSONLength" -> "t", "JSONType" -> "t",
-    "JSONExtractArrayRaw" -> "t",
-    // base58 / IDNA codecs (custom kernels, snake_case SQL names)
-    "base58Encode" -> "base58_encode", "base58Decode" -> "base58_decode_strict",
-    "base32Encode" -> "base32_encode", "base32Decode" -> "base32_decode_strict",
-    "bech32Encode" -> "bech32_encode", "bech32Decode" -> "bech32_decode",
-    "sparseGrams" -> "sparse_grams",
-    "tryBase58Decode" -> "base58_decode",
-    "idnaEncode" -> "idna_encode", "idnaDecode" -> "idna_decode",
-    "tryIdnaEncode" -> "idna_encode",
+    // RESPECT NULLS spellings: Spark's first/last respect NULLs by
+    // default (the base any/anyLast skip them: a template)
+    "anyRespectNulls" -> "first", "any_respect_nulls" -> "first",
+    "anyValueRespectNulls" -> "first", "any_value_respect_nulls" -> "first",
+    "firstValueRespectNulls" -> "first", "first_value_respect_nulls" -> "first",
+    "anyLastRespectNulls" -> "last", "anyLast_respect_nulls" -> "last",
+    "lastValueRespectNulls" -> "last", "last_value_respect_nulls" -> "last",
     // CH window-function spellings (Spark lag/lead are frame-bound)
     "lagInFrame" -> "lag", "leadInFrame" -> "lead",
-    // ---- batch 9: bitmap family over sorted-distinct arrays ----
-    "bitmapBuild" -> "t", "bitmapToArray" -> "t", "bitmapCardinality" -> "t",
-    "bitmapMin" -> "t", "bitmapMax" -> "t",
-    "bitmapAnd" -> "t", "bitmapOr" -> "t", "bitmapXor" -> "t",
-    "bitmapAndnot" -> "t", "bitmapContains" -> "t",
-    "bitmapHasAny" -> "t", "bitmapHasAll" -> "t",
-    "bitmapAndCardinality" -> "t", "bitmapOrCardinality" -> "t",
-    "bitmapXorCardinality" -> "t", "bitmapAndnotCardinality" -> "t",
-    "groupBitmap" -> "t",
-    "arrayFold" -> "t", "arrayPartialSort" -> "t",
-    "arraySymmetricDifference" -> "t", "arrayEnumerateUniq" -> "t",
-    // ---- batch 10: subsequence/groups/shifts, HTML text, width bucket ----
-    "widthBucket" -> "width_bucket",
-    "extractTextFromHTML" -> "extract_text_from_html",
-    "hasSubsequence" -> "t", "hasSubsequenceCaseInsensitive" -> "t",
-    "extractGroups" -> "t", "arrayShiftLeft" -> "t", "arrayShiftRight" -> "t",
-    "toDecimalString" -> "t",
-    "sumDistinct" -> "t", "avgDistinct" -> "t", "countDistinct" -> "t",
-    "argMinIf" -> "t", "argMaxIf" -> "t",
-    "quantileDeterministic" -> "t",
-    "uniqTheta" -> "uniq_theta",
-    // ---- batch 11: math/date/encoding tail ----
-    "byteSwap" -> "byte_swap",
-    "toModifiedJulianDay" -> "t", "fromModifiedJulianDay" -> "t",
-    "changeYear" -> "t", "changeMonth" -> "t", "changeDay" -> "t",
-    "countDigits" -> "t",
-    "encodeXMLComponent" -> "t", "decodeXMLComponent" -> "t",
-    "base64URLEncode" -> "t", "base64URLDecode" -> "t",
-    "bar" -> "t", "extractKeyValuePairs" -> "t",
-    // ---- batch 16 (round 9): dialect gap fill ----
-    // string
-    "splitByAlpha" -> "t", "splitByNonAlpha" -> "t", "splitByRegexp" -> "t",
-    "replaceOne" -> "t", "replaceRegexpOne" -> "t",
-    "mismatches" -> "byte_hamming_distance",
-    "toStringCutToZero" -> "t",
-    "stringBytesUniq" -> "string_bytes_uniq",
-    "stringBytesEntropy" -> "string_bytes_entropy",
-    "countMatchesCaseInsensitive" -> "t",
-    "countSubstringsCaseInsensitiveUTF8" -> "t",
-    "hasSubsequenceUTF8" -> "t", "hasSubsequenceCaseInsensitiveUTF8" -> "t",
-    "editDistanceUTF8" -> "levenshtein", "levenshteinDistanceUTF8" -> "levenshtein",
-    "hasTokenOrNull" -> "t", "hasTokenCaseInsensitiveOrNull" -> "t",
-    // date/time
-    "toISOYear" -> "t", "toLastDayOfWeek" -> "t", "toStartOfFiveMinute" -> "t",
-    "toStartOfMillisecond" -> "t", "toStartOfMicrosecond" -> "t",
-    "toStartOfNanosecond" -> "t", "toMillisecond" -> "t",
-    "toRelativeYearNum" -> "t", "toRelativeQuarterNum" -> "t",
-    "toRelativeMonthNum" -> "t", "toRelativeWeekNum" -> "t",
-    "toDaysSinceYearZero" -> "t", "fromDaysSinceYearZero" -> "t",
-    "fromDaysSinceYearZero32" -> "t",
-    "toMonthNumSinceEpoch" -> "t", "toYearNumSinceEpoch" -> "t",
-    "addMicroseconds" -> "t", "subtractMicroseconds" -> "t",
-    "addNanoseconds" -> "t", "subtractNanoseconds" -> "t",
-    "changeHour" -> "t", "changeMinute" -> "t", "changeSecond" -> "t",
-    "timestampDiff" -> "t", "timestamp_diff" -> "t",
-    "parseDateTimeOrNull" -> "t", "parseDateTimeOrZero" -> "t",
-    "parseDateTimeBestEffortOrZero" -> "t",
-    "parseDateTime32BestEffort" -> "t", "parseDateTime32BestEffortOrNull" -> "t",
-    "parseDateTime32BestEffortOrZero" -> "t",
-    // snowflake / ULID / UUID id-time codecs
-    "snowflakeToDateTime" -> "t", "snowflakeToDateTime64" -> "t",
-    "dateTimeToSnowflake" -> "t", "dateTime64ToSnowflake" -> "t",
-    "snowflakeIDToDateTime" -> "t", "snowflakeIDToDateTime64" -> "t",
-    "dateTimeToSnowflakeID" -> "t", "dateTime64ToSnowflakeID" -> "t",
-    "UUIDv7ToDateTime" -> "t", "ULIDStringToDateTime" -> "t",
-    "UUIDStringToNum" -> "t", "UUIDNumToString" -> "t", "UUIDToNum" -> "t",
-    // map / array
-    "mapContainsKeyLike" -> "t", "mapContainsValueLike" -> "t",
-    "mapExtractKeyLike" -> "t", "mapExtractValueLike" -> "t",
-    "indexOfAssumeSorted" -> "array_position",
-    // vector-alias surface (normL*/distanceL*/scalarProduct = the L*Norm/
-    // L*Distance/dotProduct family already templated above)
-    "normL1" -> "t", "normL2" -> "t", "normL2Squared" -> "t",
-    "normLinf" -> "t", "distanceL1" -> "t", "distanceL2" -> "t",
-    "distanceL2Squared" -> "t", "distanceLinf" -> "t",
-    "LinfNorm" -> "t", "scalarProduct" -> "t",
-    // simpleJSON / visitParam tail
-    "simpleJSONExtractBool" -> "t", "simpleJSONExtractFloat" -> "t",
-    "simpleJSONExtractUInt" -> "t", "simpleJSONExtractRaw" -> "get_json_object",
-    "visitParamExtractBool" -> "t", "visitParamExtractFloat" -> "t",
-    "visitParamExtractUInt" -> "t",
-    // ngram/wordShingle SimHash + MinHash fingerprints (StringShingles.scala;
-    // reference FunctionsStringHash.cpp — exact CRC32C shingle semantics).
-    // *UTF8 word-shingle names are the identical kernel in the reference.
-    // reinterpretAs* (Reinterpret.scala; Int128/256/UUID targets are a
-    // documented gap). The generic reinterpret(x, 'T') is a template.
-    // batch 17: A/B sample sizing, normalized Gini, JSON merge patch,
-    // raw punycode; extractAllGroups* are templates (literal regex only)
     // uniqTheta set algebra (aggregates.ThetaSetOps). uniqThetaUnion
     // returns a composable state like the reference; Intersect/Not return
     // the estimate directly (our KMV state cannot carry a reduced theta),
     // so finalizeAggregation over them is the identity and over a
     // union/uniqThetaState state is the KMV estimate.
-    // batch 18: small date/array tail
-    "toWeek" -> "t", "toYearWeek" -> "t", "week" -> "t", "yearweek" -> "t",
-    "bitmapSubsetInRange" -> "t", "bitmapSubsetLimit" -> "t",
-    "subBitmap" -> "t", "bitmapTransform" -> "t",
-    "moduloOrNull" -> "t", "positiveModuloOrNull" -> "t",
-    "pmodOrNull" -> "t", "positive_modulo_or_null" -> "t",
-    "arrayLastIndex" -> "t", "YYYYMMDDToDate" -> "t", "str_to_date" -> "t",
-    "addDate" -> "t", "subDate" -> "t", "time_bucket" -> "t", "date_bin" -> "t",
-    "toStartOfISOYear" -> "t", "toWeekOfWeekYear" -> "t", "toWeekYear" -> "t",
-    "fromUnixTimestamp64Second" -> "t", "toUnixTimestamp64Second" -> "t",
-    "fromUnixTimestamp64Nano" -> "t", "toUnixTimestamp64Nano" -> "t",
-    "UTC_timestamp" -> "t", "curdate" -> "t",
-    "parseDateTime64" -> "t", "parseDateTime64OrNull" -> "t",
-    "parseDateTime64OrZero" -> "t", "parseDateTime64BestEffort" -> "t",
-    "parseDateTime64BestEffortOrNull" -> "t",
-    "parseDateTime64BestEffortOrZero" -> "t",
-    "toDateTime64" -> "t", "toDateTime32" -> "t",
-    "uniqThetaUnion" -> "uniq_theta_union",
+    "uniqTheta" -> "uniq_theta", "uniqThetaUnion" -> "uniq_theta_union",
     "uniqThetaIntersect" -> "uniq_theta_intersect_count",
     "uniqThetaNot" -> "uniq_theta_not_count",
     "uniqThetaState" -> "uniq_theta_state",
-    "uniqState" -> "t", "uniqMerge" -> "t", "uniqThetaMerge" -> "t",
-    "uniqExactState" -> "t", "uniqExactMerge" -> "t",
-    "sumState" -> "t", "sumMerge" -> "t", "minState" -> "t", "minMerge" -> "t",
-    "maxState" -> "t", "maxMerge" -> "t", "countState" -> "t",
-    "countMerge" -> "t", "avgState" -> "t", "avgMerge" -> "t",
-    "groupArrayState" -> "t", "groupArrayMerge" -> "t",
     "finalizeAggregation" -> "uniq_theta_estimate",
+    // A/B sample sizing, normalized Gini
     "minSampleSizeContinuous" -> "min_sample_size_continuous",
     "minSampleSizeContinous" -> "min_sample_size_continuous", // reference alias (typo kept)
     "minSampleSizeConversion" -> "min_sample_size_conversion",
     "arrayNormalizedGini" -> "array_normalized_gini",
+    // arrays / maps / tuples
+    "arrayJoin" -> "explode", "has" -> "array_contains",
+    "arrayConcat" -> "concat", "arraySlice" -> "slice",
+    "arrayDistinct" -> "array_distinct", "arraySort" -> "array_sort",
+    "arrayReverse" -> "reverse", "arrayFlatten" -> "flatten",
+    "arrayCompact" -> "array_compact", "arrayZip" -> "arrays_zip",
+    "indexOf" -> "array_position", "indexOfAssumeSorted" -> "array_position",
+    "arrayElement" -> "ch_element_at", "arrayElementOrNull" -> "try_element_at",
+    "arrayPushBack" -> "array_append", "arrayPushFront" -> "array_prepend",
+    "arrayIntersect" -> "array_intersect", "arrayUnion" -> "array_union",
+    "hasAny" -> "arrays_overlap", "arrayShuffle" -> "shuffle",
+    "mapKeys" -> "map_keys", "mapValues" -> "map_values",
+    "mapContains" -> "map_contains_key", "mapContainsKey" -> "map_contains_key",
+    "mapFromArrays" -> "map_from_arrays", "mapConcat" -> "map_concat",
+    "tuple" -> "struct",
+    // JSON
+    "toJSONString" -> "to_json", "JSONArrayLength" -> "json_array_length",
+    "visitParamExtractRaw" -> "get_json_object",
+    "simpleJSONExtractRaw" -> "get_json_object",
+    "JSONExtractRaw" -> "get_json_object",
     "jsonMergePatch" -> "json_merge_patch", "JSONMergePatch" -> "json_merge_patch",
-    "punycodeEncode" -> "punycode_encode", "punycodeDecode" -> "punycode_decode",
-    "tryPunycodeDecode" -> "try_punycode_decode",
-    "extractAllGroupsVertical" -> "t", "extractAllGroupsHorizontal" -> "t",
-    "extractAllGroups" -> "t",
-    "reinterpretAsUInt8" -> "ch_reinterpret_u8",
-    "reinterpretAsUInt16" -> "ch_reinterpret_u16",
-    "reinterpretAsUInt32" -> "ch_reinterpret_u32",
-    "reinterpretAsUInt64" -> "ch_reinterpret_u64",
-    "reinterpretAsInt8" -> "ch_reinterpret_i8",
-    "reinterpretAsInt16" -> "ch_reinterpret_i16",
-    "reinterpretAsInt32" -> "ch_reinterpret_i32",
-    "reinterpretAsInt64" -> "ch_reinterpret_i64",
-    "reinterpretAsFloat32" -> "ch_reinterpret_f32",
-    "reinterpretAsFloat64" -> "ch_reinterpret_f64",
-    "reinterpretAsDate" -> "ch_reinterpret_date",
-    "reinterpretAsDateTime" -> "ch_reinterpret_datetime",
-    "reinterpretAsString" -> "ch_reinterpret_string",
-    "reinterpret" -> "t",
+    // hash / encode: value-faithful kernels (functions/HashCompat.scala;
+    // reference src/Functions/FunctionsHashing.h), so persisted hash
+    // values (SAMPLE BY cityHash64, sipHash fingerprints, Kafka
+    // partitioning) carry the reference's exact bit patterns. farmHash64
+    // matches a stock (SSE4.2) reference build for inputs < 512 B, the
+    // scalar build above that (upstream Hash64 is build-dependent there —
+    // see HashCompat header); farmFingerprint64 and metroHash64 are exact
+    // at every length.
+    "cityHash64" -> "ch_cityhash64", "sipHash64" -> "ch_siphash64",
+    "sipHash128" -> "ch_siphash128",
+    "sipHash128Reference" -> "ch_siphash128_reference",
+    "halfMD5" -> "ch_halfmd5", "MD5" -> "md5", "SHA1" -> "sha1",
+    "murmurHash2_32" -> "ch_murmur2_32", "murmurHash2_64" -> "ch_murmur2_64",
+    "murmurHash3_32" -> "ch_murmur3_32", "murmurHash3_64" -> "ch_murmur3_64",
+    "murmurHash3_128" -> "ch_murmur3_128",
+    "gccMurmurHash" -> "ch_gcc_murmur", "kafkaMurmurHash" -> "ch_kafka_murmur",
+    "xxHash32" -> "ch_xxhash32", "xxHash64" -> "ch_xxhash64",
+    "wyHash64" -> "ch_wyhash64", "hiveHash" -> "ch_hivehash",
+    "javaHash" -> "ch_javahash", "javaHashUTF16LE" -> "ch_javahash_utf16le",
+    "intHash32" -> "ch_inthash32", "intHash64" -> "ch_inthash64",
+    "farmHash64" -> "ch_farmhash64", "metroHash64" -> "ch_metrohash64",
+    "farmFingerprint64" -> "ch_farmfingerprint64",
+    "CRC32" -> "ch_crc32", "CRC32IEEE" -> "ch_crc32ieee", "CRC64" -> "ch_crc64",
+    "MD4" -> "ch_md4", "RIPEMD160" -> "ch_ripemd160",
+    "keccak256" -> "ch_keccak256", "BLAKE3" -> "ch_blake3",
+    "SHA512_256" -> "ch_sha512_256",
+    "jumpConsistentHash" -> "jump_consistent_hash",
+    "kostikConsistentHash" -> "kostik_consistent_hash",
+    "yandexConsistentHash" -> "kostik_consistent_hash",
+    // ngram/wordShingle SimHash + MinHash fingerprints (StringShingles.scala;
+    // reference FunctionsStringHash.cpp: exact CRC32C shingle semantics).
+    // The *UTF8 word-shingle names are the same kernel in the reference.
     "ngramSimHash" -> "ch_ngram_simhash",
     "ngramSimHashCaseInsensitive" -> "ch_ngram_simhash_ci",
     "ngramSimHashUTF8" -> "ch_ngram_simhash_utf8",
@@ -567,177 +203,61 @@ object ChSql {
     "wordShingleMinHashArgCaseInsensitive" -> "ch_wordshingle_minhash_arg_ci",
     "wordShingleMinHashArgUTF8" -> "ch_wordshingle_minhash_arg",
     "wordShingleMinHashArgCaseInsensitiveUTF8" -> "ch_wordshingle_minhash_arg_ci",
-
-    // ---- round-10 batch 19: conversion tail + functional operator forms
-    // (reference src/Functions/FunctionsConversion.h remaining spellings;
-    // FunctionsComparison.cpp / FunctionsLogical.cpp operator functions) ----
-    "toInt8OrDefault" -> "t", "toInt16OrDefault" -> "t",
-    "toUInt8OrDefault" -> "t", "toUInt16OrDefault" -> "t",
-    "toUInt32OrDefault" -> "t", "toFloat32OrDefault" -> "t",
-    "toDateOrZero" -> "t", "toDateOrDefault" -> "t",
-    "toDate32OrNull" -> "t", "toDate32OrZero" -> "t", "toDate32OrDefault" -> "t",
-    "toDateTimeOrZero" -> "t", "toDateTimeOrDefault" -> "t",
-    "toDateTime64OrNull" -> "t", "toDateTime64OrZero" -> "t",
-    "toDateTime64OrDefault" -> "t",
-    "toUUID" -> "t", "toUUIDOrNull" -> "t", "toUUIDOrZero" -> "t",
-    "toUUIDOrDefault" -> "t",
-    "toIPv4" -> "t", "toIPv4OrNull" -> "t", "toIPv4OrZero" -> "t",
-    "toIPv4OrDefault" -> "t",
-    "toIPv6" -> "t", "toIPv6OrNull" -> "t", "toIPv6OrZero" -> "t",
-    "toIPv6OrDefault" -> "t",
-    "toBool" -> "t", "toFixedString" -> "t",
-    "toDecimal32OrNull" -> "t", "toDecimal32OrZero" -> "t",
-    "toDecimal32OrDefault" -> "t",
-    "toDecimal64OrNull" -> "t", "toDecimal64OrZero" -> "t",
-    "toDecimal64OrDefault" -> "t",
-    "toDecimal128OrNull" -> "t", "toDecimal128OrZero" -> "t",
-    "toDecimal128OrDefault" -> "t",
-    "toDecimal256" -> "t", "toDecimal256OrNull" -> "t",
-    "toDecimal256OrZero" -> "t", "toDecimal256OrDefault" -> "t",
-    "toInt128" -> "t", "toInt128OrNull" -> "t", "toInt128OrZero" -> "t",
-    "toInt128OrDefault" -> "t",
-    "toInt256" -> "t", "toInt256OrNull" -> "t", "toInt256OrZero" -> "t",
-    "toInt256OrDefault" -> "t",
-    "toUInt128" -> "t", "toUInt128OrNull" -> "t", "toUInt128OrZero" -> "t",
-    "toUInt128OrDefault" -> "t",
-    "toUInt256" -> "t", "toUInt256OrNull" -> "t", "toUInt256OrZero" -> "t",
-    "toUInt256OrDefault" -> "t",
-    "accurateCast" -> "t", "accurateCastOrNull" -> "t",
-    "accurateCastOrDefault" -> "t",
-    "toLowCardinality" -> "t", "toTimeZone" -> "t", "toTimezone" -> "t",
-    "timeZone" -> "t", "serverTimeZone" -> "t",
-    "timeZoneOf" -> "t", "timezoneOf" -> "t",
-    "timeZoneOffset" -> "t", "timezoneOffset" -> "t",
-    "toModifiedJulianDayOrNull" -> "t", "fromModifiedJulianDayOrNull" -> "t",
-    "concatWithSeparatorAssumeInjective" -> "concat_ws",
-    "equals" -> "t", "notEquals" -> "t", "less" -> "t", "greater" -> "t",
-    "lessOrEquals" -> "t", "greaterOrEquals" -> "t",
-    "and" -> "t", "or" -> "t", "not" -> "t", "xor" -> "t",
-
-    // ---- round-10 batch 20: search-family tail ----
-    "multiSearchAnyUTF8" -> "t", "multiSearchAnyCaseInsensitiveUTF8" -> "t",
-    "multiSearchFirstIndexUTF8" -> "t",
-    "multiSearchFirstIndexCaseInsensitive" -> "t",
-    "multiSearchFirstIndexCaseInsensitiveUTF8" -> "t",
-    "multiSearchFirstPositionUTF8" -> "t",
-    "multiSearchFirstPositionCaseInsensitive" -> "t",
-    "multiSearchFirstPositionCaseInsensitiveUTF8" -> "t",
-    "multiSearchAllPositionsUTF8" -> "t",
-    "multiSearchAllPositionsCaseInsensitiveUTF8" -> "t",
-    "ngramDistanceUTF8" -> "t", "ngramDistanceCaseInsensitive" -> "t",
-    "ngramDistanceCaseInsensitiveUTF8" -> "t",
-    "ngramSearchUTF8" -> "t", "ngramSearchCaseInsensitive" -> "t",
-    "ngramSearchCaseInsensitiveUTF8" -> "t",
-    "multiMatchAllIndices" -> "t",
-    "multiFuzzyMatchAny" -> "t", "multiFuzzyMatchAnyIndex" -> "t",
-    "multiFuzzyMatchAllIndices" -> "t",
-    "compareSubstrings" -> "t", "decodeHTMLComponent" -> "t",
-    "stringJaccardIndexUTF8" -> "t",
-    "byteSlice" -> "t", "bitSlice" -> "t",
-    "bin" -> "t", "unbin" -> "t",
-
-    // ---- round-10 batch 21: tuple/vector arithmetic + array tail ----
-    "tuplePlus" -> "t", "tupleMinus" -> "t", "tupleMultiply" -> "t",
-    "tupleDivide" -> "t", "tupleModulo" -> "t", "tupleIntDiv" -> "t",
-    "tupleIntDivOrZero" -> "t", "tupleNegate" -> "t",
-    "tuplePlusByNumber" -> "t", "tupleMinusByNumber" -> "t",
-    "tupleMultiplyByNumber" -> "t", "tupleDivideByNumber" -> "t",
-    "tupleModuloByNumber" -> "t", "tupleIntDivByNumber" -> "t",
-    "tupleIntDivOrZeroByNumber" -> "t",
-    "vectorSum" -> "t", "vectorDifference" -> "t",
-    "tupleConcat" -> "t", "tupleNames" -> "t",
-    "tupleToNameValuePairs" -> "t", "tupleHammingDistance" -> "t",
-    "flattenTuple" -> "t",
-    "addTupleOfIntervals" -> "t", "subtractTupleOfIntervals" -> "t",
-    "arrayPRAUC" -> "t", "arrayAUCPR" -> "t",
-    "emptyArrayToSingle" -> "t", "arrayPartialShuffle" -> "t",
-    "arrayPartialReverseSort" -> "t",
-    "arrayEnumerateUniqRanked" -> "t", "arrayEnumerateDenseRanked" -> "t",
-    "arrayReduceInRanges" -> "t",
-    "LpNorm" -> "t", "normLp" -> "t", "LpDistance" -> "t", "distanceLp" -> "t",
-    "normalizeL1" -> "t", "normalizeL2" -> "t", "normalizeLinf" -> "t",
-    "normalizeLp" -> "t",
-    "mapAll" -> "t", "mapPartialSort" -> "t", "mapPartialReverseSort" -> "t",
-    "moduloLegacy" -> "mod",
-
-    // ---- round-10 batch 22: URL RFC/Custom tail + context constants ----
-    "domainRFC" -> "t", "domainWithoutWWWRFC" -> "t",
-    "topLevelDomainRFC" -> "t", "portRFC" -> "t",
-    "firstSignificantSubdomainRFC" -> "t",
-    "firstSignificantSubdomainCustom" -> "t",
-    "firstSignificantSubdomainCustomRFC" -> "t",
-    "cutToFirstSignificantSubdomainRFC" -> "t",
-    "cutToFirstSignificantSubdomainWithWWW" -> "t",
-    "cutToFirstSignificantSubdomainWithWWWRFC" -> "t",
-    "cutToFirstSignificantSubdomainCustom" -> "t",
-    "cutToFirstSignificantSubdomainCustomRFC" -> "t",
-    "cutToFirstSignificantSubdomainCustomWithWWW" -> "t",
-    "cutToFirstSignificantSubdomainCustomWithWWWRFC" -> "t",
-    "hostName" -> "t", "hostname" -> "t", "displayName" -> "t",
-    "FQDN" -> "t", "fullHostName" -> "t", "uptime" -> "t",
-    "queryID" -> "t", "currentQueryID" -> "t", "query_id" -> "t",
-    "initialQueryID" -> "t", "initial_query_id" -> "t",
-    "tcpPort" -> "t", "shardNum" -> "t", "shardCount" -> "t",
-    "serverUUID" -> "t", "connectionId" -> "t", "connection_id" -> "t",
-    "DATABASE" -> "t", "SCHEMA" -> "t", "currentSchemas" -> "t",
-    "user" -> "t",
-    "blockNumber" -> "t", "blockSize" -> "t",
-    "rowNumberInBlock" -> "t", "rowNumberInAllBlocks" -> "t",
-    "visibleWidth" -> "t", "byteSize" -> "t",
-    "throwIf" -> "t", "indexHint" -> "t",
-    "isNullable" -> "t", "isConstant" -> "t",
-    "defaultValueOfArgumentType" -> "t", "defaultValueOfTypeName" -> "t",
-    "toColumnTypeName" -> "t", "dumpColumnStructure" -> "t",
-    "isIPAddressInRange" -> "t", "parseTimeDelta" -> "t",
-    "isDecimalOverflow" -> "t",
-    "runningDifference" -> "t", "runningDifferenceStartingWithFirstValue" -> "t",
-    "sipHash64Keyed" -> "t", "sipHash128Keyed" -> "t",
-    "sipHash128ReferenceKeyed" -> "t",
-    "timestamp" -> "t",
-
-    // ---- round-10 batch 23: digests, consistent hash, random tail ----
-    "MD4" -> "ch_md4", "RIPEMD160" -> "ch_ripemd160",
-    "keccak256" -> "ch_keccak256", "BLAKE3" -> "ch_blake3",
-    "SHA512_256" -> "ch_sha512_256",
-    "kostikConsistentHash" -> "kostik_consistent_hash",
-    "yandexConsistentHash" -> "kostik_consistent_hash",
-    "generateULID" -> "generate_ulid",
-    "generateSerialID" -> "generate_serial_id",
-    "fuzzBits" -> "fuzz_bits",
-    "URLHash" -> "t", "rand32" -> "t", "randConstant" -> "t",
-    "randomFixedString" -> "t", "randomStringUTF8" -> "t",
-
-    // ---- round-10 batch 24: dict/parse/window-view tail ----
-    "dictGetString" -> "t", "dictGetInt8" -> "t", "dictGetInt16" -> "t",
-    "dictGetInt32" -> "t", "dictGetInt64" -> "t", "dictGetUInt8" -> "t",
-    "dictGetUInt16" -> "t", "dictGetUInt32" -> "t", "dictGetUInt64" -> "t",
-    "dictGetFloat32" -> "t", "dictGetFloat64" -> "t", "dictGetDate" -> "t",
-    "dictGetDateTime" -> "t", "dictGetUUID" -> "t", "dictGetIPv4" -> "t",
-    "dictGetIPv6" -> "t",
-    "dictGetStringOrDefault" -> "t", "dictGetInt8OrDefault" -> "t",
-    "dictGetInt16OrDefault" -> "t", "dictGetInt32OrDefault" -> "t",
-    "dictGetInt64OrDefault" -> "t", "dictGetUInt8OrDefault" -> "t",
-    "dictGetUInt16OrDefault" -> "t", "dictGetUInt32OrDefault" -> "t",
-    "dictGetUInt64OrDefault" -> "t", "dictGetFloat32OrDefault" -> "t",
-    "dictGetFloat64OrDefault" -> "t", "dictGetDateOrDefault" -> "t",
-    "dictGetDateTimeOrDefault" -> "t", "dictGetUUIDOrDefault" -> "t",
-    "dictGetIPv4OrDefault" -> "t", "dictGetIPv6OrDefault" -> "t",
-    "dictGetOrNull" -> "t", "dictHas" -> "t",
-    "parseDateTimeBestEffortUS" -> "t", "parseDateTimeBestEffortUSOrNull" -> "t",
-    "parseDateTimeBestEffortUSOrZero" -> "t",
-    "parseDateTime64BestEffortUS" -> "t", "parseDateTime64BestEffortUSOrNull" -> "t",
-    "parseDateTime64BestEffortUSOrZero" -> "t",
-    "parseDateTimeInJodaSyntaxOrNull" -> "t", "parseDateTimeInJodaSyntaxOrZero" -> "t",
-    "parseDateTime64InJodaSyntax" -> "t", "parseDateTime64InJodaSyntaxOrNull" -> "t",
-    "parseDateTime64InJodaSyntaxOrZero" -> "t",
-    "parseReadableSizeOrNull" -> "t", "toInterval" -> "t",
-    "toBFloat16" -> "t", "toBFloat16OrNull" -> "t", "toBFloat16OrZero" -> "t",
-    "tryBase64Decode" -> "t", "tryBase64URLDecode" -> "t",
+    // reinterpretAs* (Reinterpret.scala)
+    "reinterpretAsUInt8" -> "ch_reinterpret_u8",
+    "reinterpretAsUInt16" -> "ch_reinterpret_u16",
+    "reinterpretAsUInt32" -> "ch_reinterpret_u32",
+    "reinterpretAsUInt64" -> "ch_reinterpret_u64",
+    "reinterpretAsUInt128" -> "ch_reinterpret_u128",
+    "reinterpretAsUInt256" -> "ch_reinterpret_u256",
+    "reinterpretAsInt8" -> "ch_reinterpret_i8",
+    "reinterpretAsInt16" -> "ch_reinterpret_i16",
+    "reinterpretAsInt32" -> "ch_reinterpret_i32",
+    "reinterpretAsInt64" -> "ch_reinterpret_i64",
+    "reinterpretAsInt128" -> "ch_reinterpret_i128",
+    "reinterpretAsInt256" -> "ch_reinterpret_i256",
+    "reinterpretAsFloat32" -> "ch_reinterpret_f32",
+    "reinterpretAsFloat64" -> "ch_reinterpret_f64",
+    "reinterpretAsDate" -> "ch_reinterpret_date",
+    "reinterpretAsDateTime" -> "ch_reinterpret_datetime",
+    "reinterpretAsString" -> "ch_reinterpret_string",
+    "reinterpretAsUUID" -> "ch_reinterpret_uuid",
+    "reinterpretAsFixedString" -> "ch_reinterpret_fixedstring",
+    // codecs (custom kernels, snake_case SQL names)
+    "encodeURLComponent" -> "url_encode", "decodeURLComponent" -> "url_decode",
+    "encodeURLFormComponent" -> "url_encode",
+    "decodeURLFormComponent" -> "url_decode",
+    "base58Encode" -> "base58_encode", "base58Decode" -> "base58_decode_strict",
+    "tryBase58Decode" -> "base58_decode",
+    "base32Encode" -> "base32_encode", "base32Decode" -> "base32_decode_strict",
     "tryBase32Decode" -> "base32_decode",
-    "tumble" -> "t", "tumbleStart" -> "t", "tumbleEnd" -> "t",
-    "hop" -> "t", "hopStart" -> "t", "hopEnd" -> "t", "windowID" -> "t",
-
-    // ---- round-10 batch 25: the real S2 cell-id space ----
+    "bech32Encode" -> "bech32_encode", "bech32Decode" -> "bech32_decode",
+    "idnaEncode" -> "idna_encode", "idnaDecode" -> "idna_decode",
+    "tryIdnaEncode" -> "idna_encode",
+    "punycodeEncode" -> "punycode_encode", "punycodeDecode" -> "punycode_decode",
+    "tryPunycodeDecode" -> "try_punycode_decode",
+    "sqidEncode" -> "sqid_encode", "sqidDecode" -> "sqid_decode",
+    "sqid" -> "sqid_encode", "sparseGrams" -> "sparse_grams",
+    // query pretty-printer (reference src/Functions/formatQuery.cpp)
+    "formatQuery" -> "format_query", "formatQueryOrNull" -> "format_query_or_null",
+    "formatQuerySingleLine" -> "format_query_single_line",
+    "formatQuerySingleLineOrNull" -> "format_query_single_line_or_null",
+    "normalizeQuery" -> "normalize_query",
+    "normalizeQueryKeepNames" -> "normalize_query",
+    "normalizedQueryHash" -> "normalized_query_hash",
+    "normalizedQueryHashKeepNames" -> "normalized_query_hash",
+    // text classification (dictionary-backed kernels, llm.Nlp)
+    "detectCharset" -> "detect_charset", "detectLanguage" -> "detect_language",
+    "detectLanguageMixed" -> "detect_language_mixed",
+    "detectLanguageUnknown" -> "detect_language",
+    // IP / geo (custom kernels registered via GraftExtensions)
+    "IPv6StringToNum" -> "ipv6_string_to_num",
+    "IPv6NumToString" -> "ipv6_num_to_string",
+    "geohashEncode" -> "geohash_encode", "geohashDecode" -> "geohash_decode",
+    "geohashesInBox" -> "geohashes_in_box", "geohashKRing" -> "geohash_kring",
+    "mortonEncode" -> "morton_encode", "mortonDecode" -> "morton_decode",
+    "hilbertEncode" -> "hilbert_encode", "hilbertDecode" -> "hilbert_decode",
+    // S2 cell ids
     "geoToS2" -> "geo_to_s2", "s2ToGeo" -> "s2_to_geo",
     "s2GetNeighbors" -> "s2_get_neighbors",
     "s2CellsIntersect" -> "s2_cells_intersect",
@@ -745,129 +265,7 @@ object ChSql {
     "s2RectContains" -> "s2_rect_contains", "s2RectAdd" -> "s2_rect_add",
     "s2RectUnion" -> "s2_rect_union",
     "s2RectIntersection" -> "s2_rect_intersection",
-
-    // ---- round-10 batch 26: MySQL-compat pack + JSON paths + misc ----
-    "FORMAT_BYTES" -> "t", "FROM_BASE64" -> "t", "TO_BASE64" -> "t",
-    "FROM_DAYS" -> "t", "TO_DAYS" -> "t",
-    "FROM_UNIXTIME" -> "t", "TO_UNIXTIME" -> "t",
-    "REGEXP_MATCHES" -> "t", "DATE_DIFF" -> "t", "TIMESTAMP_DIFF" -> "t",
-    "MILLISECOND" -> "t", "SUBSTRING_INDEX" -> "t",
-    "YYYYMMDDhhmmssToDateTime64" -> "t",
-    "JSONAllPaths" -> "t", "JSONAllPathsWithTypes" -> "t",
-    "getSubcolumn" -> "t",
-    "initialQueryStartTime" -> "t", "initial_query_start_time" -> "t",
-    "file" -> "t",
-
-    // ---- round-10 batch 27: gamma/charset/IPv6-CIDR/IN-forms tail ----
-    "lgamma" -> "ch_lgamma", "tgamma" -> "ch_tgamma",
-    "convertCharset" -> "convert_charset",
-    "IPv6CIDRToRange" -> "t", "cutIPv6" -> "t",
-    "IPv4NumToStringClassC" -> "t",
-    "path" -> "t", "pathFull" -> "t", "basename" -> "t",
-    "in" -> "t", "notIn" -> "t", "nullIn" -> "t", "notNullIn" -> "t",
-    "globalIn" -> "t", "globalNotIn" -> "t", "globalNullIn" -> "t",
-    "globalNotNullIn" -> "t",
-    "inIgnoreSet" -> "t", "notInIgnoreSet" -> "t", "nullInIgnoreSet" -> "t",
-    "notNullInIgnoreSet" -> "t", "globalInIgnoreSet" -> "t",
-    "globalNotInIgnoreSet" -> "t", "globalNullInIgnoreSet" -> "t",
-    "globalNotNullInIgnoreSet" -> "t",
-    "partitionId" -> "t", "partitionID" -> "t",
-    "hasColumnInTable" -> "t",
-    "aes_encrypt_mysql" -> "t", "aes_decrypt_mysql" -> "t",
-    "extractKeyValuePairsWithEscaping" -> "t",
-    "reinterpretAsUInt128" -> "ch_reinterpret_u128",
-    "reinterpretAsInt128" -> "ch_reinterpret_i128",
-    "reinterpretAsUInt256" -> "ch_reinterpret_u256",
-    "reinterpretAsInt256" -> "ch_reinterpret_i256",
-    "reinterpretAsUUID" -> "ch_reinterpret_uuid",
-    "reinterpretAsFixedString" -> "ch_reinterpret_fixedstring",
-
-    // ---- round-10 batch 28: hierarchical dictionaries ----
-    "dictGetHierarchy" -> "t", "dictIsIn" -> "t",
-    "dictGetChildren" -> "t", "dictGetDescendants" -> "t",
-
-    // ---- round-10 batch 29: aggregate spelling tail (reference
-    // registerAggregateFunctions.cpp alias surface + the quantile
-    // median* spellings of AggregateFunctionQuantile.cpp) ----
-    "median" -> "t", "medianTDigest" -> "t", "medianBFloat16" -> "t",
-    "medianTiming" -> "t", "medianDeterministic" -> "t",
-    "medianTDigestWeighted" -> "t", "medianTimingWeighted" -> "t",
-    "medianBFloat16Weighted" -> "t", "medianGK" -> "t", "medianDD" -> "t",
-    "medianExactLow" -> "t", "medianExactHigh" -> "t",
-    "quantileExactLow" -> "t", "quantileExactHigh" -> "t",
-    "medianExactWeighted" -> "t", "quantileExactWeighted" -> "t",
-    "medianInterpolatedWeighted" -> "t", "quantileInterpolatedWeighted" -> "t",
-    "medianExactWeightedInterpolated" -> "t",
-    "quantileExactWeightedInterpolated" -> "t",
-    // RESPECT NULLS spellings: Spark first/last default ignoreNulls=false,
-    // i.e. they already respect NULLs (the reference's base any/anyLast
-    // SKIP NULLs — templated below with ignoreNulls=true)
-    "anyRespectNulls" -> "first", "any_respect_nulls" -> "first",
-    "anyValueRespectNulls" -> "first", "any_value_respect_nulls" -> "first",
-    "anyLastRespectNulls" -> "last", "anyLast_respect_nulls" -> "last",
-    "firstValueRespectNulls" -> "first", "first_value_respect_nulls" -> "first",
-    "lastValueRespectNulls" -> "last", "last_value_respect_nulls" -> "last",
-    "any" -> "t", "anyLast" -> "t", "any_value" -> "t", "anyValue" -> "t",
-    "array_agg" -> "collect_list", "array_concat_agg" -> "t",
-    "approx_top_k" -> "t", "approx_top_count" -> "t", "approx_top_sum" -> "t",
-    "groupArrayLast" -> "t",
-    "varSampStable" -> "var_samp", "stddevSampStable" -> "stddev_samp",
-    "covarSampStable" -> "covar_samp", "varPopStable" -> "var_pop",
-    "stddevPopStable" -> "stddev_pop", "covarPopStable" -> "covar_pop",
-    "corrStable" -> "corr",
-    "skewSamp" -> "t", "kurtSamp" -> "t", "kurtPop" -> "t",
-    "covarPopMatrix" -> "t", "covarSampMatrix" -> "t", "corrMatrix" -> "t",
-    "sumMap" -> "t", "minMap" -> "t", "maxMap" -> "t",
-    "sumMappedArrays" -> "t", "minMappedArrays" -> "t", "maxMappedArrays" -> "t",
-    "sumMapFiltered" -> "t", "sumMapWithOverflow" -> "t",
-    "sumMapFilteredWithOverflow" -> "t",
-    "groupBitmapXor" -> "t",
-    "distinctJSONPaths" -> "t", "distinctJSONPathsAndTypes" -> "t",
-    "distinctDynamicTypes" -> "t",
-
-    // ---- round-10 batch 30: scalar/introspection tail ----
-    // hyperbolics (reference FunctionMathUnary.h) are Spark built-ins
-    "sinh" -> "sinh", "cosh" -> "cosh", "tanh" -> "tanh",
-    "asinh" -> "asinh", "acosh" -> "acosh", "atanh" -> "atanh",
-    // CH factorial throws for n > 20; Spark's returns NULL (documented)
-    "factorial" -> "factorial",
-    "fromUnixTimestampInJodaSyntax" -> "t",
-    "kql_array_sort_asc" -> "t", "kql_array_sort_desc" -> "t",
-    "variantType" -> "t", "variantElement" -> "t",
-    "dynamicType" -> "t", "dynamicElement" -> "t",
-    "errorCodeToName" -> "error_code_to_name",
-    "revision" -> "t", "buildId" -> "t",
-    "filesystemAvailable" -> "t", "filesystemCapacity" -> "t",
-    "filesystemUnreserved" -> "t",
-    "getOSKernelVersion" -> "t",
-    "currentProfiles" -> "t", "enabledProfiles" -> "t",
-    "defaultProfiles" -> "t",
-    "current_schemas" -> "t", "currentSchemas" -> "t",
-    "current_query_id" -> "t", "currentQueryID" -> "t",
-    "initializeAggregation" -> "t",
-
-    // ---- round-10 batch 31: PromQL-style grid aggregates ----
-    "timeSeriesRateToGrid" -> "t", "timeSeriesDeltaToGrid" -> "t",
-    "timeSeriesInstantRateToGrid" -> "t",
-    "timeSeriesInstantDeltaToGrid" -> "t",
-    "timeSeriesResampleToGridWithStaleness" -> "t",
-    "timeSeriesLastTwoSamples" -> "t",
-
-    // ---- round-10 batch 32: embedded-geobase region functions ----
-    "regionToCity" -> "t", "regionToArea" -> "t", "regionToDistrict" -> "t",
-    "regionToCountry" -> "t", "regionToContinent" -> "t",
-    "regionToTopContinent" -> "t", "regionToPopulation" -> "t",
-    "regionToName" -> "t", "regionIn" -> "t", "regionHierarchy" -> "t",
-
-    // ---- round-10 batch 33: ML methods + sequenceMatchEvents ----
-    "stochasticLinearRegression" -> "t",
-    "stochasticLinearRegressionState" -> "t",
-    "stochasticLogisticRegression" -> "t",
-    "stochasticLogisticRegressionState" -> "t",
-    "evalMLMethod" -> "t", "sequenceMatchEvents" -> "t",
-    "sequenceMatch" -> "t",
-
-    // ---- round-10 batch 34: H3 index arithmetic (H3Cells.scala) ----
+    // H3 index arithmetic (H3Cells.scala)
     "h3GetResolution" -> "h3_resolution", "h3GetBaseCell" -> "h3_basecell",
     "h3IsValid" -> "h3_isvalid", "h3IsPentagon" -> "h3_ispentagon",
     "h3IsResClassIII" -> "h3_isresclassiii",
@@ -875,39 +273,20 @@ object ChSql {
     "h3NumHexagons" -> "h3_numhexagons",
     "h3GetPentagonIndexes" -> "h3_pentagonindexes",
     "h3ToParent" -> "h3_toparent", "h3ToCenterChild" -> "h3_tocenterchild",
-    "h3ToChildren" -> "h3_tochildren",
-    "h3GetRes0Indexes" -> "h3_res0_indexes",
+    "h3ToChildren" -> "h3_tochildren", "h3GetRes0Indexes" -> "h3_res0_indexes",
     "h3GetOriginIndexFromUnidirectionalEdge" -> "h3_edgeorigin",
     "h3UnidirectionalEdgeIsValid" -> "h3_edgeisvalid",
     "h3GetUnidirectionalEdgesFromHexagon" -> "h3_edgesfromhexagon",
-
-    // ---- round-10 batch 35: sqids + JSON dynamic-path introspection ----
-    "sqidEncode" -> "sqid_encode", "sqidDecode" -> "sqid_decode",
-    "sqid" -> "sqid_encode",
-    // our JSON model keeps every path dynamic (no shared-data demotion),
-    // so DynamicPaths = AllPaths and SharedDataPaths = [] — the
-    // max_dynamic_paths storage knob has no analog here (documented)
-    "JSONDynamicPaths" -> "t", "JSONDynamicPathsWithTypes" -> "t",
-    "JSONSharedDataPaths" -> "t", "JSONSharedDataPathsWithTypes" -> "t",
-    "isDynamicElementInSharedData" -> "t",
-    "globalVariable" -> "t",
-    // lowCardinality dictionary probes: our LowCardinality is a no-op
-    // encoding, so keys = the values themselves (indices — a per-block
-    // physical position — has no deterministic distributed analog and
-    // stays out of scope, documented)
-    "lowCardinalityKeys" -> "t",
-    // aggThrow(p): the reference's fault-injection test aggregate
-    "aggThrow" -> "t"
+    // ids / introspection
+    "generateUUIDv4" -> "uuid", "generateUUIDv7" -> "generate_uuid_v7",
+    "generateSnowflakeID" -> "generate_snowflake_id",
+    "generateULID" -> "generate_ulid", "generateSerialID" -> "generate_serial_id",
+    "fuzzBits" -> "fuzz_bits", "toTypeName" -> "ch_type_name",
+    "currentDatabase" -> "current_database", "currentUser" -> "current_user"
   )
 
-  /** Names whose call convention needs restructuring — handled by the
-    * rewriteCalls templates in rewrite(), NOT by plain alias substitution
-    * (the map above keeps them for surface inventory; value "t" = template). */
-  private val templated: Set[String] = Set(
-    "splitByChar", "multiIf", "avgWeighted", "arrayUniq", "bitHammingDistance",
-    "uniqExact", "quantileExact", "arrayStringConcat", "topK", "arrayCumSum",
-    "toDayOfWeek", "positionCaseInsensitive", "dateDiff", "date_diff") ++
-    aliases.collect { case (k, "t") => k }
+  /** A call's function name; group 1 is the name. */
+  private val callName = "\\b([A-Za-z_][A-Za-z0-9_]*)\\s*\\(".r
 
   /** CH JSON functions address by KEY NAME (variadic: each further
     * argument descends one level); get_json_object wants a JSONPath —
@@ -5138,7 +4517,8 @@ object ChSql {
     // ANY [LEFT|INNER] JOIN ... USING — dedupe the build side per key
     q = rewriteAnyJoin(q)
     // ALL JOIN is the default join semantics — drop the keyword
-    q = q.replaceAll("(?i)\\bALL\\s+(LEFT|RIGHT|INNER|FULL)(\\s+OUTER)?\\s+JOIN\\b", "$1$2 JOIN")
+    q = replaceOutsideStrings(q, "(?i)\\bALL\\s+(LEFT|RIGHT|INNER|FULL)(\\s+OUTER)?\\s+JOIN\\b".r)(m =>
+      m.group(1) + Option(m.group(2)).getOrElse("") + " JOIN")
 
     // toDateTime(x, 'tz'): the second argument is ALWAYS a timezone in CH
     // (never a format). CH stores an instant but RENDERS in tz; this engine
@@ -5431,11 +4811,12 @@ object ChSql {
 
     // count() -> count(*) (case-insensitive: the perf corpus spells
     // COUNT()/Count() too; allow whitespace before the parens)
-    q = q.replaceAll("""(?i)\bcount\s*\(\s*\)""", "count(*)")
+    q = replaceOutsideStrings(q, """(?i)\bcount\s*\(\s*\)""".r)(_ => "count(*)")
 
     // GLOBAL IN / GLOBAL JOIN are distribution hints in the reference;
     // Spark's optimizer owns distribution — drop the modifier.
-    q = q.replaceAll("""(?i)\bGLOBAL\s+(IN|NOT\s+IN|JOIN|ANY|ALL|SEMI|ANTI)\b""", "$1")
+    q = replaceOutsideStrings(q, """(?i)\bGLOBAL\s+(IN|NOT\s+IN|JOIN|ANY|ALL|SEMI|ANTI)\b""".r)(
+      _.group(1))
     // non-finite -> integer conversion and s2 coordinate validation
     // happen BEFORE the literal substitution, while the nan/inf token is
     // still visible (reference FunctionsConversion: CANNOT_CONVERT_TYPE;
@@ -5461,12 +4842,12 @@ object ChSql {
     }
     // CH spells the semi/anti qualifier BEFORE the side (ParserJoin:
     // SEMI LEFT JOIN); Spark wants LEFT SEMI JOIN
-    q = q.replaceAll("(?i)\\bSEMI\\s+LEFT(\\s+OUTER)?\\s+JOIN\\b", "LEFT SEMI JOIN")
-    q = q.replaceAll("(?i)\\bANTI\\s+LEFT(\\s+OUTER)?\\s+JOIN\\b", "LEFT ANTI JOIN")
+    q = replaceOutsideStrings(q, "(?i)\\b(SEMI|ANTI)\\s+LEFT(\\s+OUTER)?\\s+JOIN\\b".r)(m =>
+      s"LEFT ${m.group(1).toUpperCase} JOIN")
 
     // ALL JOIN strictness modifier (reference Joins.h All) is Spark's
     // default join semantics — drop it.
-    q = q.replaceAll("""(?i)\bALL\s+(INNER|LEFT|RIGHT|FULL)\b""", "$1")
+    q = replaceOutsideStrings(q, """(?i)\bALL\s+(INNER|LEFT|RIGHT|FULL)\b""".r)(_.group(1))
 
     // templates (argument-restructuring rewrites) — before plain aliases
     // round-10 batch 29: aggregate spelling tail (runs first — its
@@ -8398,9 +7779,11 @@ object ChSql {
         "dayofweek|dayofyear|doy|week|month|quarter|year)\\s+FROM\\b",
       "date_part('$1', ")
 
-    // plain 1:1 aliases (word-boundary)
-    for ((ch, sp) <- aliases if !templated.contains(ch)) {
-      q = q.replaceAll(s"""\\b$ch\\s*\\(""", sp + "(")
+    // plain renames: one scan of the masked text, so a name inside a
+    // literal or comment keeps its spelling
+    q = { val q0 = q
+      replaceOutsideStrings(q0, callName)(m =>
+        aliases.get(m.group(1)).fold(q0.substring(m.start, m.end))(_ + "("))
     }
 
     // ORDER BY x COLLATE 'name' (reference src/Columns/Collator.h — ICU
@@ -8426,7 +7809,7 @@ object ChSql {
     }
 
     // FINAL modifier: our catalog views are already merge-final
-    q = q.replaceAll("""(?i)\bFINAL\b""", "")
+    q = replaceOutsideStrings(q, """(?i)\bFINAL\b""".r)(_ => "")
 
     // GROUP BY ... WITH TOTALS (reference TotalsHavingTransform.cpp):
     // the per-group rows plus one grand-total row — exactly GROUPING
@@ -8837,27 +8220,14 @@ object ChSql {
     // string ('plus(1, 2, 3)') or a commented-out call must not trip the
     // arity check
     val q = SqlText.mask(q0)
-    val fnRe = "(?i)\\b([A-Za-z_][A-Za-z_0-9]*)\\s*\\(".r
-    for (m <- fnRe.findAllMatchIn(q)) {
-      val fn = m.group(1).toLowerCase
-      fnArity.get(fn).foreach { case (lo, hi) =>
-        // count top-level commas between the matching parens
-        var i = m.end; var depth = 1
-        var commas = 0; var nonWs = false
-        while (i < q.length && depth > 0) {
-          q.charAt(i) match {
-            case '(' | '[' => depth += 1; nonWs = true
-            case ')' | ']' => depth -= 1
-            case ',' => if (depth == 1) commas += 1; nonWs = true
-            case ch => if (!ch.isWhitespace) nonWs = true
-          }
-          i += 1
-        }
-        if (depth == 0) {
-          val n = if (!nonWs) 0 else commas + 1
+    for (m <- callName.findAllMatchIn(q)) {
+      fnArity.get(m.group(1).toLowerCase).foreach { case (lo, hi) =>
+        val close = SqlText.matching(q, m.end - 1)
+        if (close >= 0) {
+          val argTxt = q.substring(m.end, close)
+          val n = if (argTxt.isBlank) 0 else splitArgs(argTxt).length
           // a COLUMNS(...) matcher expands to several arguments later —
           // the textual count is meaningless there (00969)
-          val argTxt = q.substring(m.end, i - 1)
           val expandsLater =
             "(?i)\\bCOLUMNS\\s*\\(".r.findFirstIn(argTxt).isDefined ||
               argTxt.trim == "*"

@@ -83,24 +83,6 @@ object Streams {
                   opts: Map[String, String] = Map.empty): DataFrame =
     parseKafkaFeed(kafkaReader(spark, brokers, topic, opts).load())
 
-  /** Hopping (sliding) window counts. */
-  def hoppingCounts(events: DataFrame, size: String = "2 days",
-                    slide: String = "1 day", watermark: String = "1 day"): DataFrame =
-    events.withWatermark("ts", watermark)
-      .groupBy(window(col("ts"), size, slide))
-      .agg(count(lit(1)).as("n"))
-      .select(col("window.start").as("w_start"), col("n"))
-
-  /** Session windows per user (gap-based). */
-  def sessionStats(events: DataFrame, gap: String = "1 day",
-                   watermark: String = "1 day"): DataFrame =
-    events.withWatermark("ts", watermark)
-      .groupBy(session_window(col("ts"), gap), col("user_id"))
-      .agg(count(lit(1)).as("n_events"), sum(col("value")).as("total"))
-      .select(col("session_window.start").as("s_start"),
-        col("session_window.end").as("s_end"),
-        col("user_id"), col("n_events"), col("total"))
-
   /** Streaming dedup on a business key within the watermark horizon
     * (ReplacingMergeTree-on-ingest / insert dedup tokens). */
   def dedupWithinWatermark(events: DataFrame, keys: Seq[String],

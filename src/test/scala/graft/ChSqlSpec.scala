@@ -2558,4 +2558,35 @@ class ChSqlSpec extends AnyFunSuite {
       s.sql("SELECT count() FROM range(3)").collect())
     assert(e.getMessage.contains("WRONG_NUM_ARGS"), e.getMessage)
   }
+
+  test("function names and keywords inside a literal keep their spelling") {
+    val r = ch("SELECT 'count()' AS a, 'x FINAL' AS b, 'SEMI LEFT JOIN' AS c, " +
+      "'toYear(d)' AS d, toYear(toDate('2024-05-01')) AS y, " +
+      "'GLOBAL IN' AS e, 'ALL INNER JOIN' AS f, 'ANTI LEFT JOIN' AS g").collect().head
+    assert(Seq("a", "b", "c", "d", "e", "f", "g").map(r.getAs[String]) ==
+      Seq("count()", "x FINAL", "SEMI LEFT JOIN", "toYear(d)", "GLOBAL IN", "ALL INNER JOIN",
+        "ANTI LEFT JOIN"))
+    assert(r.getAs[Number]("y").intValue == 2024)
+  }
+
+  test("argument counts are checked on calls, not on literals or nested brackets") {
+    val e = intercept[IllegalArgumentException](ch("SELECT plus(1, 2, 3) AS x"))
+    assert(e.getMessage.contains("NUMBER_OF_ARGUMENTS_DOESNT_MATCH"), e.getMessage)
+    assert(ch("SELECT plus(1, [2, 3][1]) AS x").collect().head.getAs[Number](0).intValue == 3)
+    assert(ch("SELECT 'plus(1, 2, 3)' AS s").collect().head.getString(0) == "plus(1, 2, 3)")
+    assert(ch("SELECT generateSnowflakeID() AS id").collect().head.getLong(0) > 0)
+    // an empty argument list is 0 arguments (h3GetRes0Indexes takes exactly 0)
+    assert(ch("SELECT h3GetRes0Indexes() AS r").collect().head.getList[Long](0).size == 122)
+  }
+
+  test("the rename table is applied in one pass: no target is itself renamed") {
+    val chained = ChSql.aliases.filter { case (_, to) => ChSql.aliases.contains(to) }
+    assert(chained.isEmpty, s"renamed twice: $chained")
+    assert(!ChSql.aliases.valuesIterator.contains("t"))
+    // a name CH and Spark share has no entry, so whitespace before its
+    // paren reaches Spark as written
+    val r = ch("SELECT if (1 = 1, 'a', 'b') AS a, greatest (1, 3) AS b, " +
+      "left ('abc', 2) AS c, repeat ('x', 2) AS d").collect().head
+    assert(r.toSeq.map(_.toString) == Seq("a", "3", "ab", "xx"))
+  }
 }
