@@ -23,7 +23,6 @@ import org.apache.spark.sql.functions._
   */
 object ChParts {
   case class Part(
-      table: String,
       name: String,
       partition: String,
       partitionId: String,
@@ -53,24 +52,17 @@ object ChParts {
                      mut: Long): String =
     s"${pid}_${minB}_${maxB}_$lvl" + (if (mut > 0) s"_$mut" else "")
 
-  private val parts =
-    scala.collection.concurrent.TrieMap.empty[String, Vector[Part]]
-  private val nextBlock =
-    scala.collection.concurrent.TrieMap.empty[String, Long]
+  private val parts = TableMeta.perTable[Vector[Part]]()
+  private val nextBlock = TableMeta.perTable[Long]()
   /** PARTITION BY expression (CH dialect) per tracked table; "" = none. */
-  private val partBy =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-  private val granularity =
-    scala.collection.concurrent.TrieMap.empty[String, Long]
+  private val partBy = TableMeta.perTable[String]()
+  private val granularity = TableMeta.perTable[Long]()
   /** Delete-TTL expression (CH dialect) per tracked table. */
-  private val ttlBy =
-    scala.collection.concurrent.TrieMap.empty[String, String]
+  private val ttlBy = TableMeta.perTable[String]()
   /** ORDER BY key columns per tracked table (primary-key size calc). */
-  private val orderKeysBy =
-    scala.collection.concurrent.TrieMap.empty[String, Seq[String]]
+  private val orderKeysBy = TableMeta.perTable[Seq[String]]()
   /** Tables whose primary key was UNLOADed (system.parts shows 0). */
-  private val pkUnloaded =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+  private val pkUnloaded = TableMeta.perTable[Unit]()
 
   def setOrderKeys(table: String, keys: Seq[String]): Unit = {
     orderKeysBy.put(table, keys); ()
@@ -78,28 +70,14 @@ object ChParts {
   /** SYSTEM UNLOAD/LOAD PRIMARY KEY [table] (reference
     * InterpreterSystemQuery::unloadPrimaryKeys). */
   def unloadPrimaryKey(table: Option[String]): Unit = table match {
-    case Some(t) => pkUnloaded.add(t); ()
-    case None => parts.keys.foreach(pkUnloaded.add); ()
+    case Some(t) => pkUnloaded.put(t, ()); ()
+    case None => parts.keys.foreach(pkUnloaded.put(_, ()))
   }
   def loadPrimaryKey(table: Option[String]): Unit = table match {
     case Some(t) => pkUnloaded.remove(t); ()
     case None => pkUnloaded.clear()
   }
-  private val mergesStopped =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
-  def clear(): Unit = {
-    parts.clear(); nextBlock.clear(); partBy.clear(); granularity.clear()
-    ttlBy.clear(); mergesStopped.clear(); orderKeysBy.clear()
-    pkUnloaded.clear(); detachedParts.clear()
-  }
-
-  def drop(table: String): Unit = {
-    parts.remove(table); nextBlock.remove(table); partBy.remove(table)
-    granularity.remove(table); ttlBy.remove(table)
-    mergesStopped.remove(table); orderKeysBy.remove(table)
-    pkUnloaded.remove(table); detachedParts.remove(table)
-  }
+  private val mergesStopped = TableMeta.perTable[Unit]()
 
   def setTtl(table: String, expr: String): Unit = { ttlBy.put(table, expr); () }
 
@@ -137,7 +115,7 @@ object ChParts {
             f == p.partition || f == p.partitionId))
           p.copy(isFrozen = 1) else p)))
 
-  def stopMerges(table: String): Unit = { mergesStopped.add(table); () }
+  def stopMerges(table: String): Unit = { mergesStopped.put(table, ()); () }
   def startMerges(table: String): Unit = { mergesStopped.remove(table); () }
 
   /** A mutation (ALTER UPDATE/DELETE) allocates a block number and
@@ -382,7 +360,7 @@ object ChParts {
       nextBlock.put(table, blk + 1)
       val pid = if (pb.isEmpty) "all" else partitionIdOf(g.pv)
       val marks = marksOf(g.n, gran)
-      Part(table, s"${pid}_${blk}_${blk}_0",
+      Part(s"${pid}_${blk}_${blk}_0",
         if (pb.isEmpty) "tuple()" else partitionTextOf(g.pv), pid,
         "Active", g.n, 0, blk, blk, marks,
         // bytes are a deterministic estimate (no real on-disk layout)
@@ -452,7 +430,7 @@ object ChParts {
       val lvl = group.map(_.level).max + 1
       val rows = group.map(_.rows).sum
       val mut = group.map(_.mutation).max
-      val merged = Part(table, mkName(pid, minB, maxB, lvl, mut),
+      val merged = Part(mkName(pid, minB, maxB, lvl, mut),
         group.head.partition, pid, "Active", rows, lvl, minB, maxB,
         marksOf(rows, gran), 80L + 10L * rows,
         if (rows <= 8192) "Compact" else "Wide", 0,
@@ -473,8 +451,7 @@ object ChParts {
   }
 
   /** DETACH stash: parts removed from the table but re-attachable. */
-  private val detachedParts =
-    scala.collection.concurrent.TrieMap.empty[String, Vector[Part]]
+  private val detachedParts = TableMeta.perTable[Vector[Part]]()
 
   /** Remove matching active parts (DROP = forget, DETACH = stash). */
   def removeParts(table: String, pred: Part => Boolean,
@@ -502,7 +479,7 @@ object ChParts {
     val blk = nextBlock.getOrElse(table, 1L)
     nextBlock.put(table, blk + 1)
     val gran = granularity.getOrElse(table, 8192L)
-    val p = Part(table, s"${pid}_${blk}_${blk}_0", partition, pid,
+    val p = Part(s"${pid}_${blk}_${blk}_0", partition, pid,
       "Active", rows, 0, blk, blk, marksOf(rows, gran), 80L + 10L * rows,
       if (rows <= 8192) "Compact" else "Wide", 0)
     parts.put(table, parts.getOrElse(table, Vector.empty) :+ p)
@@ -519,8 +496,8 @@ object ChParts {
     import spark.implicits._
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types._
-    val all = parts.values.flatten.toSeq
-      .sortBy(p => (p.table, p.name))
+    val all = parts.toSeq.flatMap { case (t, ps) => ps.map(t -> _) }
+      .sortBy { case (t, p) => (t, p.name) }
     val schema = StructType(Seq(
       StructField("database", StringType), StructField("table", StringType),
       StructField("name", StringType), StructField("partition", StringType),
@@ -543,17 +520,17 @@ object ChParts {
       StructField("primary_key_bytes_in_memory", LongType),
       StructField("primary_key_bytes_in_memory_allocated", LongType),
       StructField("_state", StringType)))
-    val rows = all.map(p => Row(
-      "default", p.table, p.name, p.partition, p.partitionId,
+    val rows = all.map { case (t, p) => Row(
+      "default", t, p.name, p.partition, p.partitionId,
       if (p.state == "Active") 1 else 0, p.rows, p.level,
       p.minBlock, p.maxBlock, p.marks, p.bytesOnDisk, p.bytesOnDisk,
       8L * p.rows, p.partType, p.isFrozen, "default", "MergeTree",
       p.minTime, p.maxTime, p.delMin, p.delMax,
       Row(Seq.empty[String], Seq.empty[java.sql.Timestamp],
         Seq.empty[java.sql.Timestamp]),
-      if (pkUnloaded.contains(p.table)) 0L else p.pkBytes,
-      if (pkUnloaded.contains(p.table)) 0L else p.pkBytes,
-      p.state))
+      if (pkUnloaded.contains(t)) 0L else p.pkBytes,
+      if (pkUnloaded.contains(t)) 0L else p.pkBytes,
+      p.state) }
     spark.createDataFrame(
         new java.util.ArrayList[Row](
           scala.jdk.CollectionConverters.SeqHasAsJava(rows).asJava), schema)
@@ -563,12 +540,12 @@ object ChParts {
       .withColumn("bytes", org.apache.spark.sql.functions.col("bytes_on_disk"))
       .createOrReplaceTempView("system_parts")
     val sparseByTable = scala.collection.mutable.Map.empty[String, Map[(String, String), String]]
-    val cols = all.flatMap { p =>
-      val sk = sparseByTable.getOrElseUpdate(p.table,
-        try sparseKinds(p.table)
+    val cols = all.flatMap { case (t, p) =>
+      val sk = sparseByTable.getOrElseUpdate(t,
+        try sparseKinds(t)
         catch { case scala.util.control.NonFatal(_) => Map.empty })
-      colTypes(p.table).map { case (cn, ct) =>
-        ("default", p.table, p.name, if (p.state == "Active") 1 else 0,
+      colTypes(t).map { case (cn, ct) =>
+        ("default", t, p.name, if (p.state == "Active") 1 else 0,
           p.rows, cn, ct, p.bytesOnDisk, p.bytesOnDisk, 8L * p.rows,
           p.partition, p.partType, sk.getOrElse((p.name, cn), "Default"))
       }

@@ -288,6 +288,60 @@ object ChSql {
   /** A call's function name; group 1 is the name. */
   private val callName = "\\b([A-Za-z_][A-Za-z0-9_]*)\\s*\\(".r
 
+  /** Rename every call whose name `to` maps, in one scan of the masked
+    * text: a name inside a literal or comment keeps its spelling. */
+  private def renameCalls(q: String, to: String => Option[String]): String =
+    replaceOutsideStrings(q, callName)(m =>
+      to(m.group(1)).fold(q.substring(m.start, m.end))(_ + "("))
+
+  /** MySQL-compat and composite spellings -> their CH names, keyed in
+    * lower case: the reference registers them CASE-INSENSITIVE
+    * (FunctionFactory::registerFunction Case::Insensitive). */
+  private val mysqlCompatNames: Map[String, String] = Map(
+    "INET_ATON" -> "IPv4StringToNum", "INET_NTOA" -> "IPv4NumToString",
+    "INET6_ATON" -> "IPv6StringToNum", "INET6_NTOA" -> "IPv6NumToString",
+    // round-10 batch 26: the remaining MySQL-compat spellings
+    "FORMAT_BYTES" -> "formatReadableSize",
+    "FROM_BASE64" -> "base64Decode", "TO_BASE64" -> "base64Encode",
+    "FROM_DAYS" -> "fromDaysSinceYearZero",
+    "TO_DAYS" -> "toDaysSinceYearZero",
+    "FROM_UNIXTIME" -> "fromUnixTimestamp",
+    "TO_UNIXTIME" -> "toUnixTimestamp",
+    "REGEXP_MATCHES" -> "match",
+    "DATE_DIFF" -> "dateDiff", "TIMESTAMP_DIFF" -> "dateDiff",
+    "MILLISECOND" -> "toMillisecond",
+    "SUBSTRING_INDEX" -> "substringIndex",
+    "YYYYMMDDhhmmssToDateTime64" -> "YYYYMMDDhhmmssToDateTime",
+    "aes_encrypt_mysql" -> "encrypt", "aes_decrypt_mysql" -> "decrypt",
+    "extractKeyValuePairsWithEscaping" -> "extractKeyValuePairs",
+    // round-10 batch 30: registered alias of extractKeyValuePairs
+    // (reference extractKeyValuePairs.cpp:255)
+    "mapFromString" -> "extractKeyValuePairs"
+  ).map { case (k, v) => k.toLowerCase -> v }
+
+  /** `<base>UTF8` spellings that rename to their base. */
+  private val utf8Renames: Map[String, String] = Seq("editDistance",
+    "levenshteinDistance", "hasSubsequence", "hasSubsequenceCaseInsensitive",
+    "multiSearchAny", "ngramDistance", "ngramSearch",
+    "countSubstrings", "splitByChar",
+    // round-10 batch 20: the remaining *UTF8 spellings whose base is
+    // position-free or whose positions are char-based already
+    // (multiSearch* positions are code points in the UTF8 variants —
+    // Spark's instr counts chars, so the UTF8 spelling is the native
+    // one and the canonicalization is exact on ASCII)
+    "multiSearchAnyCaseInsensitive", "multiSearchFirstIndex",
+    "multiSearchFirstIndexCaseInsensitive", "multiSearchFirstPosition",
+    "multiSearchFirstPositionCaseInsensitive", "multiSearchAllPositions",
+    "multiSearchAllPositionsCaseInsensitive",
+    "ngramDistanceCaseInsensitive", "ngramSearchCaseInsensitive"
+  ).map(b => (b + "UTF8") -> b).toMap
+
+  /** `<base>RFC` (strict RFC 3986 host parse) spellings that rename to
+    * their base: parse_url is URI-based already. */
+  private val rfcRenames: Map[String, String] =
+    Seq("domainWithoutWWW", "domain", "topLevelDomain", "port")
+      .map(b => (b + "RFC") -> b).toMap
+
   /** CH JSON functions address by KEY NAME (variadic: each further
     * argument descends one level); get_json_object wants a JSONPath —
     * chain every key after '$.' unless the caller already passed a
@@ -644,9 +698,6 @@ object ChSql {
   private val registeredFns =
     scala.collection.concurrent.TrieMap.empty[String, (Seq[String], String)]
 
-  /** CREATE DICTIONARY registry: dictionary name -> (source table, key
-    * column) — gives dictGet its CH-native 3-argument form (reference
-    * declares the key in the dictionary DDL the same way). */
   /** Reset every per-session dialect table/metadata registry and drop
     * the session's temp views — the analog of clickhouse-test giving
     * each stateless test its OWN fresh database. Called by the anchor
@@ -655,20 +706,9 @@ object ChSql {
     * engine metadata / flattened-Nested names from one test rewrite a
     * LATER test's text (shared-JVM ordering artifacts). */
   def resetSessionState(spark: SparkSession): Unit = {
-    registeredDicts.clear(); dictParents.clear()
-    tableTtls.clear(); tableDefaults.clear(); tableAliases.clear()
-    tableEngines.clear(); tableColTz.clear(); tableColMeta.clear()
-    engineBacking.clear(); engineBlockSeq.clear(); joinEngineKeys.clear()
-    legacyFormatTables.clear()
-    alterVirtualCols.clear(); hiddenInsertCols.clear()
-    tableDdlTail.clear(); tableColExtras.clear(); tableIndexes.clear()
-    tableProjections.clear(); replicaGroup.clear(); tableSparseRatio.clear()
-    ChParts.clear(); virtualShadow.clear(); detachedRows.clear()
-    recordedSettings.clear()
-    nestedColNames.clear()
-    distributedTables.clear(); distributedIntents.clear()
-    matViews.clear(); replicaPaths.clear()
-    dynamicCols.clear()
+    TableMeta.clearAll()
+    registeredDicts.clear(); dictParents.clear(); recordedSettings.clear()
+    nestedColNames.clear(); tableAliases.clear(); replicaPaths.clear()
     emitTotalsMarker = false
     spark.conf.set("spark.graft.chAggNullForEmpty", "false")
     spark.conf.set("spark.graft.chEmptyResultEmptySet", "false")
@@ -692,6 +732,9 @@ object ChSql {
     java.util.Collections.synchronizedMap(
       new java.util.WeakHashMap[SparkSession, java.lang.Boolean]))
 
+  /** CREATE DICTIONARY registry: dictionary name -> (source table, key
+    * column) — gives dictGet its CH-native 3-argument form (reference
+    * declares the key in the dictionary DDL the same way). */
   private val registeredDicts =
     scala.collection.concurrent.TrieMap.empty[String, (String, String)]
 
@@ -704,14 +747,12 @@ object ChSql {
     * (reference MergeTreeData TTL; rows expire when the expression is in
     * the past). Applied at OPTIMIZE time, like the reference's TTL merges
     * (round 11). */
-  private val tableTtls =
-    scala.collection.concurrent.TrieMap.empty[String, String]
+  private val tableTtls = TableMeta.perTable[String]()
 
   /** table name -> declared DEFAULT/MATERIALIZED/ALIAS expressions from a
     * bare CREATE TABLE (reference ColumnsDescription defaults): unlisted
     * columns of a subsequent INSERT are computed from these. */
-  private val tableDefaults =
-    scala.collection.concurrent.TrieMap.empty[String, Seq[(String, String)]]
+  private val tableDefaults = TableMeta.perTable[Seq[(String, String)]]()
 
   /** CH table names that are not valid unquoted Spark identifiers (the
     * stateless tests name tables `03130_test` etc.): chName -> the safe
@@ -728,29 +769,17 @@ object ChSql {
     * stateless corpus does not rely on them). */
   private case class EngineMeta(family: String, keys: Seq[String],
       sign: Option[String], version: Option[String], measures: Seq[String])
-  private val tableEngines =
-    scala.collection.concurrent.TrieMap.empty[String, EngineMeta]
+  private val tableEngines = TableMeta.perTable[EngineMeta]()
 
-  /** FINAL-merge backing per engine table: the unioned insert blocks
-    * with a recorded `__gblock` insert sequence. The reference merges
-    * parts in BLOCK-NUMBER order (each INSERT allocates a monotonic
-    * block number); monotonically_increasing_id over the unioned view is
-    * partition-major, which need not equal insert order once a block has
-    * more than one partition — so insert order is recorded HERE at
-    * INSERT time instead. Any non-INSERT view replacement (ALTER,
-    * mutation, OPTIMIZE, TRUNCATE, DROP) invalidates the backing and
-    * FINAL falls back to the view (single merged block). */
   /** (join kind, key columns) of ENGINE = Join tables, for joinGet
     * lookups — joinGet requires a LEFT join table (reference
     * StorageJoin::joinGet: INCOMPATIBLE_TYPE_OF_JOIN otherwise). */
-  private val joinEngineKeys =
-    scala.collection.concurrent.TrieMap.empty[String, (String, Seq[String])]
+  private val joinEngineKeys = TableMeta.perTable[(String, Seq[String])]()
 
   /** Tables created with the DEPRECATED positional MergeTree syntax
     * (ENGINE = MergeTree(date, key, granularity)) — per-table SETTING
     * changes are rejected on them (reference AlterCommands). */
-  private val legacyFormatTables: java.util.Set[String] =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+  private val legacyFormatTables = TableMeta.perTable[Unit]()
 
   /** Recognized MergeTree per-table settings (reference
     * MergeTreeSettings.h) — unknown names error (UNKNOWN_SETTING). */
@@ -779,10 +808,24 @@ object ChSql {
     "merge_tree_clear_old_temporary_directories_interval_seconds",
     "merge_tree_clear_old_parts_interval_seconds")
 
-  private val engineBacking =
-    scala.collection.concurrent.TrieMap.empty[String, DataFrame]
-  private val engineBlockSeq =
-    scala.collection.concurrent.TrieMap.empty[String, Long]
+  /** FINAL-merge backing per engine table: the unioned insert blocks
+    * with a recorded `__gblock` insert sequence. The reference merges
+    * parts in BLOCK-NUMBER order (each INSERT allocates a monotonic
+    * block number); monotonically_increasing_id over the unioned view is
+    * partition-major, which need not equal insert order once a block has
+    * more than one partition — so insert order is recorded HERE at
+    * INSERT time instead. Any non-INSERT view replacement (ALTER,
+    * mutation, OPTIMIZE, TRUNCATE, DROP) goes through `replaceView`,
+    * which drops the backing, and FINAL falls back to the view (single
+    * merged block). */
+  private val engineBacking = TableMeta.perTable[DataFrame]()
+  private val engineBlockSeq = TableMeta.perTable[Long]()
+
+  /** Re-register a table's view with content that did not come from an
+    * INSERT; its FINAL backing no longer matches and is dropped. */
+  private def replaceView(name: String, df: DataFrame): Unit = {
+    df.createOrReplaceTempView(name); engineBacking.remove(name)
+  }
 
   /** Stamp an INSERT block with the table's next block sequence and
     * extend the FINAL backing. Block 0 bootstraps from the pre-insert
@@ -819,29 +862,26 @@ object ChSql {
 
   /** DateTime('tz') columns per table: type-default (epoch) fills render
     * as the declared zone's WALL CLOCK, matching inserted literals. */
-  private val tableColTz =
-    scala.collection.concurrent.TrieMap.empty[String, Map[String, String]]
+  private val tableColTz = TableMeta.perTable[Map[String, String]]()
 
   /** Raw DDL tail (everything after the column list) per bare-created
     * table — SHOW CREATE reconstructs the canonical engine/clause block
     * from it (reference InterpreterShowCreateQuery). */
-  private val tableDdlTail =
-    scala.collection.concurrent.TrieMap.empty[String, String]
+  private val tableDdlTail = TableMeta.perTable[String]()
 
   /** Declared per-column COMMENT / CODEC / TTL clauses (metadata-only in
     * the reference — ColumnsDescription) per bare-created table:
     * col -> (comment, codec args, ttl expr). Rendered by SHOW CREATE and
     * DESCRIBE; ALTER COMMENT COLUMN updates the comment slot. */
   private val tableColExtras =
-    scala.collection.concurrent.TrieMap.empty[String, Map[String, (String, String, String)]]
+    TableMeta.perTable[Map[String, (String, String, String)]]()
 
   /** Declared skip indexes per table, in declaration order:
     * (index name, definition text after the name — e.g.
     * "u64 * i32 TYPE minmax GRANULARITY 10"). The reference keeps these
     * in IndicesDescription and SHOW CREATE re-renders them inside the
     * column block; ALTER ADD/DROP INDEX maintains the list. */
-  private val tableIndexes =
-    scala.collection.concurrent.TrieMap.empty[String, Vector[(String, String)]]
+  private val tableIndexes = TableMeta.perTable[Vector[(String, String)]]()
 
   /** SHOW CREATE / DESCRIBE render Tuple(...) types one element per line
     * (reference IDataType::getName through formatAST one_line=false):
@@ -879,14 +919,12 @@ object ChSql {
   /** Declared projections per table, in order: (name, body text inside
     * the parens). SHOW CREATE re-renders them with the reference's
     * clause-per-line statement formatting. */
-  private val tableProjections =
-    scala.collection.concurrent.TrieMap.empty[String, Vector[(String, String)]]
+  private val tableProjections = TableMeta.perTable[Vector[(String, String)]]()
 
   /** Per-table ratio_of_defaults_for_sparse_serialization (CREATE
     * SETTINGS; reference MergeTreeSettings default 0.9375). A part's
     * column serializes Sparse when its default-value ratio is >= this. */
-  private val tableSparseRatio =
-    scala.collection.concurrent.TrieMap.empty[String, Double]
+  private val tableSparseRatio = TableMeta.perTable[Double]()
 
   /** serialization_kind per (part, column) for system.parts_columns:
     * computed from the virtual-column shadow at query time (test scale;
@@ -928,8 +966,7 @@ object ChSql {
   /** table -> its Replicated* zookeeper path: tables sharing a path are
     * replicas of one another; metadata ALTERs propagate to all of them
     * (reference ReplicatedMergeTree ALTER via the replication log). */
-  private val replicaGroup =
-    scala.collection.concurrent.TrieMap.empty[String, String]
+  private val replicaGroup = TableMeta.perTable[String]()
 
   /** Drop the table-level TTL clause from a raw DDL tail (used by
     * ALTER ... MODIFY/REMOVE TTL so SHOW CREATE reflects the change). */
@@ -1126,14 +1163,19 @@ object ChSql {
     * (_part, _partition_id, _block_number, _part_offset,
     * _sample_factor), maintained at INSERT; reads that mention one are
     * routed here (reference MergeTreeVirtualColumns). */
-  private val virtualShadow =
-    scala.collection.concurrent.TrieMap.empty[String, DataFrame]
+  private val virtualShadow = TableMeta.perTable[DataFrame]()
   /** DETACHed parts' rows (with virtuals), awaiting ATTACH. */
-  private val detachedRows =
-    scala.collection.concurrent.TrieMap.empty[String, DataFrame]
+  private val detachedRows = TableMeta.perTable[DataFrame]()
   private val virtualColNames = Seq(
     "_part", "_partition_id", "_partition_value", "_block_number",
     "_part_offset", "_sample_factor")
+
+  /** Drop the `__vt_<name>` view that a read of a row virtual registers
+    * over the table's shadow, with its hidden-column entry. */
+  private def dropShadowView(spark: SparkSession, name: String): Unit = {
+    spark.catalog.dropTempView("__vt_" + name)
+    hiddenInsertCols.remove("__vt_" + name)
+  }
 
   /** Record an insert block's data parts and extend the virtual-column
     * shadow (bounded lineage: shadow re-reads stay cheap at test scale;
@@ -1296,8 +1338,8 @@ object ChSql {
   /** Full declared column metadata per bare-created table, for DESCRIBE
     * (reference InterpreterDescribeQuery prints name, DECLARED type,
     * default kind/expression, comment, codec, ttl — 7 TSV fields). */
-  private val tableColMeta = scala.collection.concurrent.TrieMap
-    .empty[String, Seq[(String, String, String, String)]]
+  private val tableColMeta =
+    TableMeta.perTable[Seq[(String, String, String, String)]]()
 
   /** The DECLARED CH type of `col` in any of `tables` (first match) —
     * lets renderers (JSONEachRow 64-bit quoting, DateTime64 scale)
@@ -1385,14 +1427,12 @@ object ChSql {
   /** Columns ADDed by ALTER with no DEFAULT and never written: CH stores
     * no data for them, so reads substitute the CURRENT type's default —
     * a later MODIFY re-defaults instead of casting the old fill. */
-  private val alterVirtualCols =
-    scala.collection.concurrent.TrieMap.empty[String, Set[String]]
+  private val alterVirtualCols = TableMeta.perTable[Set[String]]()
 
   /** MATERIALIZED/ALIAS columns per table: excluded from positional
     * INSERT targets (reference ColumnsDescription::getInsertable) —
     * their values always compute from the declared expression. */
-  private val hiddenInsertCols =
-    scala.collection.concurrent.TrieMap.empty[String, Set[String]]
+  private val hiddenInsertCols = TableMeta.perTable[Set[String]]()
 
   /** Flattened Nested sub-columns (`nest.x` from `nest Nested(x T)`) —
     * dotted names that must be BACKTICK-quoted before Spark parses them
@@ -1770,20 +1810,17 @@ object ChSql {
     * shard count). Reads fan out over every shard (each shard is this
     * process, so N shards re-read the underlying table N times); writes
     * route to the underlying table (reference StorageDistributed). */
-  private val distributedTables =
-    scala.collection.concurrent.TrieMap.empty[String, (String, Int)]
+  private val distributedTables = TableMeta.perTable[(String, Int)]()
 
   /** Distributed routing INTENT for proxies whose target didn't exist
     * at create — consulted only for cycle detection (INFINITE_LOOP). */
-  private val distributedIntents =
-    scala.collection.concurrent.TrieMap.empty[String, String]
+  private val distributedIntents = TableMeta.perTable[String]()
 
   /** Materialized views by SOURCE table: src -> (mv name, SELECT text).
     * The reference's MV semantics: the SELECT runs over each INSERTED
     * block and appends to the view's storage (StorageMaterializedView) —
     * not a recompute over the source. */
-  private val matViews =
-    scala.collection.concurrent.TrieMap.empty[String, List[(String, String)]]
+  private val matViews = TableMeta.perTable[List[(String, String)]]()
 
   /** ReplicatedMergeTree zookeeper path -> first table registered on it;
     * later tables on the same path are replicas — reads alias the
@@ -1793,8 +1830,7 @@ object ChSql {
 
   /** Columns declared Dynamic/JSON/Variant per table — the reference
     * forbids ALTER UPDATE on them (CANNOT_UPDATE_COLUMN). */
-  private val dynamicCols =
-    scala.collection.concurrent.TrieMap.empty[String, Set[String]]
+  private val dynamicCols = TableMeta.perTable[Set[String]]()
 
   /** One CSV line -> cells, honoring double-quoted fields with ""
     * escapes (reference Formats/Impl CSVRowInputFormat). */
@@ -1848,14 +1884,12 @@ object ChSql {
   }
 
   /** DETACH TABLE stash: name -> the table's content at detach time. */
-  private val detachedTables =
-    scala.collection.concurrent.TrieMap.empty[String, DataFrame]
+  private val detachedTables = TableMeta.perTable[DataFrame]()
 
   /** vector_similarity index declarations: table -> (column, dimension).
     * Inserted vectors of any other size are INCORRECT_DATA (reference
     * MergeTreeIndexVectorSimilarity insert validation). */
-  private val vectorIndexDims =
-    scala.collection.concurrent.TrieMap.empty[String, (String, Int)]
+  private val vectorIndexDims = TableMeta.perTable[(String, Int)]()
 
   private def safeViewName(name: String): String =
     if (name.matches("[A-Za-z_]\\w*")) name
@@ -1909,6 +1943,10 @@ object ChSql {
     }
   }
 
+  /** `FROM <table>` in a materialized view's SELECT text. */
+  private def fromClause(table: String): scala.util.matching.Regex =
+    ("(?i)\\bFROM\\s+" + java.util.regex.Pattern.quote(table) + "\\b").r
+
   /** Push one inserted block through every materialized view on `src`
     * (reference StorageMaterializedView: the MV SELECT runs over the
     * inserted block, its result appends to the view's storage). */
@@ -1918,9 +1956,8 @@ object ChSql {
          if spark.catalog.tableExists(mv)) {
       val batchName = s"__mv_block_$src"
       block.createOrReplaceTempView(batchName)
-      val transformed = sql(spark, dir, ("(?i)\\bFROM\\s+" +
-        java.util.regex.Pattern.quote(src) + "\\b").r
-        .replaceAllIn(sel, s"FROM $batchName"))
+      val transformed = sql(spark, dir,
+        fromClause(src).replaceAllIn(sel, s"FROM $batchName"))
       val appended = spark.table(mv).unionByName(transformed).persist()
       appended.count()
       appended.createOrReplaceTempView(mv)
@@ -4702,33 +4739,9 @@ object ChSql {
     q = rewriteTernary(q)
 
     // MySQL-compat / composite IP names canonicalize to their CH forms
-    // BEFORE the IP templates fire (rewrites run in source order)
-    for ((compat, chName) <- Seq(
-        "INET_ATON" -> "IPv4StringToNum", "INET_NTOA" -> "IPv4NumToString",
-        "INET6_ATON" -> "IPv6StringToNum", "INET6_NTOA" -> "IPv6NumToString",
-        // round-10 batch 26: the remaining MySQL-compat (case-insensitive
-        // in the reference) spellings canonicalize to their CH names
-        // before the templates fire
-        "FORMAT_BYTES" -> "formatReadableSize",
-        "FROM_BASE64" -> "base64Decode", "TO_BASE64" -> "base64Encode",
-        "FROM_DAYS" -> "fromDaysSinceYearZero",
-        "TO_DAYS" -> "toDaysSinceYearZero",
-        "FROM_UNIXTIME" -> "fromUnixTimestamp",
-        "TO_UNIXTIME" -> "toUnixTimestamp",
-        "REGEXP_MATCHES" -> "match",
-        "DATE_DIFF" -> "dateDiff", "TIMESTAMP_DIFF" -> "dateDiff",
-        "MILLISECOND" -> "toMillisecond",
-        "SUBSTRING_INDEX" -> "substringIndex",
-        "YYYYMMDDhhmmssToDateTime64" -> "YYYYMMDDhhmmssToDateTime",
-        "aes_encrypt_mysql" -> "encrypt", "aes_decrypt_mysql" -> "decrypt",
-        "extractKeyValuePairsWithEscaping" -> "extractKeyValuePairs",
-        // round-10 batch 30: registered alias of extractKeyValuePairs
-        // (reference extractKeyValuePairs.cpp:255)
-        "mapFromString" -> "extractKeyValuePairs"))
-      // the reference registers the MySQL-compat names CASE-INSENSITIVE
-      // (FunctionFactory::registerFunction Case::Insensitive) — 00232
-      // spells format_bytes in lowercase
-      q = q.replaceAll(s"(?i)\\b$compat\\s*\\(", chName + "(")
+    // BEFORE the IP templates fire (rewrites run in source order); 00232
+    // spells format_bytes in lowercase
+    q = renameCalls(q, n => mysqlCompatNames.get(n.toLowerCase))
     // IPv4ToIPv6(num): the IPv4-mapped ::ffff:a.b.c.d address — emit
     // IPv4NumToString(...) so the later template expands it
     q = rewriteCalls(q, "IPv4ToIPv6")(a =>
@@ -4741,26 +4754,10 @@ object ChSql {
     // position* are NOT here: their base names are BYTE-based in the
     // reference and the UTF8 variants char-based, so each side gets its
     // own rewrite below.
-    for (base <- Seq("editDistance",
-        "levenshteinDistance", "hasSubsequence", "hasSubsequenceCaseInsensitive",
-        "multiSearchAny", "ngramDistance", "ngramSearch",
-        "countSubstrings", "splitByChar",
-        // round-10 batch 20: the remaining *UTF8 spellings whose base is
-        // position-free or whose positions are char-based already
-        // (multiSearch* positions are code points in the UTF8 variants —
-        // Spark's instr counts chars, so the UTF8 spelling is the native
-        // one and the canonicalization is exact on ASCII)
-        "multiSearchAnyCaseInsensitive", "multiSearchFirstIndex",
-        "multiSearchFirstIndexCaseInsensitive", "multiSearchFirstPosition",
-        "multiSearchFirstPositionCaseInsensitive", "multiSearchAllPositions",
-        "multiSearchAllPositionsCaseInsensitive",
-        "ngramDistanceCaseInsensitive", "ngramSearchCaseInsensitive"))
-      q = q.replaceAll(s"\\b${base}UTF8\\s*\\(", base + "(")
-    // URL RFC spellings (strict RFC 3986 host parse) canonicalize to the
-    // base parser — parse_url is URI-based already; runs early so the
-    // base templates still see them (round-10 batch 22)
-    for (base <- Seq("domainWithoutWWW", "domain", "topLevelDomain", "port"))
-      q = q.replaceAll(s"\\b${base}RFC\\s*\\(", base + "(")
+    q = renameCalls(q, utf8Renames.get)
+    // URL RFC spellings canonicalize to the base parser; runs early so
+    // the base templates still see them (round-10 batch 22)
+    q = renameCalls(q, rfcRenames.get)
 
     // CH base string ops act on BYTES; only the *UTF8 variants measure
     // code points (reference src/Functions/substring.cpp:34 "If
@@ -7781,10 +7778,7 @@ object ChSql {
 
     // plain renames: one scan of the masked text, so a name inside a
     // literal or comment keeps its spelling
-    q = { val q0 = q
-      replaceOutsideStrings(q0, callName)(m =>
-        aliases.get(m.group(1)).fold(q0.substring(m.start, m.end))(_ + "("))
-    }
+    q = renameCalls(q, aliases.get)
 
     // ORDER BY x COLLATE 'name' (reference src/Columns/Collator.h — ICU
     // locale collations): map onto Spark 4 collation names. Locales map
@@ -8643,6 +8637,13 @@ object ChSql {
     }
   }
 
+  private val systemViewRe = "(?i)\\bsystem\\.(numbers|one|tables|columns)\\b".r
+
+  /** `system.numbers`/`one`/`tables`/`columns` name the views sqlImpl
+    * registers as `system_<name>`; a literal keeps its spelling. */
+  private def systemViews(q: String): String =
+    replaceOutsideStrings(q, systemViewRe)(m => "system_" + m.group(1).toLowerCase)
+
   private def sqlImpl(spark: SparkSession, dir: String, chQuery0: String): DataFrame = {
     lastTotalsKeys = None
     // clickhouse-test macros: {CLICKHOUSE_DATABASE:Identifier} expands to
@@ -9090,7 +9091,7 @@ object ChSql {
         replicaPaths.get(path) match {
           case Some(canon) if canon != name && spark.catalog.tableExists(canon) =>
             distributedTables.put(name, (canon, 1))
-            spark.table(canon).createOrReplaceTempView(name); engineBacking.remove(name)
+            replaceView(name, spark.table(canon))
             // the replica carries its OWN declared DDL (replica arg
             // differs) — record metadata so SHOW CREATE renders it and
             // replicated metadata ALTERs can reach every sibling
@@ -9123,7 +9124,7 @@ object ChSql {
             val base = spark.table(und)
             val proxied = (1 until sh).foldLeft(base)((d, _) => d.unionAll(base))
             distributedTables.put(name, (und, sh))
-            proxied.createOrReplaceTempView(name); engineBacking.remove(name)
+            replaceView(name, proxied)
             return Some(proxied.limit(0)) // CREATE emits no rows
           } else
             // target doesn't exist yet: record the routing INTENT (for
@@ -9192,7 +9193,7 @@ object ChSql {
       // granularity)) — plain MergeTree with parenthesized args
       if ("(?is)\\bENGINE\\s*=\\s*MergeTree\\s*\\(\\s*[^)\\s]".r
           .findFirstIn(rest).isDefined)
-        legacyFormatTables.add(name)
+        legacyFormatTables.put(name, ())
       else legacyFormatTables.remove(name)
       // ENGINE = Join(strictness, kind, k1[, k2…]): record the key
       // columns so joinGet() can route lookups (reference StorageJoin)
@@ -9319,7 +9320,7 @@ object ChSql {
         .foreach(vm => vectorIndexDims.put(name, (vm.group(1), vm.group(2).toInt)))
       "(?is)\\bTTL\\s+(.+?)(?:\\s+(?:SETTINGS|ORDER\\s+BY|PARTITION\\s+BY|PRIMARY\\s+KEY)\\b.*)?$"
         .r.findFirstMatchIn(rest).foreach(mm => tableTtls.put(name, mm.group(1).trim))
-      empty.createOrReplaceTempView(name); engineBacking.remove(name)
+      replaceView(name, empty)
       Some(empty)
     }
     // An INSERT column list naming the same column twice is
@@ -9616,7 +9617,7 @@ object ChSql {
         "(?is)\\bTTL\\s+(.+?)(?:\\s+(?:SETTINGS|ORDER\\s+BY|PARTITION\\s+BY|PRIMARY\\s+KEY)\\b.*)?$"
           .r.findFirstMatchIn(clauses)
           .foreach(m => tableTtls.put(name, m.group(1).trim))
-        out.createOrReplaceTempView(name); engineBacking.remove(name)
+        replaceView(name, out)
         // a MergeTree CTAS gets part bookkeeping, its SELECT being the
         // first insert block
         if (!kind.toUpperCase.startsWith("MATERIALIZED") &&
@@ -9777,7 +9778,7 @@ object ChSql {
             val base = spark.table(und)
             val proxied = (1 until sh).foldLeft(base)((d, _) => d.unionAll(base))
             distributedTables.put(name, (und, sh))
-            proxied.createOrReplaceTempView(name); engineBacking.remove(name)
+            replaceView(name, proxied)
             Some(proxied.limit(0))
           }
         } else if (engine != null && engine.equalsIgnoreCase("buffer") &&
@@ -9793,15 +9794,18 @@ object ChSql {
               tableAliases.put(name0, t)
               Some(spark.table(t).limit(0))
             case None =>
-              spark.table(src).limit(0).createOrReplaceTempView(name); engineBacking.remove(name)
+              replaceView(name, spark.table(src).limit(0))
               Some(spark.table(name).limit(0))
           }
         } else {
-          spark.table(src).limit(0).createOrReplaceTempView(name); engineBacking.remove(name)
-          tableDefaults.get(src).foreach(tableDefaults.put(name, _))
-          tableEngines.get(src).foreach(tableEngines.put(name, _))
-          // the clone's DDL tail is its own ENGINE clause if given, else
-          // the source's — never a stale tail from a prior same-named table
+          replaceView(name, spark.table(src).limit(0))
+          // the clone's declared metadata is the source's, never a stale
+          // entry from a prior same-named table; its DDL tail is its own
+          // ENGINE clause if given
+          for (m <- Seq[scala.collection.concurrent.TrieMap[String, _]](
+                 tableDefaults, tableEngines, tableColMeta, tableColExtras,
+                 tableIndexes, tableProjections))
+            TableMeta.copyEntry(m, src, name)
           if (engine != null) {
             val tailTxt = Option(cloneTail).map(_.trim).filter(_.nonEmpty)
               .map(" " + _).getOrElse("")
@@ -9819,23 +9823,7 @@ object ChSql {
                 unsignedColsOf(name) ++ unsignedColsOf(src))
             }
           }
-          else tableDdlTail.get(src) match {
-            case Some(t) => tableDdlTail.put(name, t)
-            case None => tableDdlTail.remove(name)
-          }
-          tableColMeta.get(src).foreach(tableColMeta.put(name, _))
-          tableColExtras.get(src) match {
-            case Some(x) => tableColExtras.put(name, x)
-            case None => tableColExtras.remove(name)
-          }
-          tableIndexes.get(src) match {
-            case Some(x) => tableIndexes.put(name, x)
-            case None => tableIndexes.remove(name)
-          }
-          tableProjections.get(src) match {
-            case Some(x) => tableProjections.put(name, x)
-            case None => tableProjections.remove(name)
-          }
+          else TableMeta.copyEntry(tableDdlTail, src, name)
           Some(spark.table(name).limit(0))
         }
       case q if createDbRe.pattern.matcher(q).matches ||
@@ -9847,25 +9835,12 @@ object ChSql {
         spark.catalog.dropTempView(name)
         if (graft.core.Tables.all.contains(name))
           graft.core.Tables.invalidateRegistered(spark)
-        tableTtls.remove(name); tableDefaults.remove(name)
-        distributedTables.remove(name); tableEngines.remove(name)
-        engineBacking.remove(name); engineBlockSeq.remove(name)
-        joinEngineKeys.remove(name); legacyFormatTables.remove(name)
-        matViews.remove(name)
+        TableMeta.forget(name)
         // text-level aliases (Buffer write-through, unparseable names)
         // must die with the table or they rewrite LATER sessions' texts
         for ((k, v) <- tableAliases if k == name || v == name)
           tableAliases.remove(k)
-        hiddenInsertCols.remove(name); tableColMeta.remove(name)
-        tableColTz.remove(name); alterVirtualCols.remove(name)
-        tableDdlTail.remove(name)
-        tableColExtras.remove(name); tableIndexes.remove(name)
-        tableProjections.remove(name); replicaGroup.remove(name)
-        tableSparseRatio.remove(name)
-        ChParts.drop(name); virtualShadow.remove(name)
-        detachedRows.remove(name)
-        spark.catalog.dropTempView("__vt_" + name)
-        hiddenInsertCols.remove("__vt_" + name)
+        dropShadowView(spark, name)
         for ((src, mvs) <- matViews if mvs.exists(_._1 == name))
           matViews.put(src, mvs.filterNot(_._1 == name))
         for ((p, c) <- replicaPaths if c == name) replicaPaths.remove(p)
@@ -10126,7 +10101,7 @@ object ChSql {
           withCol = withCol.select(order.map(x =>
             org.apache.spark.sql.functions.col(s"`$x`")).toIndexedSeq: _*)
         }
-        withCol.createOrReplaceTempView(name); engineBacking.remove(name)
+        replaceView(name, withCol)
         if (dflt == null)
           alterVirtualCols.put(name,
             alterVirtualCols.getOrElse(name, Set.empty) + colName)
@@ -10178,13 +10153,13 @@ object ChSql {
       case alterDropColRe(name, colName0) =>
         val colName = colName0.stripPrefix("`").stripSuffix("`")
         val dropped = spark.table(name).drop(colName)
-        dropped.createOrReplaceTempView(name); engineBacking.remove(name)
+        replaceView(name, dropped)
         tableColMeta.get(name).foreach(m =>
           tableColMeta.put(name, m.filterNot(_._1 == colName)))
         Some(dropped.limit(0))
       case alterRenColRe(name, from, to) =>
         val renamed = spark.table(name).withColumnRenamed(from, to)
-        renamed.createOrReplaceTempView(name); engineBacking.remove(name)
+        replaceView(name, renamed)
         Some(renamed.limit(0))
       case alterRemovePropRe(name, col0, what) if spark.catalog.tableExists(name) =>
         val col = col0.stripPrefix("`").stripSuffix("`")
@@ -10252,7 +10227,7 @@ object ChSql {
               }))
           else spark.table(name).withColumn(colName,
             org.apache.spark.sql.functions.col(colName).cast(sqlT))
-        modified.createOrReplaceTempView(name); engineBacking.remove(name)
+        replaceView(name, modified)
         tableColMeta.get(name).foreach(m => tableColMeta.put(name,
           m.map(x => if (x._1 == colName)
               (x._1, chType.trim,
@@ -10329,13 +10304,11 @@ object ChSql {
                 virtualShadow.put(name, keptSh)
                 val kept = keptSh.select(spark.table(name).columns
                   .map(c => col(s"`$c`")): _*)
-                kept.createOrReplaceTempView(name); engineBacking.remove(name)
+                replaceView(name, kept)
                 for (dest <- destOpt if dest != name) {
                   val destCols = spark.table(dest).columns
                   val block = moved.select(destCols.map(c => col(s"`$c`")): _*)
-                  val appended = spark.table(dest).unionByName(block)
-                  appended.createOrReplaceTempView(dest)
-                  engineBacking.remove(dest)
+                  replaceView(dest, spark.table(dest).unionByName(block))
                   recordPartsBlock(spark, dest, block)
                 }
               case None if ChParts.isTracked(name) && removed.nonEmpty =>
@@ -10362,14 +10335,11 @@ object ChSql {
                   detachedRows.put(name,
                     detachedRows.get(name).map(_.unionByName(moved))
                       .getOrElse(moved))
-                kept.createOrReplaceTempView(name)
-                engineBacking.remove(name)
+                replaceView(name, kept)
                 for (dest <- destOpt if dest != name) {
                   val destCols = spark.table(dest).columns
                   val block = moved.select(destCols.map(c => col(s"`$c`")): _*)
-                  spark.table(dest).unionByName(block)
-                    .createOrReplaceTempView(dest)
-                  engineBacking.remove(dest)
+                  replaceView(dest, spark.table(dest).unionByName(block))
                   recordPartsBlock(spark, dest, block)
                 }
               case _ => ()
@@ -10396,8 +10366,7 @@ object ChSql {
                   val sh = virtualShadow(name)
                   val full = sh.select(spark.table(name).columns
                     .map(c => col(s"`$c`")): _*)
-                  full.createOrReplaceTempView(name)
-                  engineBacking.remove(name)
+                  replaceView(name, full)
                 }
               case _ => ()
             }
@@ -10503,7 +10472,7 @@ object ChSql {
             case _ => org.apache.spark.sql.functions.lit(null).cast(f.dataType)
           })
         val cleared = t.withColumn(colName, fill)
-        cleared.createOrReplaceTempView(name); engineBacking.remove(name)
+        replaceView(name, cleared)
         Some(cleared.limit(0))
       case alterCommentColRe(name, col0, cmt) =>
         // comments are metadata-only: record for SHOW CREATE / DESCRIBE
@@ -10521,7 +10490,15 @@ object ChSql {
         spark.catalog.dropTempView(from)
         if (graft.core.Tables.all.contains(from))
           graft.core.Tables.invalidateRegistered(spark)
-        tableTtls.remove(from).foreach(ttl => tableTtls.put(to, ttl))
+        TableMeta.move(from, to)
+        dropShadowView(spark, from)
+        // a materialized view's entry names the view, and its SELECT text
+        // the source; a replica path names its first table
+        for ((src, mvs) <- matViews if mvs.exists(_._1 == from))
+          matViews.put(src, mvs.map { case (mv, sel) => (if (mv == from) to else mv, sel) })
+        matViews.get(to).foreach(mvs => matViews.put(to,
+          mvs.map { case (mv, sel) => (mv, fromClause(from).replaceAllIn(sel, s"FROM $to")) }))
+        for ((p, c) <- replicaPaths if c == from) replicaPaths.put(p, to)
         Some(t.limit(0))
       // lightweight DELETE (reference InterpreterDeleteQuery): same row
       // semantics as ALTER DELETE here; parts keep their names (the
@@ -10549,11 +10526,11 @@ object ChSql {
             virtualShadow.put(name, keptSh)
             val kept = keptSh.select(spark.table(name).columns.map(c =>
               org.apache.spark.sql.functions.col(s"`$c`")): _*)
-            kept.createOrReplaceTempView(name); engineBacking.remove(name)
+            replaceView(name, kept)
             Some(kept.limit(0))
           case shOpt =>
             val kept = spark.table(name).filter(s"NOT ($predR)")
-            kept.createOrReplaceTempView(name); engineBacking.remove(name)
+            replaceView(name, kept)
             shOpt.foreach { sh =>
               try virtualShadow.put(name, sh.filter(s"NOT ($predR)"))
               catch { case scala.util.control.NonFatal(_) =>
@@ -10564,7 +10541,7 @@ object ChSql {
       case alterDelRe(name, pred) =>
         val kept = spark.table(name)
           .filter(s"NOT (${rewrite(pred)})")
-        kept.createOrReplaceTempView(name); engineBacking.remove(name)
+        replaceView(name, kept)
         // the mutation applies to the virtual-column shadow too: rows
         // filtered, and every active part stamped with the new data
         // version (all_1_1_0 -> all_1_1_0_<v>)
@@ -10594,7 +10571,7 @@ object ChSql {
           }
         }.mkString(", ")
         val updated = spark.sql(s"SELECT $projected FROM $name")
-        updated.createOrReplaceTempView(name); engineBacking.remove(name)
+        replaceView(name, updated)
         // same mutation on the virtual-column shadow (keeps _part reads
         // consistent after ALTER UPDATE; drop it if the expr won't apply)
         virtualShadow.get(name).foreach { sh =>
@@ -10615,7 +10592,7 @@ object ChSql {
         Some(updated.limit(0))
       case truncateRe(name) =>
         val empty = spark.table(name).limit(0)
-        empty.createOrReplaceTempView(name); engineBacking.remove(name)
+        replaceView(name, empty)
         ChParts.truncate(name)
         virtualShadow.get(name).foreach(s => virtualShadow.put(name, s.limit(0)))
         Some(empty)
@@ -10631,7 +10608,7 @@ object ChSql {
         }
         val m = deduped.persist()
         m.count()
-        m.createOrReplaceTempView(name); engineBacking.remove(name)
+        replaceView(name, m)
         Some(m.limit(0))
       case optimizeRe(name) =>
         // a merge point: apply the engine family's merge semantics
@@ -10648,7 +10625,7 @@ object ChSql {
           renameShadowParts(name, ChParts.optimize(name, pidOpt, fin))
         }
         engineFinalDf(spark, name).foreach { d =>
-          val m = d.persist(); m.count(); m.createOrReplaceTempView(name); engineBacking.remove(name)
+          val m = d.persist(); m.count(); replaceView(name, m)
         }
         tableTtls.get(name) match {
           case Some(ttl) =>
@@ -10656,7 +10633,7 @@ object ChSql {
               .filter(s"NOT ((${rewrite(ttl)}) <= current_timestamp())")
             val m = kept.persist()
             val keptRows = m.count()
-            m.createOrReplaceTempView(name); engineBacking.remove(name)
+            replaceView(name, m)
             // TTL merges drop rows — re-pin the merged part's count and
             // apply the same filter to the virtual-column shadow
             ChParts.recountActive(name, keptRows)
@@ -10711,11 +10688,7 @@ object ChSql {
           .toDF("database", "table", "parts", "rows", "marks")
       case explainRe(_, mode, inner) =>
         import spark.implicits._
-        val rewritten = rewrite(expandColumnsTransformers(spark, inner))
-          .replaceAll("""(?i)\bsystem\.numbers\b""", "system_numbers")
-          .replaceAll("""(?i)\bsystem\.one\b""", "system_one")
-          .replaceAll("""(?i)\bsystem\.tables\b""", "system_tables")
-          .replaceAll("""(?i)\bsystem\.columns\b""", "system_columns")
+        val rewritten = systemViews(rewrite(expandColumnsTransformers(spark, inner)))
         if (mode != null && mode.equalsIgnoreCase("SYNTAX"))
           Seq(rewritten).toDF("explain")
         else {
@@ -10728,11 +10701,7 @@ object ChSql {
         tryWithFill(spark, dir, chQuery) match {
           case Some(df) => df
           case None =>
-            val q = rewrite(expandColumnsTransformers(spark, chQuery))
-              .replaceAll("""(?i)\bsystem\.numbers\b""", "system_numbers")
-              .replaceAll("""(?i)\bsystem\.one\b""", "system_one")
-              .replaceAll("""(?i)\bsystem\.tables\b""", "system_tables")
-              .replaceAll("""(?i)\bsystem\.columns\b""", "system_columns")
+            val q = systemViews(rewrite(expandColumnsTransformers(spark, chQuery)))
             try spark.sql(q)
             catch {
               // a FROM-less SELECT reads system.one in the reference, so

@@ -2589,4 +2589,85 @@ class ChSqlSpec extends AnyFunSuite {
       "left ('abc', 2) AS c, repeat ('x', 2) AS d").collect().head
     assert(r.toSeq.map(_.toString) == Seq("a", "3", "ab", "xx"))
   }
+
+  test("system.* renames and MySQL-compat, UTF8 and RFC renames leave literals alone") {
+    val r = ch("SELECT 'system.numbers' AS a, 'INET_ATON(x)' AS b, " +
+      "'editDistanceUTF8(a, b)' AS c, 'domainRFC(u)' AS d, " +
+      "INET_ATON('1.2.3.4') AS n, format_bytes(1024) AS f").collect().head
+    assert(Seq("a", "b", "c", "d").map(r.getAs[String]) ==
+      Seq("system.numbers", "INET_ATON(x)", "editDistanceUTF8(a, b)", "domainRFC(u)"))
+    assert(r.getAs[Number]("n").longValue == 16909060L)
+    assert(r.getAs[String]("f") == "1.00 KiB")
+    assert(ch("SELECT number FROM system.numbers LIMIT 3").collect().map(_.getLong(0)).toSeq ==
+      Seq(0L, 1L, 2L))
+  }
+
+  test("RENAME TABLE carries the table's metadata") {
+    Seq("rn_meta_a", "rn_meta_b", "rn_meta_c", "rn_meta_mv", "rn_meta_mv2")
+      .foreach(t => ch(s"DROP TABLE IF EXISTS $t"))
+    ch("CREATE TABLE rn_meta_a (k Int64, v Int64, w Int64 DEFAULT 42) " +
+      "ENGINE = ReplacingMergeTree ORDER BY k")
+    ch("INSERT INTO rn_meta_a (k, v) VALUES (1, 1), (2, 1)")
+    ch("INSERT INTO rn_meta_a (k, v) VALUES (1, 2), (2, 2)")
+    ch("RENAME TABLE rn_meta_a TO rn_meta_b")
+    def rows(q: String) = ch(q).collect().map(_.toSeq.map(_.toString)).toSeq
+    // the FINAL backing and the engine moved: the later block wins
+    assert(rows("SELECT k, v, w FROM rn_meta_b FINAL ORDER BY k") ==
+      Seq(Seq("1", "2", "42"), Seq("2", "2", "42")))
+    // the data parts moved: system.parts and _part see the new name only
+    def activeParts() = rows("SELECT `table`, count() AS n FROM system.parts " +
+      "WHERE active = 1 AND `table` IN ('rn_meta_a', 'rn_meta_b') GROUP BY `table`")
+    assert(activeParts() == Seq(Seq("rn_meta_b", "2")))
+    assert(rows("SELECT count(DISTINCT _part) AS n FROM rn_meta_b") == Seq(Seq("2")))
+    // the DDL moved: SHOW CREATE and the DEFAULT of a later INSERT
+    val ddl = ch("SHOW CREATE TABLE rn_meta_b").collect().head.getString(0)
+    assert(ddl.contains("ReplacingMergeTree") && ddl.contains("DEFAULT 42"), ddl)
+    ch("INSERT INTO rn_meta_b (k, v) VALUES (3, 1)")
+    assert(rows("SELECT w FROM rn_meta_b WHERE k = 3") == Seq(Seq("42")))
+    // OPTIMIZE FINAL merges under the new name
+    ch("OPTIMIZE TABLE rn_meta_b FINAL")
+    assert(rows("SELECT k, v FROM rn_meta_b ORDER BY k") ==
+      Seq(Seq("1", "2"), Seq("2", "2"), Seq("3", "1")))
+    assert(activeParts() == Seq(Seq("rn_meta_b", "1")))
+    // a renamed materialized view still receives its source's inserts
+    ch("CREATE MATERIALIZED VIEW rn_meta_mv ENGINE = Memory AS SELECT k * 10 AS k10 FROM rn_meta_b")
+    ch("RENAME TABLE rn_meta_mv TO rn_meta_mv2")
+    ch("INSERT INTO rn_meta_b (k, v) VALUES (4, 1)")
+    assert(rows("SELECT k10 FROM rn_meta_mv2") == Seq(Seq("40")))
+    // and so it does after its source is renamed
+    ch("RENAME TABLE rn_meta_b TO rn_meta_c")
+    ch("INSERT INTO rn_meta_c (k, v) VALUES (5, 1)")
+    assert(rows("SELECT k10 FROM rn_meta_mv2 ORDER BY k10") == Seq(Seq("40"), Seq("50")))
+    ch("DROP TABLE rn_meta_mv2")
+    ch("DROP TABLE rn_meta_c")
+  }
+
+  test("CREATE TABLE ... AS <table> copies the source's declared metadata") {
+    Seq("clone_meta_a", "clone_meta_b").foreach(t => ch(s"DROP TABLE IF EXISTS $t"))
+    ch("CREATE TABLE clone_meta_a (k Int64, w Int64 DEFAULT 42, INDEX wi w TYPE minmax GRANULARITY 1) " +
+      "ENGINE = ReplacingMergeTree ORDER BY k")
+    ch("CREATE TABLE clone_meta_b AS clone_meta_a")
+    ch("INSERT INTO clone_meta_b (k) VALUES (1)")
+    assert(ch("SELECT w FROM clone_meta_b").collect().head.getAs[Number](0).longValue == 42L)
+    val ddl = ch("SHOW CREATE TABLE clone_meta_b").collect().head.getString(0)
+    assert(Seq("ReplacingMergeTree", "DEFAULT 42", "INDEX wi").forall(ddl.contains), ddl)
+    Seq("clone_meta_a", "clone_meta_b").foreach(t => ch(s"DROP TABLE $t"))
+  }
+
+  test("DROP TABLE forgets the table's metadata") {
+    ch("DROP TABLE IF EXISTS drop_meta_vx")
+    ch("CREATE TABLE drop_meta_vx (id Int64, v Array(Float32), " +
+      "INDEX vi v TYPE vector_similarity('hnsw', 'L2Distance', 3)) " +
+      "ENGINE = MergeTree ORDER BY id")
+    val e = intercept[IllegalArgumentException](
+      ch("INSERT INTO drop_meta_vx VALUES (1, [1.0, 2.0])"))
+    assert(e.getMessage.contains("INCORRECT_DATA"), e.getMessage)
+    ch("DROP TABLE drop_meta_vx")
+    // re-created without the index: 2-dim vectors are accepted
+    ch("CREATE TABLE drop_meta_vx (id Int64, v Array(Float32)) ENGINE = MergeTree ORDER BY id")
+    ch("INSERT INTO drop_meta_vx VALUES (1, [1.0, 2.0])")
+    assert(ch("SELECT length(v) AS n FROM drop_meta_vx").collect().head
+      .getAs[Number](0).intValue == 2)
+    ch("DROP TABLE drop_meta_vx")
+  }
 }
