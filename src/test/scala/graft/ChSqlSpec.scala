@@ -2670,4 +2670,61 @@ class ChSqlSpec extends AnyFunSuite {
       .getAs[Number](0).intValue == 2)
     ch("DROP TABLE drop_meta_vx")
   }
+
+  test("PREWHERE inside a literal keeps its spelling") {
+    assert(ch("SELECT 'a PREWHERE b' AS s").collect().head.getString(0) == "a PREWHERE b")
+    assert(ch("SELECT n FROM (SELECT number AS n FROM numbers(5)) PREWHERE n > 2 ORDER BY n")
+      .collect().map(_.getLong(0)).toSeq == Seq(3L, 4L))
+  }
+
+  test("LIMIT m, n inside a literal keeps its spelling") {
+    assert(ch("SELECT 'LIMIT 1, 2' AS s").collect().head.getString(0) == "LIMIT 1, 2")
+    assert(ch("SELECT number FROM numbers(10) ORDER BY number LIMIT 1, 2")
+      .collect().map(_.getLong(0)).toSeq == Seq(1L, 2L))
+  }
+
+  test("IN array( inside a literal keeps its spelling") {
+    val r = ch("SELECT 'IN array(1)' AS s, 2 IN [1, 2] AS b").collect().head
+    assert(r.getString(0) == "IN array(1)")
+    assert(r.getBoolean(1))
+  }
+
+  test("numbers ( inside a literal keeps its spelling") {
+    val r = ch("SELECT 'numbers (3)' AS s, (SELECT count() FROM numbers (3)) AS n").collect().head
+    assert(r.getString(0) == "numbers (3)")
+    assert(r.getAs[Number](1).longValue == 3L)
+  }
+
+  test("quantiles(...)(...) forms are call templates: literals stay, parameters may nest") {
+    assert(ch("SELECT 'quantiles(0.5)(x)' AS s").collect().head.getString(0) == "quantiles(0.5)(x)")
+    val r = ch("SELECT quantilesExact((0.5), 1)(number) AS q FROM numbers(11)").collect().head
+    assert(r.getSeq[Double](0) == Seq(5.0, 10.0))
+  }
+
+  test("RENAME TABLE onto an existing table fails with TABLE_ALREADY_EXISTS") {
+    Seq("ren_exist_a", "ren_exist_b").foreach(t => ch(s"DROP TABLE IF EXISTS $t"))
+    ch("CREATE TABLE ren_exist_a (k Int64) ENGINE = Memory")
+    ch("INSERT INTO ren_exist_a VALUES (7)")
+    ch("CREATE TABLE ren_exist_b (s String) ENGINE = Memory")
+    ch("INSERT INTO ren_exist_b VALUES ('x')")
+    val e = intercept[IllegalArgumentException](ch("RENAME TABLE ren_exist_a TO ren_exist_b"))
+    assert(e.getMessage.contains("TABLE_ALREADY_EXISTS"), e.getMessage)
+    assert(ch("SELECT s FROM ren_exist_b").collect().map(_.getString(0)).toSeq == Seq("x"))
+    assert(ch("SELECT k FROM ren_exist_a").collect().map(_.getLong(0)).toSeq == Seq(7L))
+    Seq("ren_exist_a", "ren_exist_b").foreach(t => ch(s"DROP TABLE $t"))
+  }
+
+  test("CREATE TABLE over an existing table: refused, kept with IF NOT EXISTS, replaced with OR REPLACE") {
+    ch("DROP TABLE IF EXISTS cre_exist")
+    ch("CREATE TABLE cre_exist (s String) ENGINE = Memory")
+    ch("INSERT INTO cre_exist VALUES ('x')")
+    val e = intercept[IllegalArgumentException](
+      ch("CREATE TABLE cre_exist (z Int8) ENGINE = Memory"))
+    assert(e.getMessage.contains("TABLE_ALREADY_EXISTS"), e.getMessage)
+    ch("CREATE TABLE IF NOT EXISTS cre_exist (z Int8) ENGINE = Memory")
+    assert(ch("SELECT s FROM cre_exist").collect().map(_.getString(0)).toSeq == Seq("x"))
+    ch("CREATE OR REPLACE TABLE cre_exist (z Int8) ENGINE = Memory")
+    assert(ch("SELECT z FROM cre_exist").collect().isEmpty)
+    ch("DROP TABLE cre_exist")
+  }
 }

@@ -4,12 +4,49 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** The Spark half of the differential dialect fuzzer: 1000 seeded random
   * expression trees over the CH-dialect surface must translate and
-  * evaluate without error, deterministically. The cross-engine value diff
-  * runs via tools/fuzz_check.py against DuckDB (same seed, same trees —
-  * FUZZ.md records each round's run). */
+  * evaluate without error, deterministically, and give the values DuckDB
+  * gave for the same trees (recorded once by `tools/fuzz_check.py
+  * --record`, so this spec runs without DuckDB). The larger cross-engine
+  * diff runs via tools/fuzz_check.py against DuckDB (FUZZ.md records each
+  * round's run). */
 class FuzzDialectSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
   val sf = "/root/testdata/sf0.001"
+
+  /** The expression columns whose values differ from DuckDB's, as
+    * `<tag> <column>` (FuzzDialect.specCases tags). Each is a wrong answer
+    * that is reported here rather than skipped; the value test fails when
+    * one of them starts to match, so the list cannot go stale. */
+  val knownRed: Set[String] = Set()
+
+  test("fuzzed expressions give DuckDB's recorded values") {
+    import FuzzDialectSpec._
+    val recorded = scala.io.Source.fromInputStream(
+      getClass.getResourceAsStream("/fuzz_seed8_values.tsv"), "UTF-8")
+    val expected = try recorded.getLines().map { line =>
+      val f = line.split("\t", -1)
+      (f(0), f(1), f(2)) -> unescape(f(3))
+    }.toMap finally recorded.close()
+    val cases = graft.tools.FuzzDialect.specCases
+    assert(expected.keySet.map(_._1) == cases.map(_.tag).toSet)
+    val red = cases.flatMap { c =>
+      val df = graft.sqlfront.ChSql.sql(spark, sf, c.ch)
+      val keyAt = df.schema.fieldIndex(c.key)
+      val rows = df.collect()
+      df.schema.fieldNames.filter(_ != c.key).toSeq.flatMap { col =>
+        val at = df.schema.fieldIndex(col)
+        val want = expected.collect { case ((c.tag, `col`, k), v) => k -> v }
+        val got = rows.map(r => norm(r.get(keyAt)) -> r.get(at)).toMap
+        assert(got.keySet == want.keySet, s"${c.tag} $col: keys differ")
+        val same = want.forall { case (k, v) =>
+          if (c.float) close(got(k), v) else norm(got(k)) == v
+        }
+        if (same) None else Some(s"${c.tag} $col")
+      }
+    }.toSet
+    assert(red -- knownRed == Set.empty, "values differ from DuckDB's")
+    assert(knownRed -- red == Set.empty, "known-red cases now match: take them off the list")
+  }
 
   test("1000 fuzzed dialect expressions translate, evaluate, and are deterministic") {
     val all = graft.tools.FuzzDialect.exprs(seed = 8L, n = 1000)
@@ -191,5 +228,71 @@ class FuzzDialectSpec extends AnyFunSuite {
     assert(r("v1.2.3") == "v1.2.3")                            // dotted tokens untouched
     assert(r("CAST(1.5 AS DECIMAL(10,2))") == "CAST(1.5D AS DECIMAL(10,2))")
     assert(r("'it''s 1.5' || 2.5") == "'it''s 1.5' || 2.5D")   // escaped quote = two strings
+  }
+}
+
+object FuzzDialectSpec {
+  def unescape(s: String): String = {
+    val sb = new StringBuilder
+    var i = 0
+    while (i < s.length) {
+      if (s.charAt(i) == '\\' && i + 1 < s.length) {
+        sb.append(s.charAt(i + 1) match { case 't' => '\t'; case 'n' => '\n'; case c => c }); i += 2
+      } else { sb.append(s.charAt(i)); i += 1 }
+    }
+    sb.toString
+  }
+
+  /** A Spark value as `tools/fuzz_check.py`'s `norm` sees it after the
+    * value went through parquet into pandas: NULL and NaN are `\N`,
+    * an integral float or double prints as an integer, any other in
+    * Python's repr of the double, booleans as `True`/`False`, dates ISO. */
+  def norm(v: Any): String = v match {
+    case null => "\\N"
+    case b: Boolean => if (b) "True" else "False"
+    case d: Double if d.isNaN => "\\N"
+    case d: Double if !d.isInfinite && d == math.rint(d) => new java.math.BigDecimal(d).toBigInteger.toString
+    case d: Double => pyRepr(d)
+    case f: Float => norm(f.toDouble)
+    case b: Array[Byte] => new String(b, java.nio.charset.StandardCharsets.UTF_8)
+    case t: java.sql.Timestamp => pyTimestamp(t.toLocalDateTime)
+    case t: java.time.LocalDateTime => pyTimestamp(t)
+    case t: java.time.Instant => pyTimestamp(java.time.LocalDateTime.ofInstant(t, java.time.ZoneOffset.UTC))
+    case other => other.toString
+  }
+
+  private def pyTimestamp(t: java.time.LocalDateTime): String = {
+    val base = t.format(java.time.format.DateTimeFormatter.ofPattern("yyyy-MM-dd HH:mm:ss"))
+    if (t.getNano == 0) base else base + f".${t.getNano / 1000}%06d"
+  }
+
+  /** Python's repr of a finite or infinite double: shortest digits,
+    * positional for decimal exponents -4..15, else `d.ddde+XX`. */
+  def pyRepr(d: Double): String =
+    if (d.isInfinite) (if (d > 0) "inf" else "-inf")
+    else {
+      val bd = new java.math.BigDecimal(java.lang.Double.toString(math.abs(d))).stripTrailingZeros
+      val digits = bd.unscaledValue.toString
+      val exp = digits.length - 1 - bd.scale
+      val sign = if (d < 0 || (d == 0 && 1 / d < 0)) "-" else ""
+      val body =
+        if (exp < -4 || exp >= 16)
+          (if (digits.length == 1) digits else digits.head + "." + digits.tail) +
+            "e" + (if (exp < 0) "-" else "+") + f"${math.abs(exp)}%02d"
+        else if (exp < 0) "0." + "0" * (-exp - 1) + digits
+        else if (digits.length <= exp + 1) digits + "0" * (exp + 1 - digits.length) + ".0"
+        else digits.substring(0, exp + 1) + "." + digits.substring(exp + 1)
+      sign + body
+    }
+
+  /** numpy.isclose(a, b, rtol=1e-9, atol=1e-12, equal_nan=True) with a
+    * NULL read as NaN, as fuzz_check.py compares a float case. */
+  def close(got: Any, want: String): Boolean = {
+    val a = got match { case null => Double.NaN; case n: Number => n.doubleValue; case x => x.toString.toDouble }
+    val b = want match { case "nan" => Double.NaN; case "inf" => Double.PositiveInfinity
+      case "-inf" => Double.NegativeInfinity; case x => x.toDouble }
+    if (a.isNaN || b.isNaN) a.isNaN && b.isNaN
+    else if (a.isInfinite || b.isInfinite) a == b
+    else math.abs(a - b) <= 1e-12 + 1e-9 * math.abs(b)
   }
 }

@@ -1540,10 +1540,54 @@ object FuzzDialect {
       case c => c.toString
     } + "\""
 
+  /** One fuzzed SELECT of `FuzzDialectSpec`: its tag (`batch 3`), the
+    * dialect and DuckDB texts, the key column its rows are matched on,
+    * and whether its values compare with a float tolerance. */
+  final case class SpecCase(tag: String, ch: String, duck: String, key: String, float: Boolean)
+
+  /** FuzzDialectSpec's own seed-8 queries over sf0.001. Their DuckDB
+    * values are recorded in src/test/resources/fuzz_seed8_values.tsv
+    * (`FuzzDialect --spec-cases` writes the manifest that
+    * `tools/fuzz_check.py --record` replays). */
+  def specCases: Seq[SpecCase] = {
+    def scalar(kind: String, fzs: Seq[Fz], size: Int): Seq[SpecCase] =
+      fzs.grouped(size).zipWithIndex.map { case (b, i) =>
+        SpecCase(s"$kind $i", chSelect(b, "doc_id < 20"), duckSelect(b, "doc_id < 20"), "doc_id", float = false)
+      }.toSeq
+    scalar("batch", exprs(8L, 1000), 50) ++
+      aggQueries(8L, 20).take(5).zipWithIndex.map { case (a, i) =>
+        SpecCase(s"agg $i", chAggSelect(a), duckAggSelect(a), "k", float = false)
+      } ++
+      dateExprs(8L, 100).grouped(25).zipWithIndex.map { case (b, i) =>
+        SpecCase(s"date $i", chDateSelect(b, "o_orderkey < 50"),
+          duckDateSelect(b, "o_orderkey < 50"), "o_orderkey", float = false)
+      } ++
+      floatExprs(8L, 100).grouped(25).zipWithIndex.map { case (b, i) =>
+        SpecCase(s"float $i", chFloatSelect(b, "doc_id < 20"),
+          duckFloatSelect(b, "doc_id < 20"), "doc_id", float = true)
+      } ++
+      scalar("null", nullExprs(8L, 100), 25) ++ scalar("arr", arrExprs(8L, 100), 25) ++
+      scalar("map", mapExprs(8L, 100), 25) ++ scalar("json", jsonExprs(8L, 100), 25) ++
+      scalar("utf8", utf8Exprs(8L, 100), 25) ++
+      tsExprs(8L, 100).grouped(25).zipWithIndex.map { case (b, i) =>
+        SpecCase(s"ts $i", chTsSelect(b, "event_id < 50"),
+          duckTsSelect(b, "event_id < 50"), "event_id", float = false)
+      } ++
+      scalar("rnd", roundExprs(8L, 100), 25) ++ scalar("conv", convExprs(8L, 100), 25)
+  }
+
   /** main: evaluate `n` expressions through ChSql/Spark in batches of 25,
     * write each batch's result parquet + a manifest with the DuckDB SQL
     * for tools/fuzz_check.py to replay. Args: [seed] [n] [sfDir] [outDir]. */
   def main(args: Array[String]): Unit = {
+    if (args.headOption.contains("--spec-cases")) {
+      // the manifest of FuzzDialectSpec's queries, for fuzz_check.py --record
+      val cases = specCases.map(c =>
+        s"""{"tag":${jsonStr(c.tag)},"duck":${jsonStr(c.duck)},"key":${jsonStr(c.key)},"float":${c.float}}""")
+      java.nio.file.Files.writeString(java.nio.file.Paths.get(args(1)), cases.mkString("[", ",\n", "]"))
+      println(s"[fuzz] ${cases.size} spec cases -> ${args(1)}")
+      return
+    }
     val seed = args.headOption.map(_.toLong).getOrElse(8L)
     val n = args.lift(1).map(_.toInt).getOrElse(1000)
     val sfDir = args.lift(2).getOrElse("/root/testdata/sf0.01")

@@ -4,6 +4,15 @@
 Usage: python3 tools/fuzz_check.py <sfDir> <fuzzOutDir>
 (run `sbt "Test/runMain graft.tools.FuzzDialect <seed> <n> <sfDir> <fuzzOutDir>"`
 first). Exit 0 iff every expression column matches on every row.
+
+Record mode: python3 tools/fuzz_check.py --record <sfDir> <manifest> <out>
+replays the DuckDB side of the cases in <manifest> (written by
+`sbt "Test/runMain graft.tools.FuzzDialect --spec-cases <manifest>"`) and
+writes every value, in the form the compare below sees it, to <out>: one
+line per value, `tag<TAB>column<TAB>key<TAB>value`, with `\\`, `\t` and `\n`
+escaped in the value. A float case's value is its Python repr (NULL and
+NaN both `nan`); any other value is `norm(v)`. FuzzDialectSpec compares
+Spark's values with this file, so tier-1 needs no DuckDB.
 """
 import glob
 import json
@@ -12,14 +21,51 @@ import sys
 import duckdb
 import pandas as pd
 
-sf = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-out = sys.argv[2] if len(sys.argv) > 2 else "/tmp/fuzz_out"
+RECORD = sys.argv[1:2] == ["--record"]
+args = sys.argv[2:] if RECORD else sys.argv[1:]
+sf = args[0] if len(args) > 0 else "/root/testdata/sf0.01"
+out = args[1] if len(args) > 1 else "/tmp/fuzz_out"
 
 con = duckdb.connect()
 for t in ("documents", "orders", "events"):
     con.execute(
         f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf}/{t}.parquet')"
     )
+
+
+def norm(v):
+    """Engine-neutral form of a non-float value: bools/ints may come back
+    as different numpy dtypes, and NULLs as None (object) vs NaN (float)
+    — normalize nulls BEFORE stringifying (astype(str) would bake them
+    into "None"/"nan")."""
+    try:
+        if pd.isna(v):
+            return "\\N"
+    except (TypeError, ValueError):
+        pass  # list-like: not null
+    if isinstance(v, float) and v.is_integer():
+        return str(int(v))  # 3.0 (nullable-int col) == 3
+    if isinstance(v, bytes):
+        return v.decode("utf-8", "replace")  # BINARY vs VARCHAR
+    return str(v)
+
+
+if RECORD:
+    cases = json.load(open(out))
+    esc = str.maketrans({"\\": "\\\\", "\t": "\\t", "\n": "\\n"})
+    n_values = 0
+    with open(args[2], "w", encoding="utf-8") as w:
+        for case in cases:
+            key = case["key"]
+            oracle = con.execute(case["duck"]).fetchdf()
+            oracle = oracle.sort_values(key).reset_index(drop=True)
+            for c in [c for c in oracle.columns if c != key]:
+                for k, v in zip(oracle[key], oracle[c]):
+                    text = repr(float(v)) if case["float"] else norm(v)
+                    w.write(f"{case['tag']}\t{c}\t{norm(k)}\t{text.translate(esc)}\n")
+                    n_values += 1
+    print(f"== FUZZ: recorded {n_values} values of {len(cases)} cases -> {args[2]} ==")
+    sys.exit(0)
 
 manifest = json.load(open(f"{out}/manifest.json"))
 n_expr = 0
@@ -75,21 +121,6 @@ for entry in manifest:
                 index=a.index,
             )
         else:
-            # engine-neutral compare: bools/ints may come back as different
-            # numpy dtypes, and NULLs as None (object) vs NaN (float) —
-            # normalize nulls BEFORE stringifying (astype(str) would bake
-            # them into "None"/"nan")
-            def norm(v):
-                try:
-                    if pd.isna(v):
-                        return "\\N"
-                except (TypeError, ValueError):
-                    pass  # list-like: not null
-                if isinstance(v, float) and v.is_integer():
-                    return str(int(v))  # 3.0 (nullable-int col) == 3
-                if isinstance(v, bytes):
-                    return v.decode("utf-8", "replace")  # BINARY vs VARCHAR
-                return str(v)
             eq = a.map(norm).eq(b.map(norm))
         if not eq.all():
             j = int(eq.idxmin())
