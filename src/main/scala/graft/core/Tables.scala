@@ -318,6 +318,11 @@ object Tables {
       // over the inventory at sf0.01 compiled 147 new classes in 21
       // queries; without it, 32 in 7
       .config("spark.sql.codegen.useIdInClassName", "false")
+      // `file:` paths without a chmod or readlink process per create,
+      // mkdir and rename (see LocalFs), for both Hadoop file APIs
+      .config("spark.hadoop.fs.file.impl", classOf[LocalFs.FileSystem].getName)
+      .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
+        classOf[LocalFs.AbstractFileSystem].getName)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark

@@ -7648,7 +7648,7 @@ object ChSql {
         "Int32" -> "INT", "Int64" -> "BIGINT", "Float32" -> "FLOAT",
         "Float64" -> "DOUBLE", "String" -> "STRING", "Date" -> "DATE",
         "DateTime" -> "TIMESTAMP")
-      q = "\\bemptyArray(\\w+)\\s*\\(\\s*\\)".r.replaceAllIn(q, mm =>
+      q = replaceOutsideStrings(q, "\\bemptyArray(\\w+)\\s*\\(\\s*\\)".r)(mm =>
         sparkT.get(mm.group(1))
           .map(t => s"CAST(ARRAY() AS ARRAY<$t>)")
           .getOrElse(mm.matched))
@@ -7658,7 +7658,7 @@ object ChSql {
     // fraction -> Bernoulli percent, integer -> row bound. The
     // deterministic-by-key formulation lives in Ops.sampleByKey
     // (q_sample_by_key); the SQL clause maps to Spark's native sampler.
-    q = "(?i)\\bSAMPLE\\s+(\\d+(?:\\.\\d+)?)".r.replaceAllIn(q, m => {
+    q = replaceOutsideStrings(q, "(?i)\\bSAMPLE\\s+(\\d+(?:\\.\\d+)?)".r)(m => {
       val v = m.group(1).toDouble
       // BUCKET form keeps the emitted literals integral (the float-literal
       // pass would D-suffix a decimal percent into invalid syntax)

@@ -2695,6 +2695,18 @@ class ChSqlSpec extends AnyFunSuite {
     assert(r.getAs[Number](1).longValue == 3L)
   }
 
+  test("SAMPLE k inside a literal keeps its spelling") {
+    assert(ch("SELECT 'x SAMPLE 0.5' AS s").collect().head.getString(0) == "x SAMPLE 0.5")
+    assert(ch("SELECT 'SAMPLE 1' AS s, count() AS n FROM lineitem SAMPLE 1000")
+      .collect().head.getAs[Number](1).longValue == 1000L)
+  }
+
+  test("emptyArray<T>() inside a literal keeps its spelling") {
+    val r = ch("SELECT 'emptyArrayUInt8()' AS s, length(emptyArrayUInt8()) AS n").collect().head
+    assert(r.getString(0) == "emptyArrayUInt8()")
+    assert(r.getAs[Number](1).intValue == 0)
+  }
+
   test("quantiles(...)(...) forms are call templates: literals stay, parameters may nest") {
     assert(ch("SELECT 'quantiles(0.5)(x)' AS s").collect().head.getString(0) == "quantiles(0.5)(x)")
     val r = ch("SELECT quantilesExact((0.5), 1)(number) AS q FROM numbers(11)").collect().head
